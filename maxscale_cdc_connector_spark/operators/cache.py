@@ -40,20 +40,27 @@ _CKPT_MAX_INPUT_BYTES_DEFAULT = 8 << 30
 
 def source_bytes(sf_dir: str, *tables: str) -> int | None:
     """Total on-disk bytes of the named parquet tables under ``sf_dir``
-    (file or directory layout). ``None`` when any path is unreadable —
-    callers must treat unknown as NOT small."""
+    (file or directory layout, nested partition directories included).
+    ``None`` when any path is unreadable — callers must treat unknown as
+    NOT small."""
+
+    def _raise(exc: OSError) -> None:
+        raise exc
+
     total = 0
     for name in tables:
         path = os.path.join(sf_dir, f"{name}.parquet")
         try:
-            if os.path.isdir(path):
+            if not os.path.isdir(path):
+                total += os.path.getsize(path)
+                continue
+            for root, dirs, files in os.walk(path, onerror=_raise):
+                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
                 total += sum(
-                    os.path.getsize(os.path.join(path, f))
-                    for f in os.listdir(path)
+                    os.path.getsize(os.path.join(root, f))
+                    for f in files
                     if not f.startswith((".", "_"))
                 )
-            else:
-                total += os.path.getsize(path)
         except OSError:
             return None
     return total

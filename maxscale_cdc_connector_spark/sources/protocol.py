@@ -79,11 +79,11 @@ def is_schema_record(obj: dict[str, Any]) -> bool:
 class CDCClient:
     """One CDC session: one table's ordered change stream over one socket.
 
-    The reference couples this 1:1 with the application thread; here it
-    runs inside the streaming source on the Spark driver, which prefetches
-    records and ships them to executors as micro-batch partitions (a
-    single-socket stream is inherently serial at the source — parallelism
-    begins downstream, exactly like a one-partition Kafka topic).
+    The reference couples this 1:1 with the application thread; here
+    each streaming read task on an executor opens one for its stream's
+    micro-batch (a single-socket stream is inherently serial at the
+    source — parallelism comes from more streams, exactly like the
+    partitions of a Kafka topic).
     """
 
     def __init__(

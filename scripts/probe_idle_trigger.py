@@ -17,8 +17,7 @@ each count's floor into its constituents using the reader's env-gated
 timing hooks: driver-side planning (``latestOffset`` + ``partitions``,
 measured inside the JVM-spawned Python planner process via
 MAXSCALE_CDC_PLAN_TIMING), executor-side read tasks (per-task total and
-handshake dt via MAXSCALE_CDC_READ_TIMING — without the cProfile
-attach), and the residual (JVM batch planning, task scheduling, commit,
+handshake dt via MAXSCALE_CDC_READ_TIMING), and the residual (JVM batch planning, task scheduling, commit,
 checkpoint IO). The env vars must be exported before the JVM spawns so
 the planner/worker processes inherit them — hence set here at import
 position, before get_session.

@@ -1,4 +1,4 @@
-"""Adversarial soak of the partitioned CDC reader (VERDICT r7 item 5).
+"""Adversarial soak of the CDC stream reader (VERDICT r7 item 5).
 
 Drives the r7 ingest rewrite (prefetch thread, run-id frontiers,
 maxBatchSeconds) through the faults a production deployment actually
@@ -23,14 +23,9 @@ must hold precisely one row per pushed (stream, sequence) key, for
 every key, despite at-least-once replays across every fault.
 
 Usage: python scripts/soak_partitioned.py [--duration 300] [--streams 4]
-       python scripts/soak_partitioned.py --single [--duration 120]
 
-``--single`` (VERDICT r8 item 6) drives the SINGLE-stream reader
-(``CDCSimpleStreamReader`` — driver-side socket, its own read loop and
-restart path, sharing only protocol.py with the partitioned reader)
-through the same fault schedule: one stream, no ``streams``/
-``frontierDir`` options, recovery still ``run_supervised`` + the
-envelope-dedup SnapshotSink, same exact end-state assertion.
+``--streams 1`` soaks the one-stream case (what ``table=`` builds)
+through the same fault schedule and the same exact end-state assertion.
 
 Prints one summary line; exit 0 iff the exact end-state check passed.
 Results are recorded in SURVEY.md §21 (rounds 8–9).
@@ -809,13 +804,6 @@ def main() -> int:
         "but no chaos run had exercised (VERDICT r10 item 6)",
     )
     ap.add_argument(
-        "--single",
-        action="store_true",
-        help="soak the single-stream SimpleDataSourceStreamReader instead "
-        "of the partitioned reader (forces --streams 1, drops the "
-        "streams/frontierDir options)",
-    )
-    ap.add_argument(
         "--alter",
         action="store_true",
         help="inject one mid-chaos ALTER TABLE (a new 'extra' varchar "
@@ -846,12 +834,8 @@ def main() -> int:
     args = ap.parse_args()
     if args.child_config:
         return _child_main(args.child_config)
-    if args.single:
-        args.streams = 1
     if args.conflict:
         args.shared_gtid_space = True
-    if args.single and args.shared_gtid_space:
-        ap.error("--shared-gtid-space/--conflict needs the partitioned reader")
     if args.conflict and args.alter and not args.kill_supervisor:
         # The kill-supervisor path models the composition (r13: the
         # winner tuple carries the winning event's recorded ``extra``);
@@ -860,11 +844,8 @@ def main() -> int:
             "--conflict + --alter is composed only under --kill-supervisor; "
             "run the in-process modes separately"
         )
-    if args.kill_supervisor and (args.single or (args.shared_gtid_space and not args.conflict)):
-        ap.error(
-            "--kill-supervisor runs the partitioned reader "
-            "(composes with --alter or --conflict)"
-        )
+    if args.kill_supervisor and args.shared_gtid_space and not args.conflict:
+        ap.error("--kill-supervisor composes with --alter or --conflict")
     if args.kill_supervisor:
         return _run_kill_supervisor(args)
     rng = random.Random(args.seed)
@@ -917,20 +898,14 @@ def main() -> int:
         "pollseconds": "0.3",
         "maxbatchseconds": "2",
     }
-    if args.single:
-        # Single-stream reader: driver-side socket, selected by the
-        # absence of the ``streams`` option.
-        options["table"] = streams[0].table
-        options["port"] = str(streams[0].port)
-    else:
-        options["streams"] = json.dumps(
-            [
-                {"table": s.table, "port": s.port}
-                | ({"sourceId": f"src{s.idx}"} if args.shared_gtid_space else {})
-                for s in streams
-            ]
-        )
-        options["frontierDir"] = os.path.join(scratch, "frontier")
+    options["streams"] = json.dumps(
+        [
+            {"table": s.table, "port": s.port}
+            | ({"sourceId": f"src{s.idx}"} if args.shared_gtid_space else {})
+            for s in streams
+        ]
+    )
+    options["frontierDir"] = os.path.join(scratch, "frontier")
 
     chaos_until = time.time() + args.duration
     stop_all = threading.Event()

@@ -248,9 +248,8 @@ def test_streaming_checkpoint_resume_across_queries(spark, tmp_path) -> None:
 
 def test_partitioned_schema_change_restart(spark, tmp_path) -> None:
     """A mid-stream ALTER must survive the executor boundary: the
-    SchemaChangedError is raised inside an executor task (not on the
-    driver like the simple reader's prefetch), and its marker text must
-    still reach the StreamingQueryException so run_with_schema_restarts
+    SchemaChangedError is raised inside an executor task, and its
+    marker text must still reach the StreamingQueryException so run_with_schema_restarts
     re-infers the widened schema and resumes from the checkpoint."""
     import threading
 
@@ -733,14 +732,97 @@ def test_source_id_all_or_nothing_validation(tmp_path) -> None:
     }
     with pytest.raises(ValueError, match="non-empty"):
         CDCPartitionedStreamReader(SCHEMA_WITH_SOURCE, options3)
-    # The single-stream reader cannot honor sourceId — it must fail
-    # loudly, not silently skip the discriminator (r9 review).
-    from maxscale_cdc_connector_spark.sources.cdc_datasource import (
-        CDCSimpleStreamReader,
+
+
+def test_table_option_with_source_id_stamps_column(tmp_path) -> None:
+    """``table=`` is the one-stream case of the same reader, so a global
+    ``sourceId`` stamps ``_source_id`` there too."""
+    with FakeMaxScale(TEST_SCHEMA_RECORD, [make_event(1), make_event(2)]) as srv:
+        ds = MaxScaleCDCDataSource(
+            options={
+                "host": "127.0.0.1",
+                "port": str(srv.port),
+                "user": srv.user,
+                "password": srv.password,
+                "table": srv.table,
+                "sourceid": "A",
+                "frontierdir": str(tmp_path / "frontier"),
+                "pollseconds": "0.3",
+            }
+        )
+        schema = ds.schema()
+        assert schema == SCHEMA_WITH_SOURCE
+        reader = ds.streamReader(schema)
+        start = reader.initialOffset()
+        assert set(start["streams"]) == {f"A::{srv.table}"}
+        rows, _ = _drain(reader, start)
+        assert [(r[2], r[-1]) for r in rows] == [(1, "A"), (2, "A")]
+
+
+def test_default_frontier_dir_created_used_and_removed_on_stop(tmp_path) -> None:
+    """Without ``frontierDir`` the reader reports frontiers into a private
+    temporary dir, made on first use and removed by ``stop()``."""
+    events = [make_event(s) for s in (1, 2, 3)]
+    with FakeMaxScale(TEST_SCHEMA_RECORD, events, table="test.s1") as srv:
+        options = {
+            "host": "127.0.0.1",
+            "user": srv.user,
+            "password": srv.password,
+            "streams": json.dumps([{"table": srv.table, "port": srv.port}]),
+            "pollseconds": "0.3",
+        }
+        reader = CDCPartitionedStreamReader(SCHEMA, options)
+        # Spark also builds a reader only to ship read() to executors;
+        # construction alone must leave no dir behind.
+        assert reader._frontier_dir is None
+        start = reader.initialOffset()
+        (part,) = reader.partitions(start, reader.latestOffset())
+        fdir = os.path.dirname(part.frontier_path)
+        assert os.path.isdir(fdir)
+        assert len(_rows(reader, part)) == 3
+        assert os.listdir(fdir) == ["test.s1.frontier.json"]
+        assert reader.latestOffset()["streams"]["test.s1"] == {
+            "gtid": "0-3000-3",
+            "evn": 1,
+        }
+        reader.stop()
+        assert not os.path.exists(fdir)
+
+
+def test_default_frontier_dir_sweeps_dirs_of_dead_processes() -> None:
+    """Spark stops a stream's planner process with SIGTERM, so ``stop()``
+    may never run; a new default dir removes the default dirs whose
+    creating process is gone and keeps those of live processes."""
+    import subprocess
+    import tempfile
+
+    from maxscale_cdc_connector_spark.sources.cdc_partitioned import (
+        _default_frontier_dir,
     )
 
-    with pytest.raises(ValueError, match="partitioned reader"):
-        CDCSimpleStreamReader(SCHEMA, {"table": "test.t1", "sourceid": "A"})
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    dead = tempfile.mkdtemp(prefix=f"maxscale-cdc-frontier-{gone.pid}-")
+    live = tempfile.mkdtemp(prefix=f"maxscale-cdc-frontier-{os.getpid()}-")
+    fresh = _default_frontier_dir()
+    try:
+        assert not os.path.exists(dead)
+        assert os.path.isdir(live) and os.path.isdir(fresh)
+    finally:
+        os.rmdir(live)
+        os.rmdir(fresh)
+
+
+def test_legacy_table_checkpoint_offset_replays_from_configured_gtid(tmp_path) -> None:
+    """A checkpoint written by the old driver-side ``table=`` reader holds
+    ``{"gtid": g}``; the reader does not read it and resumes from the
+    configured ``gtid`` — a replay, still at-least-once."""
+    events = [make_event(s) for s in (1, 2, 3)]
+    with FakeMaxScale(TEST_SCHEMA_RECORD, events, table="test.s1") as srv:
+        reader = _reader(tmp_path, [srv], gtid="0-3000-2")
+        (part,) = reader.partitions({"gtid": "0-3000-3"}, reader.latestOffset())
+        assert (part.gtid, part.evn) == ("0-3000-2", -1)
+        assert [r[2] for r in _rows(reader, part)] == [2, 3]
 
 
 def test_data_source_schema_appends_source_id(tmp_path) -> None:

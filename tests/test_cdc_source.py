@@ -18,10 +18,7 @@ import time
 import pytest
 from pyspark.sql import types as T
 
-from maxscale_cdc_connector_spark.sources.cdc_datasource import (
-    CDCSimpleStreamReader,
-    MaxScaleCDCDataSource,
-)
+from maxscale_cdc_connector_spark.sources.cdc_datasource import MaxScaleCDCDataSource
 from maxscale_cdc_connector_spark.sources.protocol import (
     CDCClient,
     CDCProtocolError,
@@ -30,6 +27,7 @@ from maxscale_cdc_connector_spark.sources.protocol import (
 )
 from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
 from tests.fake_maxscale import TEST_SCHEMA_RECORD, FakeMaxScale, make_event
+from tests.test_cdc_partitioned import _drain
 
 
 def _client(server: FakeMaxScale, gtid: str | None = None, timeout: float = 0.3) -> CDCClient:
@@ -176,8 +174,9 @@ def test_schema_record_to_struct_types() -> None:
 # ---------------------------------------------------------------------------
 
 
-def _reader(srv: FakeMaxScale, **extra: str) -> CDCSimpleStreamReader:
-    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
+def _reader(srv: FakeMaxScale, schema_record: dict = TEST_SCHEMA_RECORD, **extra: str):
+    """The stream reader exactly as ``table=`` builds it: options
+    normalized by the data source, default frontierDir."""
     options = {
         "host": "127.0.0.1",
         "port": str(srv.port),
@@ -187,30 +186,41 @@ def _reader(srv: FakeMaxScale, **extra: str) -> CDCSimpleStreamReader:
         "pollseconds": "0.3",
         **extra,
     }
-    return CDCSimpleStreamReader(schema, options)
+    return MaxScaleCDCDataSource(options).streamReader(
+        schema_record_to_struct(schema_record)
+    )
 
 
 def test_reader_batch_and_offset_advance() -> None:
     events = [make_event(s) for s in (1, 2, 3)]
     with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
         reader = _reader(srv)
-        assert reader.initialOffset() == {"gtid": ""}
-        rows, nxt = reader.read(reader.initialOffset())
-        rows = list(rows)
+        start = reader.initialOffset()
+        assert start["streams"] == {srv.table: {"gtid": "", "evn": -1}}
+        rows, _ = _drain(reader, start)
         assert len(rows) == 3
-        assert nxt == {"gtid": "0-3000-3"}
-        # Typed conversion happened: sequence long, balance Decimal.
+        # The next trigger folds the delivered position into the offset.
+        assert reader.latestOffset()["streams"][srv.table] == {
+            "gtid": "0-3000-3",
+            "evn": 1,
+        }
+        # Typed conversion happened: sequence long, balance DECIMAL(10,0)
+        # rounded HALF_UP (the JVM's Decimal.changePrecision rule).
         assert rows[0][2] == 1 and isinstance(rows[0][2], int)
-        assert rows[0][8] == decimal.Decimal("1.50")
+        assert rows[0][8] == decimal.Decimal("2")
         reader.stop()
 
 
 def test_reader_empty_batch_on_idle() -> None:
     with FakeMaxScale(TEST_SCHEMA_RECORD, []) as srv:
         reader = _reader(srv)
-        rows, nxt = reader.read({"gtid": ""})
-        assert list(rows) == []
-        assert nxt == {"gtid": ""}  # offset does not advance on idle
+        start = reader.initialOffset()
+        end = reader.latestOffset()
+        parts = reader.partitions(start, end)
+        assert len(parts) == 1  # an idle stream still re-dials once
+        assert [b.num_rows for b in reader.read(parts[0])] == []
+        # The offset does not advance on idle.
+        assert reader.latestOffset()["streams"] == start["streams"]
         reader.stop()
 
 
@@ -220,17 +230,7 @@ def test_reader_dense_row_enforced() -> None:
     with FakeMaxScale(TEST_SCHEMA_RECORD, [broken]) as srv:
         reader = _reader(srv)
         with pytest.raises(CDCProtocolError, match="No value for key"):
-            rows, _ = reader.read({"gtid": ""})
-            list(rows)
-        reader.stop()
-
-
-def test_reader_replay_between_offsets() -> None:
-    events = [make_event(s) for s in (1, 2, 3, 4, 5)]
-    with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
-        reader = _reader(srv)
-        replayed = list(reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-4"}))
-        assert [r[2] for r in replayed] == [2, 3, 4]
+            _drain(reader, reader.initialOffset())
         reader.stop()
 
 
@@ -239,8 +239,8 @@ def test_reader_null_becomes_none() -> None:
     ev["name"] = None  # JSON null → SQL NULL, not "" (fix of :106-107)
     with FakeMaxScale(TEST_SCHEMA_RECORD, [ev]) as srv:
         reader = _reader(srv)
-        rows, _ = reader.read({"gtid": ""})
-        assert list(rows)[0][7] is None
+        rows, _ = _drain(reader, reader.initialOffset())
+        assert rows[0][7] is None
         reader.stop()
 
 
@@ -351,6 +351,26 @@ def test_framing_disconnect_raises() -> None:
         c.read_record()
 
 
+def _committed_gtid(ckpt: str, table: str) -> str | None:
+    """The stream's GTID cursor in the offsets/ entry of the newest
+    committed batch of a checkpoint, or None before the first commit."""
+    import json as _json
+    import os as _os
+
+    commits = _os.path.join(ckpt, "commits")
+    if not _os.path.isdir(commits):
+        return None
+    done = [int(f) for f in _os.listdir(commits) if f.isdigit()]
+    if not done:
+        return None
+    try:
+        with open(_os.path.join(ckpt, "offsets", str(max(done)))) as fh:
+            offset = _json.loads(fh.read().splitlines()[-1])
+    except (OSError, ValueError, IndexError):
+        return None
+    return offset.get("streams", {}).get(table, {}).get("gtid")
+
+
 def test_streaming_checkpoint_resume(spark, tmp_path) -> None:
     """Stop a CDC streaming query, push more events, restart with the
     same checkpoint: the stream resumes from the checkpointed GTID and
@@ -390,24 +410,14 @@ def test_streaming_checkpoint_resume(spark, tmp_path) -> None:
             deadline = time.time() + 60
             while time.time() < deadline and len(set(run_a)) < 10:
                 time.sleep(0.3)
-            # foreachBatch delivering is NOT the offset commit: stop()
-            # right after delivery can interrupt the commit and leave an
-            # empty checkpoint, making the restart legitimately replay
+            # foreachBatch delivering is NOT the offset commit: a
+            # stream's position reaches the checkpoint when the NEXT
+            # trigger folds the frontier into its offsets/ entry, and
+            # stop() before that makes the restart legitimately replay
             # from scratch (at-least-once) — a test race, not a source
-            # bug (r13: flaked once under a loaded host). The delivering
-            # batch's offsets file is written BEFORE its foreachBatch
-            # runs, so once commits/ catches up to the offsets/ count
-            # observed after delivery, that batch has committed.
-            import os as _os
-
-            def _entries(sub: str) -> int:
-                p = str(tmp_path / "ckpt" / sub)
-                if not _os.path.isdir(p):
-                    return 0
-                return sum(1 for f in _os.listdir(p) if not f.startswith("."))
-
-            n_planned = _entries("offsets")
-            while time.time() < deadline and _entries("commits") < n_planned:
+            # bug. Wait until the newest committed batch's offsets/
+            # entry holds the cursor of the last delivered event.
+            while time.time() < deadline and _committed_gtid(ckpt, srv.table) != "0-3000-10":
                 time.sleep(0.2)
         finally:
             q1.stop()
@@ -1075,11 +1085,11 @@ def test_run_supervised_start_probe_failure_backs_off(spark, tmp_path) -> None:
     assert snap == {s: f"a{s}" for s in range(1, 11)}
 
 
-def test_simple_reader_steady_trickle_commits_batches(spark, tmp_path) -> None:
-    """Same steady-trickle liveness guarantee for the DEFAULT
-    (driver-prefetch) reader: events arriving faster than pollSeconds
-    never hit the idle timeout, so without the maxBatchSeconds bound the
-    first micro-batch would collect toward the 100k cap for hours while
+def test_table_option_steady_trickle_commits_batches(spark, tmp_path) -> None:
+    """Same steady-trickle liveness guarantee through the ``table=``
+    shorthand: events arriving faster than pollSeconds never hit the
+    idle timeout, so without the maxBatchSeconds bound the first
+    micro-batch would collect toward the 100k cap for hours while
     nothing committed."""
     import json
     import threading
@@ -1156,14 +1166,14 @@ def test_worker_crash_classified_as_transient() -> None:
     assert not is_connection_failure(RuntimeError("AnalysisException: col"))
 
 
-def test_simple_reader_detects_alter_at_reconnect(tmp_path) -> None:
+def test_reader_detects_alter_at_reconnect(tmp_path) -> None:
     """r9 review: the avrorouter announces the CURRENT schema as the
-    leading record on connect, so an ALTER landing while the simple
-    reader was DISCONNECTED can only be seen by comparing that leading
-    record to the query's fixed schema — the mid-stream detection never
-    fires for it. Without the check, post-ALTER columns were silently
-    dropped forever (ADD) or the stream died on the dense-row contract
-    (DROP)."""
+    leading record on connect, so an ALTER landing while the reader was
+    DISCONNECTED (every micro-batch re-dials) can only be seen by
+    comparing that leading record to the query's fixed schema — the
+    mid-stream detection never fires for it. Without the check,
+    post-ALTER columns were silently dropped forever (ADD) or the stream
+    died on the dense-row contract (DROP)."""
     new_schema = dict(TEST_SCHEMA_RECORD)
     new_schema["fields"] = TEST_SCHEMA_RECORD["fields"] + [
         {"name": "extra", "type": "string", "real_type": "varchar", "length": 16}
@@ -1171,33 +1181,14 @@ def test_simple_reader_detects_alter_at_reconnect(tmp_path) -> None:
     ev = make_event(1, name="a1")
     ev["extra"] = "x1"
     with FakeMaxScale(new_schema, [ev], table="test.t") as srv:
-        reader = CDCSimpleStreamReader(
-            schema_record_to_struct(TEST_SCHEMA_RECORD),  # pre-ALTER pin
-            {
-                "host": "127.0.0.1",
-                "port": str(srv.port),
-                "user": srv.user,
-                "password": srv.password,
-                "table": "test.t",
-                "pollseconds": "0.3",
-            },
-        )
+        reader = _reader(srv)  # pre-ALTER pin
         with pytest.raises(SchemaChangedError):
-            reader.read({"gtid": ""})
+            _drain(reader, reader.initialOffset())
+        reader.stop()
         # A reader whose schema MATCHES the live one connects fine.
-        reader2 = CDCSimpleStreamReader(
-            schema_record_to_struct(new_schema),
-            {
-                "host": "127.0.0.1",
-                "port": str(srv.port),
-                "user": srv.user,
-                "password": srv.password,
-                "table": "test.t",
-                "pollseconds": "0.3",
-            },
-        )
-        rows, off = reader2.read({"gtid": ""})
-        assert len(list(rows)) == 1
+        reader2 = _reader(srv, new_schema)
+        rows, _ = _drain(reader2, reader2.initialOffset())
+        assert len(rows) == 1
         reader2.stop()
 
 

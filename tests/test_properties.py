@@ -313,6 +313,29 @@ def test_checkpoint_if_small_gates_on_source_bytes(spark, sf_dir) -> None:
     assert small.count() == df.count()
 
 
+def test_source_bytes_walks_nested_partition_dirs(tmp_path) -> None:
+    """A partitioned parquet layout (``t.parquet/k=v/part-*.parquet``)
+    measures its files, not its directory inodes, so a corpus-scale
+    nested table cannot read as small and pass the checkpoint gate
+    (ADVICE r17). A flat layout measures its visible files as before."""
+    from maxscale_cdc_connector_spark.operators.cache import source_bytes
+
+    root = tmp_path / "t.parquet"
+    for part in ("k=1", "k=2/sub=a"):
+        (root / part).mkdir(parents=True)
+        (root / part / "part-0.parquet").write_bytes(b"x" * 100_000)
+    (root / "_SUCCESS").write_bytes(b"")
+    (root / "_temporary").mkdir()
+    (root / "_temporary" / "part-9.parquet").write_bytes(b"x" * 500_000)
+    assert source_bytes(str(tmp_path), "t") == 200_000
+
+    flat = tmp_path / "f.parquet"
+    flat.mkdir()
+    (flat / "part-0.parquet").write_bytes(b"x" * 123)
+    (flat / ".part-0.parquet.crc").write_bytes(b"x" * 9)
+    assert source_bytes(str(tmp_path), "f") == 123
+
+
 def test_eager_barrier_gates_and_releases_both_kinds(spark, sf_dir) -> None:
     """Below the limit eager_barrier is a checkpoint (LogicalRDD);
     above it an eagerly-populated persist (InMemoryRelation with loaded
