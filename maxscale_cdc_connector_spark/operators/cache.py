@@ -1,36 +1,42 @@
-"""Bounded cache scopes for multi-branch operators.
+"""Materialization barriers for multi-branch operators, scoped to one call.
 
-``persist()`` is the right materialization barrier when one DataFrame
-feeds several branches of a single plan (MinHash shingle arrays feed the
-candidate join AND both verification sides), but a long-lived session
-running many queries — exactly what the driver's 93-query sweep and
-``bench.py`` do — must not accumulate cached blocks across calls.
+A frame that feeds several branches of one plan (MinHash shingle arrays
+feed the candidate join AND both verification sides) needs a barrier,
+but a long-lived session running many queries — the full query sweep and
+``bench.py`` — must not accumulate barrier blocks across calls. So every
+operator builds inside one scope::
 
-The pattern here: eagerly materialize the operator's (small) RESULT with
-``localCheckpoint(eager=True)``, then ``unpersist`` the (large)
-intermediates immediately. The barrier still serves the one execution
-that needs it; cache lifetime shrinks from "session" to "operator call".
-The checkpointed result blocks are O(|result|) (e.g. duplicate pairs,
-not the corpus) and are released by Spark's ContextCleaner when the
+    with barriers() as hold:
+        arrs = hold(eager_barrier(df, input_bytes(src)))
+        ...
+        return out.localCheckpoint(eager=True)
+
+``hold(df)`` registers ``df`` and returns it. The ``return`` expression
+materializes the (small) RESULT before the block exits; on exit —
+normal or by exception — :func:`release` frees every held frame, so
+cache lifetime is "operator call", never "session". The result's blocks
+are its own and are reclaimed by Spark's ContextCleaner once the
 returned DataFrame is garbage-collected.
 
-Caveats of ``localCheckpoint``: it truncates lineage, so the returned
-DataFrame is unrecoverable if an executor holding its blocks is lost —
+Caveats of ``localCheckpoint``: it truncates lineage, so a checkpointed
+frame is unrecoverable if an executor holding its blocks is lost —
 acceptable on a static local/standalone deployment, but deployments
-with dynamic allocation (executors decommission routinely) should use
-reliable ``checkpoint()`` to a cluster-visible path instead. It is also
-eager: calling an operator that finalizes through here triggers a Spark
-job at call time rather than composing lazily into the caller's plan.
+with dynamic allocation should use reliable ``checkpoint()`` to a
+cluster-visible path instead. It is also eager: an operator that
+returns through here triggers a Spark job at call time rather than
+composing lazily into the caller's plan.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
-# Ceiling for checkpoint_if_small, overridable per deployment. 8 GiB
+# Ceiling for the checkpoint gate, overridable per deployment. 8 GiB
 # of SOURCE parquet easily fits one node's block storage after
 # aggregation; a 100 TB table blows past it and takes the recompute
 # shape instead.
@@ -38,73 +44,54 @@ CKPT_MAX_INPUT_BYTES_ENV = "SPARK_GRAFT_CKPT_MAX_INPUT_BYTES"
 _CKPT_MAX_INPUT_BYTES_DEFAULT = 8 << 30
 
 
-def source_bytes(sf_dir: str, *tables: str) -> int | None:
-    """Total on-disk bytes of the named parquet tables under ``sf_dir``
-    (file or directory layout, nested partition directories included).
-    ``None`` when any path is unreadable — callers must treat unknown as
-    NOT small."""
-
-    def _raise(exc: OSError) -> None:
-        raise exc
-
-    total = 0
-    for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        try:
-            if not os.path.isdir(path):
-                total += os.path.getsize(path)
-                continue
-            for root, dirs, files in os.walk(path, onerror=_raise):
-                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-                total += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith((".", "_"))
-                )
-        except OSError:
-            return None
-    return total
-
-
 def input_bytes(df: DataFrame) -> int | None:
     """Total on-disk bytes of ``df``'s file-backed inputs
-    (``inputFiles``); ``None`` for non-file-backed or unreadable inputs
-    — callers must treat unknown as NOT small."""
+    (``inputFiles``: data files only, Spark skips ``_``/``.`` entries
+    and walks partition directories). Each URI is parsed and
+    percent-decoded; a non-``file`` scheme, a frame with no file inputs
+    or an unreadable file gives ``None`` — callers must treat unknown
+    as NOT small."""
     try:
         files = df.inputFiles()
         if not files:
             return None
         total = 0
         for f in files:
-            path = f[7:] if f.startswith("file:///") else f
-            path = path if path.startswith("/") else "/" + path
-            total += os.path.getsize(path)
+            uri = urlparse(f)
+            if uri.scheme != "file":
+                return None
+            total += os.path.getsize(unquote(uri.path))
         return total
     except Exception:
         return None
+
+
+def _is_small(src_bytes: int | None) -> bool:
+    """The checkpoint gate: source size PROVEN at or under the limit."""
+    limit = int(
+        os.environ.get(CKPT_MAX_INPUT_BYTES_ENV, _CKPT_MAX_INPUT_BYTES_DEFAULT)
+    )
+    return src_bytes is not None and src_bytes <= limit
 
 
 def eager_barrier(df: DataFrame, src_bytes: int | None) -> DataFrame:
     """Materialization barrier for a multi-branch intermediate, picking
     the cheaper mechanism by PROVEN source size (r17):
 
-    - source provably small (<= the checkpoint_if_small limit): eager
-      ``localCheckpoint`` — measured ~0.25 s cheaper per call than a
-      persist at sf0.1 (no columnar cache encode, no CacheManager
-      entry), and the blocks are bounded by the small input;
+    - source provably small: eager ``localCheckpoint`` — measured
+      ~0.25 s cheaper per call than a persist at sf0.1 (no columnar
+      cache encode, no CacheManager entry), and the blocks are bounded
+      by the small input;
     - otherwise: :func:`eager_persist` — recomputable lineage and
       MEMORY_AND_DISK spill, the scale-safe barrier.
 
-    Either result is released correctly by :func:`finalize`/_release.
-    Unlike :func:`checkpoint_if_small` the fallback is still a BARRIER:
-    use this where multiple branches of one action read the frame (the
-    AQE population race — see eager_persist), and checkpoint_if_small
-    where a lazy recompute is acceptable.
+    :func:`release` frees either kind. Unlike :func:`checkpoint_if_small`
+    the fallback is still a BARRIER: use this where multiple branches of
+    one action read the frame (the AQE population race — see
+    eager_persist), and checkpoint_if_small where a lazy recompute is
+    acceptable.
     """
-    limit = int(
-        os.environ.get(CKPT_MAX_INPUT_BYTES_ENV, _CKPT_MAX_INPUT_BYTES_DEFAULT)
-    )
-    if src_bytes is not None and src_bytes <= limit:
+    if _is_small(src_bytes):
         return df.localCheckpoint(eager=True)
     return eager_persist(df)
 
@@ -120,27 +107,25 @@ def checkpoint_if_small(df: DataFrame, src_bytes: int | None) -> DataFrame:
     costs one extra scan at exactly the scale where scans are the cheap,
     fault-tolerant thing and pinned storage is the dangerous one.
     """
-    limit = int(
-        os.environ.get(CKPT_MAX_INPUT_BYTES_ENV, _CKPT_MAX_INPUT_BYTES_DEFAULT)
-    )
-    if src_bytes is not None and src_bytes <= limit:
+    if _is_small(src_bytes):
         return df.localCheckpoint(eager=True)
     return df
 
 
-def _release(caches: Iterable[DataFrame]) -> None:
-    """Best-effort release of every cache: one failing ``unpersist``
+def release(*frames: DataFrame) -> None:
+    """Best-effort release of every frame: one failing ``unpersist``
     (a dead executor's block-manager RPC, a torn-down context) must not
-    leak the remaining caches — each release is guarded independently.
+    leak the remaining frames — each release is guarded independently.
     Non-blocking: the caller never needs the blocks gone synchronously,
-    only deregistered.
+    only deregistered. Call it strictly after the last action that reads
+    a checkpointed frame: its blocks are the ONLY copy.
 
-    Handles BOTH barrier kinds (r17): ``unpersist`` deregisters a
-    persisted frame's CacheManager entry, and the second guarded call
-    frees a localCheckpointed frame's block storage (its analyzed plan
-    is a LogicalRDD whose RDD holds the blocks); each is a no-op for
-    the other kind."""
-    for c in caches:
+    Handles BOTH barrier kinds: ``unpersist`` deregisters a persisted
+    frame's CacheManager entry, and the second guarded call frees a
+    localCheckpointed frame's block storage (its analyzed plan is a
+    LogicalRDD whose RDD holds the blocks); each is a no-op for the
+    other kind."""
+    for c in frames:
         try:
             c.unpersist(blocking=False)
         except Exception:
@@ -151,23 +136,22 @@ def _release(caches: Iterable[DataFrame]) -> None:
             pass
 
 
-def finalize(result: DataFrame, caches: Iterable[DataFrame]) -> DataFrame:
-    """Materialize ``result`` now, then release the persisted inputs.
+@contextmanager
+def barriers() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Scope whose ``hold(df) -> df`` registers a frame for
+    :func:`release` when the block exits, normally or by exception.
+    Return the operator's result as ``out.localCheckpoint(eager=True)``
+    from inside the block so it is materialized before the release."""
+    held: list[DataFrame] = []
 
-    The inputs are released through the SAME guarded helper on both the
-    success and failure paths (the operator's contract is that
-    ``caches`` die here either way): a failing ``unpersist`` after a
-    successful materialization must neither leak the remaining caches
-    nor discard the already-computed result — the result's blocks are
-    its own localCheckpoint storage, independent of the input caches.
-    """
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df)
+        return df
+
     try:
-        out = result.localCheckpoint(eager=True)
-    except Exception:
-        _release(caches)
-        raise
-    _release(caches)
-    return out
+        yield hold
+    finally:
+        release(*held)
 
 
 def eager_persist(df: DataFrame) -> DataFrame:

@@ -25,6 +25,7 @@ reproducible across runs and partitionings.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -32,9 +33,9 @@ from pyspark.sql import functions as F
 
 from maxscale_cdc_connector_spark.functions.text_fns import normalize, word_shingles, words
 from maxscale_cdc_connector_spark.operators.cache import (
+    barriers,
     eager_barrier,
     eager_persist,
-    finalize,
     input_bytes,
 )
 from maxscale_cdc_connector_spark.session import ensure_scan_parallelism
@@ -114,10 +115,9 @@ def jaccard_pairs(
     join group count and |A|, |B| from per-doc set sizes.
 
     The shingle frame feeds THREE branches (sizes + both join sides), so
-    it is persisted for the duration of the call and released through
-    :func:`cache.finalize` once the (small) pair result is materialized —
-    without the barrier the scan→explode→distinct pipeline re-executes
-    per branch.
+    it is persisted inside a :func:`cache.barriers` scope and released
+    once the (small) pair result is materialized — without the barrier
+    the scan→explode→distinct pipeline re-executes per branch.
     """
     # Persist an internal alias, not the caller's object: persist/
     # unpersist key on the plan, and unpersisting the caller's own frame
@@ -125,27 +125,28 @@ def jaccard_pairs(
     # eager_persist, not bare persist: three branches of one action read
     # this — a lazy cache is a concurrent-stage population race under
     # AQE (see cache.eager_persist).
-    shingles = eager_persist(shingles.select("*"))
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    a = shingles.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = shingles.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"))
-    jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
-    pairs = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-    return finalize(pairs, [shingles])
+    with barriers() as hold:
+        shingles = hold(eager_persist(shingles.select("*")))
+        sizes = shingles.groupBy(id_col).agg(F.count("*").alias("set_size"))
+        a = shingles.select(F.col(id_col).alias("doc_a"), "shingle")
+        b = shingles.select(F.col(id_col).alias("doc_b"), "shingle")
+        common = (
+            a.join(b, "shingle")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("n_common"))
+        )
+        sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"))
+        sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"))
+        jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
+        pairs = (
+            common.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= min_jaccard)
+            .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
+        )
+        return pairs.localCheckpoint(eager=True)
 
 
 def jaccard_pairs_prefix(
@@ -178,8 +179,8 @@ def jaccard_pairs_prefix(
     direction that loses pairs (a too-long prefix only costs work).
 
     The arrays frame feeds three branches (prefix index + both
-    verification sides), so it is persisted and released via
-    :func:`cache.finalize` — same contract as :func:`jaccard_pairs`.
+    verification sides), so it is held by a :func:`cache.barriers`
+    scope — same contract as :func:`jaccard_pairs`.
     """
     # eager_barrier, not bare persist: the prefix index and both
     # verification sides fan out of this frame inside ONE action, and a
@@ -195,64 +196,65 @@ def jaccard_pairs_prefix(
     # lambda evaluates INTERPRETED per comparison (~n log n lambda evals
     # per doc); sort_array is a plain collection expression inside
     # whole-stage codegen.
-    arrs = eager_barrier(
-        shingle_arrays(_ensure_parallelism(docs), text_col, id_col, k)
-        .withColumn("shingles", F.sort_array("shingles")),
-        input_bytes(docs),
-    )
-    t_dec = F.lit(min_jaccard).cast("decimal(10,6)")
-    plen = (F.col("set_size") - F.ceil(t_dec * F.col("set_size")) + 1).cast("int")
-    prefixes = arrs.select(
-        F.col(id_col),
-        F.col("set_size"),
-        F.explode(F.slice(F.col("shingles"), F.lit(1), plen)).alias("shingle"),
-    )
-    a = prefixes.select(
-        F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"), "shingle"
-    )
-    b = prefixes.select(
-        F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"), "shingle"
-    )
-    # Length filter (AllPairs lemma 2, lossless): J(A,B) ≥ t forces
-    # |B| ≥ ceil(t·|A|) — if |B| < t·|A| then J ≤ |B|/|A| < t — so
-    # size-mismatched candidates die AT the prefix join, before the
-    # distinct and the array_intersect verification ever see them.
-    # Same DECIMAL ceil as the prefix length: double 0.8·5 =
-    # 4.0000000000000004 would reject a true |A|=5,|B|=4 pair (J can
-    # be exactly 0.8 there), the one direction that loses pairs.
-    cand = (
-        a.join(b, "shingle")
-        .where(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.col("size_b") >= F.ceil(t_dec * F.col("size_a")))
-            & (F.col("size_a") >= F.ceil(t_dec * F.col("size_b")))
+    with barriers() as hold:
+        arrs = hold(eager_barrier(
+            shingle_arrays(_ensure_parallelism(docs), text_col, id_col, k)
+            .withColumn("shingles", F.sort_array("shingles")),
+            input_bytes(docs),
+        ))
+        t_dec = F.lit(min_jaccard).cast("decimal(10,6)")
+        plen = (F.col("set_size") - F.ceil(t_dec * F.col("set_size")) + 1).cast("int")
+        prefixes = arrs.select(
+            F.col(id_col),
+            F.col("set_size"),
+            F.explode(F.slice(F.col("shingles"), F.lit(1), plen)).alias("shingle"),
         )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    va = arrs.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("set_size").alias("size_a"),
-    )
-    vb = arrs.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("set_size").alias("size_b"),
-    )
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    pairs = (
-        cand.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
+        a = prefixes.select(
+            F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"), "shingle"
         )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-    return finalize(pairs, [arrs])
+        b = prefixes.select(
+            F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"), "shingle"
+        )
+        # Length filter (AllPairs lemma 2, lossless): J(A,B) ≥ t forces
+        # |B| ≥ ceil(t·|A|) — if |B| < t·|A| then J ≤ |B|/|A| < t — so
+        # size-mismatched candidates die AT the prefix join, before the
+        # distinct and the array_intersect verification ever see them.
+        # Same DECIMAL ceil as the prefix length: double 0.8·5 =
+        # 4.0000000000000004 would reject a true |A|=5,|B|=4 pair (J can
+        # be exactly 0.8 there), the one direction that loses pairs.
+        cand = (
+            a.join(b, "shingle")
+            .where(
+                (F.col("doc_a") < F.col("doc_b"))
+                & (F.col("size_b") >= F.ceil(t_dec * F.col("size_a")))
+                & (F.col("size_a") >= F.ceil(t_dec * F.col("size_b")))
+            )
+            .select("doc_a", "doc_b")
+            .distinct()
+        )
+        va = arrs.select(
+            F.col(id_col).alias("doc_a"),
+            F.col("shingles").alias("sh_a"),
+            F.col("set_size").alias("size_a"),
+        )
+        vb = arrs.select(
+            F.col(id_col).alias("doc_b"),
+            F.col("shingles").alias("sh_b"),
+            F.col("set_size").alias("size_b"),
+        )
+        n_common = F.size(F.array_intersect("sh_a", "sh_b"))
+        pairs = (
+            cand.join(va, "doc_a")
+            .join(vb, "doc_b")
+            .withColumn("n_common", n_common)
+            .withColumn(
+                "jaccard",
+                F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
+            )
+            .filter(F.col("jaccard") >= min_jaccard)
+            .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
+        )
+        return pairs.localCheckpoint(eager=True)
 
 
 def _seeded_hash(seed: int, col: str | Column) -> Column:
@@ -300,8 +302,8 @@ def minhash_signatures(doc_shingles: DataFrame, id_col: str = "doc_id") -> DataF
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
+    hold: Callable[[DataFrame], DataFrame],
     id_col: str = "doc_id",
-    caches: list[DataFrame] | None = None,
     src_bytes: int | None = None,
 ) -> DataFrame:
     """Band the signature array and equi-join on (band, band_hash).
@@ -310,9 +312,9 @@ def lsh_candidate_pairs(
     as one array value instead of N separate columns, which keeps the
     banding a handful of expressions over the shared ``sig`` array.
 
-    When ``caches`` is given, the persisted banded table is appended to
-    it and the caller releases it after its own terminal action;
-    standalone calls release it here via :func:`cache.finalize`.
+    The banded barrier is registered with the caller's
+    :func:`cache.barriers` scope through ``hold``, which releases it
+    after the caller's own terminal action.
     """
     rows_per_band = N_MINHASHES // LSH_BANDS
     bands = F.array(
@@ -332,11 +334,11 @@ def lsh_candidate_pairs(
     # checkpoint-or-persist (cache.eager_barrier); either way the one
     # materialization pass also populates the caller's upstream sh/sig
     # caches (it reads through both).
-    banded = eager_barrier(
+    banded = hold(eager_barrier(
         signatures.select(F.col(id_col), F.explode(bands).alias("b"))
         .select(id_col, F.col("b.band").alias("band"), F.col("b.h").alias("h")),
         src_bytes,
-    )
+    ))
     a = banded.select(F.col(id_col).alias("doc_a"), "band", "h")
     b = banded.select(F.col(id_col).alias("doc_b"), "band", "h")
     cand = (
@@ -345,10 +347,7 @@ def lsh_candidate_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    if caches is not None:
-        caches.append(banded)
-        return cand
-    return finalize(cand, [banded])
+    return cand
 
 
 def minhash_dedup_pairs(
@@ -367,54 +366,57 @@ def minhash_dedup_pairs(
     ``minhash_signatures``) and verification is ``array_intersect`` on
     the two per-doc arrays — no re-explosion of the corpus.
     """
-    # Persist the per-doc shingle arrays: the candidate branch and both
-    # verification branches reuse them, and Spark would otherwise re-run
-    # scan → shingle → hash for every branch. This is the same pattern
-    # Spark ML's MinHashLSH uses (cache the transformed dataset before
-    # approxSimilarityJoin). Size is O(corpus tokens) — spillable
-    # MEMORY_AND_DISK by default.
-    sh = shingle_arrays(_ensure_parallelism(docs), text_col, id_col, k).persist()
-    # Persisting the signatures inserts a materialization barrier between
-    # the signature expression and the banding projection — without it,
-    # projection collapse substitutes the full 32-hash expression into
-    # every band slice (8× the hashing work). Even an UNPOPULATED cache
-    # is that barrier: cache substitution replaces the subtree at plan
-    # time, so projection collapse cannot cross it. And unlike the
-    # banded table below, sig has exactly ONE reader (the banding
-    # projection), so the AQE population race eager_persist exists for
-    # cannot occur here — a lazy persist suffices, and the single
-    # eager_persist(banded) count inside lsh_candidate_pairs then
-    # populates sh, sig, AND banded in ONE pass (it reads through both),
-    # instead of paying a separate materialization job per cache
-    # (r12→r13 A/B: separate eager sig cost ~16% of the query; VERDICT
-    # r12 item 2). The multi-reader caches (sh: two verification
-    # branches; banded: two self-join sides) are warm before any
-    # fan-out action runs.
-    sig = minhash_signatures(sh, id_col).persist()
-    caches = [sh, sig]
-    cand = lsh_candidate_pairs(sig, id_col, caches, src_bytes=input_bytes(docs))
-    a = sh.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("set_size").alias("size_a"),
-    )
-    b = sh.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("set_size").alias("size_b"),
-    )
-    n_common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    jac = n_common / (F.col("size_a") + F.col("size_b") - n_common)
-    verified = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-    # Materialize the (small) verified-pair result while the barriers are
-    # hot, then release them — bounded cache lifetime in a long session.
-    return finalize(verified, caches)
+    with barriers() as hold:
+        # Persist the per-doc shingle arrays: the candidate branch and both
+        # verification branches reuse them, and Spark would otherwise re-run
+        # scan → shingle → hash for every branch. This is the same pattern
+        # Spark ML's MinHashLSH uses (cache the transformed dataset before
+        # approxSimilarityJoin). Size is O(corpus tokens) — spillable
+        # MEMORY_AND_DISK by default.
+        sh = hold(
+            shingle_arrays(_ensure_parallelism(docs), text_col, id_col, k).persist()
+        )
+        # Persisting the signatures inserts a materialization barrier between
+        # the signature expression and the banding projection — without it,
+        # projection collapse substitutes the full 32-hash expression into
+        # every band slice (8× the hashing work). Even an UNPOPULATED cache
+        # is that barrier: cache substitution replaces the subtree at plan
+        # time, so projection collapse cannot cross it. And unlike the
+        # banded table below, sig has exactly ONE reader (the banding
+        # projection), so the AQE population race eager_persist exists for
+        # cannot occur here — a lazy persist suffices, and the single
+        # eager_persist(banded) count inside lsh_candidate_pairs then
+        # populates sh, sig, AND banded in ONE pass (it reads through both),
+        # instead of paying a separate materialization job per cache
+        # (r12→r13 A/B: separate eager sig cost ~16% of the query; VERDICT
+        # r12 item 2). The multi-reader caches (sh: two verification
+        # branches; banded: two self-join sides) are warm before any
+        # fan-out action runs.
+        sig = hold(minhash_signatures(sh, id_col).persist())
+        cand = lsh_candidate_pairs(sig, hold, id_col, src_bytes=input_bytes(docs))
+        a = sh.select(
+            F.col(id_col).alias("doc_a"),
+            F.col("shingles").alias("sh_a"),
+            F.col("set_size").alias("size_a"),
+        )
+        b = sh.select(
+            F.col(id_col).alias("doc_b"),
+            F.col("shingles").alias("sh_b"),
+            F.col("set_size").alias("size_b"),
+        )
+        n_common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        jac = n_common / (F.col("size_a") + F.col("size_b") - n_common)
+        verified = (
+            cand.join(a, "doc_a")
+            .join(b, "doc_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= min_jaccard)
+            .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
+        )
+        # Materialize the (small) verified-pair result while the barriers are
+        # hot; the scope then releases them — bounded cache lifetime in a
+        # long session.
+        return verified.localCheckpoint(eager=True)
 
 
 def simhash_fingerprints(

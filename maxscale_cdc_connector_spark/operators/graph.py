@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from maxscale_cdc_connector_spark.operators.cache import release
+
 __all__ = ["connected_components"]
 
 # Convergence telemetry: rounds taken by the most recent
@@ -58,8 +60,8 @@ def _plan_is_materialized(df: DataFrame) -> bool | None:
     lost partition — but it is undetectable through this API and, under
     the default MEMORY_AND_DISK level, requires executor loss rather
     than memory pressure; deployments where that matters should
-    ``localCheckpoint``/``checkpoint`` instead of persist (the
-    ``finalize()`` path every in-repo call site uses).
+    ``localCheckpoint``/``checkpoint`` instead of persist (the eager
+    checkpoint every in-repo pair operator returns).
 
     Walks the optimized plan's leaves via the py4j bridge (the optimized
     plan is the one with cache substitution applied). Returns ``None``
@@ -95,19 +97,18 @@ def _plan_is_materialized(df: DataFrame) -> bool | None:
         return None
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind a localCheckpointed frame.
-
-    ``localCheckpoint`` truncates lineage, so its blocks are the ONLY
-    copy — call this strictly after the last action that reads ``df``.
-    Reaches through LogicalRDD (private API); degrades to a no-op if the
-    plan shape ever changes, in which case the ContextCleaner reclaims
-    the blocks on JVM GC instead (later, but safely).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+def _require_materialized(df: DataFrame, flag: str) -> None:
+    """Raise ``ValueError`` when ``flag=True`` skipped an operator's own
+    up-front checkpoint but ``df``'s plan is detectably lazy (see
+    :func:`_plan_is_materialized`; skipped when the plan API is
+    unreachable)."""
+    if _plan_is_materialized(df) is False:
+        raise ValueError(
+            f"{flag}=True but the edges plan does not bottom out in a "
+            "LogicalRDD or a POPULATED InMemoryRelation — pass a "
+            "localCheckpoint/eager_persist result (a lazy unpopulated "
+            "persist() does not count), or drop the flag"
+        )
 
 
 def connected_components(
@@ -140,8 +141,8 @@ def connected_components(
 
     ``input_materialized=True`` skips that up-front checkpoint (and its
     block release — the caller owns its own blocks): pass it ONLY when
-    ``edges`` is already materialized (a ``cache.finalize`` result or an
-    eager checkpoint, optionally behind a pure projection), where the
+    ``edges`` is already materialized (an eager checkpoint, such as the
+    pair operators return, optionally behind a pure projection), where the
     extra copy is a wasted job. Passing it with a lazy plan is not just
     a recompute-cost bug — it is a CORRECTNESS hazard: the algorithms
     read ``edges`` from multiple branches (node extraction,
@@ -180,13 +181,8 @@ def connected_components(
     if algorithm not in ("two_phase", "label_prop"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
     pruned = edges.select(F.col(src), F.col(dst))
-    if input_materialized and _plan_is_materialized(pruned) is False:
-        raise ValueError(
-            "input_materialized=True but the edges plan does not bottom "
-            "out in a LogicalRDD or a POPULATED InMemoryRelation — pass "
-            "a finalize()/localCheckpoint/eager_persist result (a lazy "
-            "unpopulated persist() does not count), or drop the flag"
-        )
+    if input_materialized:
+        _require_materialized(pruned, "input_materialized")
     edges0 = pruned if input_materialized else pruned.localCheckpoint(eager=True)
     ro = rounds_out if rounds_out is not None else []
     try:
@@ -208,7 +204,7 @@ def connected_components(
         # checkpoint created HERE is freed — a caller-owned input stays
         # the caller's to release.
         if not input_materialized:
-            _release_local_checkpoint(edges0)
+            release(edges0)
 
 
 def _two_phase(
@@ -375,7 +371,7 @@ def _two_phase(
             # the finally held O(rounds) dead O(|E|) checkpoints in
             # block storage simultaneously. The exceptAll above was the
             # last read of the old frame.
-            _release_local_checkpoint(e)
+            release(e)
             e, e_sig = small, small_sig
         if not converged:
             spent.append(e)
@@ -406,8 +402,7 @@ def _two_phase(
         )
         return labels
     finally:
-        for df in spent:
-            _release_local_checkpoint(df)
+        release(*spent)
 
 
 def _label_prop(
@@ -467,7 +462,7 @@ def _label_prop(
             # (reading the OLD labels' blocks while doing so — release
             # strictly after). One job per round instead of two.
             cur_sum = _checksum(new_labels)
-            _release_local_checkpoint(labels)
+            release(labels)
             labels = new_labels
             if cur_sum == prev_sum:  # labels are monotone non-increasing
                 if rounds_out is not None:
@@ -482,8 +477,7 @@ def _label_prop(
     finally:
         # Free every superseded checkpoint; only the returned frame's
         # blocks stay (the caller owns those — O(|nodes|), not edges).
-        for df in spent:
-            _release_local_checkpoint(df)
+        release(*spent)
 
 
 def triangle_stats(
@@ -516,7 +510,7 @@ def triangle_stats(
     #
     # ``input_strict_pairs`` (r17, same contract as connected_components):
     # the caller asserts the input is an ALREADY-MATERIALIZED distinct
-    # pair set with src != dst on every row (a finalize() checkpoint from
+    # pair set with src != dst on every row (the eager checkpoint from
     # the jaccard/minhash pipelines). Canonicalization is then a pure
     # projection over the caller's blocks — the filter, the distinct
     # exchange and the extra eager-checkpoint job all vanish; each branch
@@ -525,7 +519,9 @@ def triangle_stats(
         F.least(F.col(src), F.col(dst)).alias("u"),
         F.greatest(F.col(src), F.col(dst)).alias("v"),
     )
-    if not input_strict_pairs:
+    if input_strict_pairs:
+        _require_materialized(e, "input_strict_pairs")
+    else:
         e = e.where(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=True)
     sym = e.select(F.col("u").alias("node")).union(e.select(F.col("v").alias("node")))
     # Eager checkpoint: deg fans out into both orientation joins and the
@@ -684,13 +680,12 @@ def pagerank(
             )
             .localCheckpoint(eager=True)
         )
-        _release_local_checkpoint(ranks)
+        release(ranks)
         ranks = new_ranks
     # The returned frame is checkpointed (self-contained blocks), so the
     # intermediates can be freed eagerly instead of waiting for the
     # ContextCleaner.
-    _release_local_checkpoint(norm)
-    _release_local_checkpoint(nodes)
+    release(norm, nodes)
     return ranks
 
 
@@ -749,7 +744,7 @@ def kcore(
             .localCheckpoint(eager=False)
         )
         n_pruned = pruned.count()
-        _release_local_checkpoint(cur)
+        release(cur)
         cur = pruned
         if n_pruned == n_edges:
             break
@@ -854,7 +849,7 @@ def ancestor_closure(
         # confirmation round is provably unnecessary.
         stats = nxt.agg(F.count("*").alias("n"), F.max("dist").alias("m")).first()
         n_nxt, max_dist = stats["n"], stats["m"]
-        _release_local_checkpoint(cur)
+        release(cur)
         cur = nxt
         if max_dist is not None and max_dist > max_depth:
             # Enforce the declared cap (r9 review: the doubling rounds

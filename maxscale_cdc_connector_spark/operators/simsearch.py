@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from maxscale_cdc_connector_spark.functions.vectors import dot
-from maxscale_cdc_connector_spark.operators.cache import eager_persist, finalize
+from maxscale_cdc_connector_spark.operators.cache import barriers, eager_persist
 
 CENTROID_STRIDE = 40
 NPROBE = 3
@@ -335,26 +335,27 @@ def srp_lsh_pairs(
     # eager_persist: both self-join sides read this in one action — a
     # lazy cache is a concurrent-stage population race under AQE (see
     # cache.eager_persist).
-    banded = eager_persist(srp_signature_bands(embeddings, dim, id_col))
-    caches = [banded]
-    a = banded.select(
-        F.col(id_col).alias("vec_a"), F.col("embedding").alias("emb_a"), "band", "bucket"
-    )
-    b = banded.select(
-        F.col(id_col).alias("vec_b"), F.col("embedding").alias("emb_b"), "band", "bucket"
-    )
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", "emb_a", "emb_b")
-        .distinct()
-    )
-    scored = cand.select("vec_a", "vec_b", dot("emb_a", "emb_b").alias("sim"))
-    verified = scored.filter(F.col("sim") >= tau).select(
-        "vec_a", "vec_b", F.round("sim", 5).alias("sim")
-    )
-    # Materialize the (small) verified-pair result, release the barrier.
-    return finalize(verified, caches)
+    with barriers() as hold:
+        banded = hold(eager_persist(srp_signature_bands(embeddings, dim, id_col)))
+        a = banded.select(
+            F.col(id_col).alias("vec_a"), F.col("embedding").alias("emb_a"), "band", "bucket"
+        )
+        b = banded.select(
+            F.col(id_col).alias("vec_b"), F.col("embedding").alias("emb_b"), "band", "bucket"
+        )
+        cand = (
+            a.join(b, ["band", "bucket"])
+            .filter(F.col("vec_a") < F.col("vec_b"))
+            .select("vec_a", "vec_b", "emb_a", "emb_b")
+            .distinct()
+        )
+        scored = cand.select("vec_a", "vec_b", dot("emb_a", "emb_b").alias("sim"))
+        verified = scored.filter(F.col("sim") >= tau).select(
+            "vec_a", "vec_b", F.round("sim", 5).alias("sim")
+        )
+        # Materialize the (small) verified-pair result; the scope then
+        # releases the barrier.
+        return verified.localCheckpoint(eager=True)
 
 
 def _centroids(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
@@ -480,25 +481,26 @@ def knn_graph_lsh(
     """
     # eager_persist: both self-join sides read this in one action (see
     # cache.eager_persist for the AQE cache-population race).
-    banded = eager_persist(srp_signature_bands(embeddings, dim, id_col))
-    a = banded.select(
-        F.col(id_col).alias("vec_id"), F.col("embedding").alias("emb_a"), "band", "bucket"
-    )
-    b = banded.select(
-        F.col(id_col).alias("nbr_id"), F.col("embedding").alias("emb_b"), "band", "bucket"
-    )
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("vec_id") != F.col("nbr_id"))
-        .select("vec_id", "nbr_id", "emb_a", "emb_b")
-        .distinct()
-    )
-    scored = cand.select("vec_id", "nbr_id", dot("emb_a", "emb_b").alias("sim"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
-    out = (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("vec_id", "nbr_id", F.col("nn_rank").cast("bigint").alias("nn_rank"),
-                F.round("sim", 5).alias("sim"))
-    )
-    return finalize(out, [banded])
+    with barriers() as hold:
+        banded = hold(eager_persist(srp_signature_bands(embeddings, dim, id_col)))
+        a = banded.select(
+            F.col(id_col).alias("vec_id"), F.col("embedding").alias("emb_a"), "band", "bucket"
+        )
+        b = banded.select(
+            F.col(id_col).alias("nbr_id"), F.col("embedding").alias("emb_b"), "band", "bucket"
+        )
+        cand = (
+            a.join(b, ["band", "bucket"])
+            .filter(F.col("vec_id") != F.col("nbr_id"))
+            .select("vec_id", "nbr_id", "emb_a", "emb_b")
+            .distinct()
+        )
+        scored = cand.select("vec_id", "nbr_id", dot("emb_a", "emb_b").alias("sim"))
+        w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("nbr_id"))
+        out = (
+            scored.withColumn("nn_rank", F.row_number().over(w))
+            .where(F.col("nn_rank") <= k)
+            .select("vec_id", "nbr_id", F.col("nn_rank").cast("bigint").alias("nn_rank"),
+                    F.round("sim", 5).alias("sim"))
+        )
+        return out.localCheckpoint(eager=True)

@@ -42,7 +42,7 @@ from maxscale_cdc_connector_spark.operators.simsearch import (
     srp_lsh_pairs,
     topk_cosine,
 )
-from maxscale_cdc_connector_spark.operators.cache import checkpoint_if_small, source_bytes
+from maxscale_cdc_connector_spark.operators.cache import checkpoint_if_small, input_bytes
 from maxscale_cdc_connector_spark.queries.registry import register
 from maxscale_cdc_connector_spark.session import ensure_scan_parallelism
 from maxscale_cdc_connector_spark.session import load_table as t
@@ -630,7 +630,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-recomputable blocks would be corpus-scale).
     tf = checkpoint_if_small(
         tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")),
-        source_bytes(sf_dir, "documents"),
+        input_bytes(d),
     )
     df_counts = tf.groupBy("token").agg(F.count("*").alias("df"))
     n_docs = d.agg(F.count("*").cast("double").alias("n_docs"))
@@ -1124,7 +1124,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = duplicated_corpus(t(spark, "documents", sf_dir).select("doc_id", "text"))
     edges = jaccard_pairs_prefix(corpus, min_jaccard=0.8).select("doc_a", "doc_b")
-    # input_materialized: edges is a finalize() checkpoint behind a pure
+    # input_materialized: edges is an eager checkpoint behind a pure
     # projection — skip the dispatcher's second copy (one job saved).
     cc = connected_components(
         edges, src="doc_a", dst="doc_b", input_materialized=True,
@@ -1327,7 +1327,7 @@ def dedup_rewrite_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = duplicated_corpus(t(spark, "documents", sf_dir).select("doc_id", "text"))
     edges = jaccard_pairs_prefix(corpus, min_jaccard=0.8).select("doc_a", "doc_b")
-    # input_materialized: edges is a finalize() checkpoint behind a pure
+    # input_materialized: edges is an eager checkpoint behind a pure
     # projection — skip the dispatcher's second copy (one job saved).
     cc = connected_components(
         edges, src="doc_a", dst="doc_b", input_materialized=True,
@@ -2180,7 +2180,7 @@ def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 
     corpus = duplicated_corpus(t(spark, "documents", sf_dir).select("doc_id", "text"))
     edges = jaccard_pairs_prefix(corpus, min_jaccard=0.8).select("doc_a", "doc_b")
-    # input_materialized: edges is a finalize() checkpoint behind a pure
+    # input_materialized: edges is an eager checkpoint behind a pure
     # projection — skip the dispatcher's second copy (one job saved).
     cc = connected_components(
         edges, src="doc_a", dst="doc_b", input_materialized=True,
@@ -2815,10 +2815,8 @@ def graph_kcore_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from maxscale_cdc_connector_spark.operators.graph import kcore
 
     corpus = duplicated_corpus(t(spark, "documents", sf_dir).select("doc_id", "text"))
-    # jaccard_pairs_prefix already returns a finalize() checkpoint — the
-    # r16 extra eager localCheckpoint here copied those blocks in a
-    # separate job for nothing (r17); both kcore peels read the same
-    # materialized pair blocks.
+    # jaccard_pairs_prefix already returns an eager checkpoint, so both
+    # kcore peels read the same materialized pair blocks.
     edges = jaccard_pairs_prefix(corpus, min_jaccard=0.8)
     rows = []
     for k in (2, 3):
@@ -2990,7 +2988,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = duplicated_corpus(t(spark, "documents", sf_dir).select("doc_id", "text"))
     edges = jaccard_pairs_prefix(corpus, min_jaccard=0.8).select("doc_a", "doc_b")
-    # input_materialized: edges is a finalize() checkpoint behind a pure
+    # input_materialized: edges is an eager checkpoint behind a pure
     # projection — skip the dispatcher's second copy (one job saved).
     cc = connected_components(
         edges, src="doc_a", dst="doc_b", input_materialized=True,

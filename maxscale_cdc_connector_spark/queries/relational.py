@@ -21,14 +21,16 @@ columns by name):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from maxscale_cdc_connector_spark.operators.cache import (
+    barriers,
     checkpoint_if_small,
     eager_persist,
-    finalize,
-    source_bytes,
+    input_bytes,
 )
 from maxscale_cdc_connector_spark.queries.registry import register
 from maxscale_cdc_connector_spark.session import events_ts_timestamp, events_ts_us
@@ -2759,19 +2761,20 @@ LIMIT 20
     "sort materializes.",
 )
 def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _market_basket_lazy(spark, sf_dir)
-    # Materialize the 20-row result, then release the basket cache —
-    # bounded cache lifetime in a long session (cache.finalize contract).
-    return finalize(out, caches)
+    # Materialize the 20-row result before the scope releases the basket
+    # cache — bounded cache lifetime in a long session.
+    with barriers() as hold:
+        return _market_basket_lazy(spark, sf_dir, hold).localCheckpoint(eager=True)
 
 
 def _market_basket_lazy(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The lazy market-basket plan plus the caches it reads — split out
-    so tests/test_plan_quality.py can assert on the REAL plan shape
-    (the registered query finalizes through a checkpoint, whose plan is
-    just a Scan ExistingRDD)."""
+    spark: SparkSession, sf_dir: str, hold: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The lazy market-basket plan, its basket cache registered through
+    ``hold`` (a :func:`cache.barriers` scope) — split out so
+    tests/test_plan_quality.py can assert on the REAL plan shape (the
+    registered query returns a checkpoint, whose plan is just a Scan
+    ExistingRDD)."""
     li = t(spark, "lineitem", sf_dir)
     # Per-order distinct part set as a SORTED array: one scan + one
     # (l_orderkey)-keyed exchange. collect_set drops NULL partkeys —
@@ -2788,26 +2791,26 @@ def _market_basket_lazy(
     #    the exchange). Measured 0.69 s → 0.38 s for the basket
     #    aggregate alone. The groupBy reuses the repartition's
     #    partitioning, so the exchange count is unchanged.
-    # 2. eager_persist + finalize instead of the r16 eager
-    #    localCheckpoint: baskets is corpus-sized, and a checkpoint's
-    #    blocks are the ONLY copy (executor loss kills the query at
-    #    scale); the persisted frame keeps recomputable lineage and
-    #    spills under MEMORY_AND_DISK, and finalize() checkpoints only
-    #    the 20-row result before releasing the cache. A/B: equal
-    #    local cost (1.83 vs 1.78 s same-host).
+    # 2. eager_persist, not an eager localCheckpoint: baskets is
+    #    corpus-sized, and a checkpoint's blocks are the ONLY copy
+    #    (executor loss kills the query at scale); the persisted frame
+    #    keeps recomputable lineage and spills under MEMORY_AND_DISK,
+    #    and only the 20-row result is checkpointed before the scope
+    #    releases the cache. A/B: equal local cost (1.83 vs 1.78 s
+    #    same-host).
     #    (A shared-exchange shape without any barrier was tried and
     #    rejected: column pruning diverges the three branches' map
     #    sides — n_orders prunes l_partkey, part_freq pushes a
     #    null-filter into the scan — so AQE's stage cache sees three
     #    DIFFERENT exchanges and the corpus scanned three times.)
     par = spark.sparkContext.defaultParallelism
-    baskets = eager_persist(
+    baskets = hold(eager_persist(
         li.where(F.col("l_orderkey").isNotNull())
         .select("l_orderkey", "l_partkey")
         .repartition(par, "l_orderkey")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-    )
+    ))
     n_orders = baskets.agg(F.count(F.lit(1)).alias("n"))
     part_freq = (
         baskets.select(F.explode("parts").alias("l_partkey"))
@@ -2864,7 +2867,7 @@ def _market_basket_lazy(
         .orderBy(F.desc("together"), F.asc("part_a"), F.asc("part_b"))
         .limit(20)
     )
-    return out, [baskets]
+    return out
 
 
 @register(
@@ -6767,7 +6770,7 @@ def timeseries_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.expr("ts_us DIV 86400000000") - F.col("d0")).alias("di"),
         )
         .agg(F.count("*").alias("c")),
-        source_bytes(sf_dir, "events"),
+        input_bytes(e),
     )
     span = daily.groupBy("user_id").agg(F.max("di").alias("dmax"))
     cal = span.select(

@@ -721,50 +721,52 @@ def pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames are CORPUS-scale (they carry text), so the barrier is the
     # size-gated checkpoint-or-persist (cache.eager_barrier): eager
     # checkpoint when the source is provably small, recomputable
-    # eager_persist at scale (VERDICT r16 item 3 doctrine). The persists
-    # are released by the funnel's own finalize below.
+    # eager_persist at scale (VERDICT r16 item 3 doctrine). The scope
+    # releases both on every exit, including a failing build below.
     from maxscale_cdc_connector_spark.operators.cache import (
+        barriers,
         eager_barrier,
-        finalize,
         input_bytes,
     )
 
-    src_b = input_bytes(q)
-    q = eager_barrier(q.withColumn("digest", F.md5(normalize("text"))), src_b)
-    keepers = q.groupBy("digest").agg(F.min("doc_id").alias("keeper"))
-    q2 = eager_barrier(
-        q.join(
-            keepers,
-            (q.digest == keepers.digest) & (q.doc_id == keepers.keeper),
-            "left_semi",
-        ),
-        src_b,
-    )
-    pairs = jaccard_pairs_prefix(q2.select("doc_id", "text"), min_jaccard=0.8)
-    # input_materialized: pairs is a finalize() checkpoint (see graph.py).
-    cc = connected_components(
-        pairs, src="doc_a", dst="doc_b", input_materialized=True,
-        input_strict_pairs=True,
-    )
-    dropped = cc.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-    q3 = q2.join(dropped, "doc_id", "left_anti")
     def stage(df, label):
         return df.agg(
             F.lit(label).alias("stage"),
             F.count("*").alias("n_docs"),
             F.sum("n_words").alias("total_words"),
         ).select("stage", "n_docs", "total_words")
-    out = (
-        stage(sig, "1_raw")
-        .unionByName(stage(q, "2_quality"))
-        .unionByName(stage(q2, "3_exact_dedup"))
-        .unionByName(stage(q3, "4_near_dedup"))
-    )
-    # Materialize the 4-row funnel and release both barriers (bounded
-    # cache lifetime either side of the eager_barrier gate).
-    return finalize(out, [q, q2])
+
+    src_b = input_bytes(q)
+    with barriers() as hold:
+        q = hold(eager_barrier(q.withColumn("digest", F.md5(normalize("text"))), src_b))
+        keepers = q.groupBy("digest").agg(F.min("doc_id").alias("keeper"))
+        q2 = hold(eager_barrier(
+            q.join(
+                keepers,
+                (q.digest == keepers.digest) & (q.doc_id == keepers.keeper),
+                "left_semi",
+            ),
+            src_b,
+        ))
+        pairs = jaccard_pairs_prefix(q2.select("doc_id", "text"), min_jaccard=0.8)
+        # input_materialized: pairs is an eager checkpoint (see graph.py).
+        cc = connected_components(
+            pairs, src="doc_a", dst="doc_b", input_materialized=True,
+            input_strict_pairs=True,
+        )
+        dropped = cc.where(F.col("node") != F.col("component")).select(
+            F.col("node").alias("doc_id")
+        )
+        q3 = q2.join(dropped, "doc_id", "left_anti")
+        out = (
+            stage(sig, "1_raw")
+            .unionByName(stage(q, "2_quality"))
+            .unionByName(stage(q2, "3_exact_dedup"))
+            .unionByName(stage(q3, "4_near_dedup"))
+        )
+        # Materialize the 4-row funnel before the scope releases both
+        # barriers (bounded cache lifetime either side of the gate).
+        return out.localCheckpoint(eager=True)
 
 
 @register(

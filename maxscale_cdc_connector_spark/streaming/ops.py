@@ -39,6 +39,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from maxscale_cdc_connector_spark.operators.cache import release
+
 # Envelope identity of one event: GTID triple + event_number
 # (cdc_connector.h:199-208 + event_number disambiguates the two halves
 # of an update sharing one GTID).
@@ -533,11 +535,7 @@ class SnapshotSink:
             # Free the checkpoint blocks eagerly — on a long-running
             # stream, waiting for the ContextCleaner to GC one frozen
             # batch per trigger accumulates block-manager storage.
-            from maxscale_cdc_connector_spark.operators.graph import (
-                _release_local_checkpoint,
-            )
-
-            _release_local_checkpoint(incoming)
+            release(incoming)
 
     def _merge(self, spark, incoming: DataFrame) -> None:
         touched = self._buckets_of(incoming)

@@ -822,8 +822,8 @@ def test_cc_call_sites_pass_materialized_edges_with_flag(spark, sf_dir, key):
     that calls connected_components must (a) keep input_materialized=
     True — dropping the flag silently reintroduces a redundant
     checkpoint copy of the pair join — and (b) hand it edges whose plan
-    the guard verifies as materialized (a finalize() checkpoint behind
-    a pure projection). Intercepts the dispatcher, then runs the real
+    the guard verifies as materialized (an eager checkpoint behind a
+    pure projection). Intercepts the dispatcher, then runs the real
     thing."""
     from maxscale_cdc_connector_spark.operators import graph as graph_mod
     from maxscale_cdc_connector_spark.queries.registry import REGISTRY
@@ -865,44 +865,141 @@ def test_cc_call_sites_pass_materialized_edges_with_flag(spark, sf_dir, key):
         )
 
 
-def test_finalize_releases_caches_on_failed_materialization(spark):
-    """Symmetric to the eager_persist guard: finalize's contract is
-    that the handed-in caches die with the call — including when the
-    result's materialization fails — so a failing operator cannot leak
-    its (large) intermediates for the session lifetime."""
+def test_barriers_release_held_frames_on_failed_materialization(spark):
+    """Symmetric to the eager_persist guard: the barriers() scope's
+    contract is that the held frames die with the block — including
+    when the result's materialization fails — so a failing operator
+    cannot leak its (large) intermediates for the session lifetime."""
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    from maxscale_cdc_connector_spark.operators.cache import finalize
+    from maxscale_cdc_connector_spark.operators.cache import barriers
 
     cached = spark.range(0, 100).persist()
-    bad = cached.where(F.raise_error(F.lit("forced finalize failure")).isNull())
-    with pytest.raises(Exception, match="forced finalize failure"):
-        finalize(bad, [cached])
+    with pytest.raises(Exception, match="forced result failure"):
+        with barriers() as hold:
+            bad = hold(cached).where(
+                F.raise_error(F.lit("forced result failure")).isNull()
+            )
+            bad.localCheckpoint(eager=True)
     assert cached.storageLevel == StorageLevel.NONE, (
-        "failed finalize leaked the caller's cache registration"
+        "failed scope leaked the held cache registration"
     )
 
 
-def test_finalize_success_path_survives_failing_unpersist(spark):
+def test_barriers_success_path_survives_failing_unpersist(spark):
     """ADVICE r13: the success path must be as guarded as the failure
-    path — one cache whose unpersist throws (dead executor RPC, torn
-    context) must neither leak the REMAINING caches nor discard the
+    path — one frame whose unpersist throws (dead executor RPC, torn
+    context) must neither leak the REMAINING frames nor discard the
     already-materialized result."""
     from pyspark.storagelevel import StorageLevel
 
-    from maxscale_cdc_connector_spark.operators.cache import finalize
+    from maxscale_cdc_connector_spark.operators.cache import barriers
 
     class _Exploding:
         def unpersist(self, blocking=False):
             raise RuntimeError("block manager unreachable")
 
     good = spark.range(0, 50).persist()
-    out = finalize(spark.range(0, 10), [_Exploding(), good])
+    with barriers() as hold:
+        hold(_Exploding())
+        hold(good)
+        out = spark.range(0, 10).localCheckpoint(eager=True)
     assert out.count() == 10, "computed result was discarded"
     assert good.storageLevel == StorageLevel.NONE, (
-        "a failing unpersist leaked the remaining caches"
+        "a failing unpersist leaked the remaining frames"
     )
+
+
+def _still_holds_storage(df) -> bool:
+    """A CacheManager entry (persist) or live checkpoint blocks
+    (localCheckpoint: the LogicalRDD's own RDD) behind ``df``."""
+    from pyspark.storagelevel import StorageLevel
+
+    if df.storageLevel != StorageLevel.NONE:
+        return True
+    try:
+        lvl = df._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+    except Exception:
+        return False
+    return lvl.useMemory() or lvl.useDisk()
+
+
+@pytest.mark.parametrize("limit", ["1", None], ids=["persist", "checkpoint"])
+def test_curation_funnel_releases_barriers_when_pair_build_fails(
+    spark, sf_dir, monkeypatch, limit
+):
+    """ADVICE r17: pipeline_curation_funnel's two eager barriers (q, q2)
+    must be released when a later build step raises — on both sides of
+    the checkpoint gate (limit 1 byte: session-lifetime CacheManager
+    entries; default: checkpoint blocks)."""
+    from maxscale_cdc_connector_spark.operators import cache, dedup
+    from maxscale_cdc_connector_spark.queries.training_queries import (
+        pipeline_curation_funnel,
+    )
+
+    if limit is None:
+        monkeypatch.delenv(cache.CKPT_MAX_INPUT_BYTES_ENV, raising=False)
+    else:
+        monkeypatch.setenv(cache.CKPT_MAX_INPUT_BYTES_ENV, limit)
+    barriers_made = []
+    real = cache.eager_barrier
+
+    def spy(df, src_bytes):
+        out = real(df, src_bytes)
+        barriers_made.append(out)
+        return out
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("forced pair-build failure")
+
+    monkeypatch.setattr(cache, "eager_barrier", spy)
+    monkeypatch.setattr(dedup, "jaccard_pairs_prefix", boom)
+    try:
+        with pytest.raises(RuntimeError, match="forced pair-build failure"):
+            pipeline_curation_funnel(spark, sf_dir)
+        assert len(barriers_made) == 2
+        leaked = [b for b in barriers_made if _still_holds_storage(b)]
+        assert not leaked, f"{len(leaked)} funnel barrier(s) leaked on a failed build"
+    finally:
+        cache.release(*barriers_made)
+
+
+def test_minhash_dedup_pairs_releases_lazy_persists_on_failed_count(
+    spark, monkeypatch
+):
+    """The lazy persists ``sh`` and ``sig`` are populated only by the
+    banded barrier's count inside lsh_candidate_pairs; when that count
+    raises they must not stay registered for the session."""
+    from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
+
+    from maxscale_cdc_connector_spark.operators import cache, dedup
+
+    seen = []
+    real = dedup.minhash_signatures
+
+    def spy(doc_shingles, id_col="doc_id"):
+        out = real(doc_shingles, id_col)
+        seen.extend([doc_shingles, out])
+        return out
+
+    monkeypatch.setattr(dedup, "minhash_signatures", spy)
+    docs = spark.range(0, 20).select(
+        F.col("id").alias("doc_id"),
+        F.when(
+            F.col("id").isNotNull(), F.raise_error(F.lit("forced text failure"))
+        ).cast("string").alias("text"),
+    )
+    try:
+        with pytest.raises(Exception, match="forced text failure"):
+            dedup.minhash_dedup_pairs(docs)
+        assert len(seen) == 2, "minhash_dedup_pairs never built sh/sig"
+        sh, sig = seen
+        assert sh.storageLevel == StorageLevel.NONE, "sh leaked on a failed count"
+        assert sig.storageLevel == StorageLevel.NONE, "sig leaked on a failed count"
+    finally:
+        cache.release(*seen)
 
 
 def test_connected_components_rejects_lazy_input_materialized(spark, sf_dir):
@@ -927,7 +1024,7 @@ def test_connected_components_rejects_lazy_input_materialized(spark, sf_dir):
         connected_components(lazy, input_materialized=True)
 
     # The shapes every real call site passes: a localCheckpoint behind a
-    # pure projection (cache.finalize output) and a populated cache.
+    # pure projection (a pair operator's output) and a populated cache.
     ckpt = lazy.localCheckpoint(eager=True).select("src", "dst")
     assert _plan_is_materialized(ckpt) is True
     got = connected_components(ckpt.limit(50), input_materialized=False)
@@ -978,3 +1075,27 @@ def test_lazy_unpopulated_persist_rejected_by_guard(spark, sf_dir):
         assert connected_components(cached, input_materialized=True).count() > 0
     finally:
         cached.unpersist()
+
+
+def test_triangle_stats_strict_pairs_rejects_lazy_input(spark, sf_dir):
+    """ADVICE r17: input_strict_pairs=True skips triangle_stats' own
+    eager checkpoint, so it carries the same materialization guard as
+    connected_components — a lazy input would otherwise recompute the
+    whole upstream pipeline in every branch. A checkpoint behind a pure
+    projection (what graph_triangle_count passes) still goes through."""
+    from maxscale_cdc_connector_spark.operators.graph import (
+        _plan_is_materialized,
+        triangle_stats,
+    )
+
+    lazy = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+        "doc_id AS src", "doc_id + 1 AS dst"
+    )
+    if _plan_is_materialized(lazy) is None:
+        pytest.skip("optimized-plan bridge unavailable (Spark Connect?)")
+    with pytest.raises(ValueError, match="input_strict_pairs"):
+        triangle_stats(lazy, input_strict_pairs=True)
+
+    ckpt = lazy.localCheckpoint(eager=True).select("src", "dst")
+    strict = triangle_stats(ckpt, input_strict_pairs=True).collect()
+    assert strict == triangle_stats(ckpt).collect()

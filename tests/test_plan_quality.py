@@ -282,20 +282,17 @@ def test_market_basket_keyed_joins_and_topk(spark, sf_dir) -> None:
     corpus-cartesian) and the final top-20 must be TakeOrderedAndProject,
     not a global sort. The 1-row corpus total rides a broadcast.
 
-    The registered query finalizes through a checkpoint (r17 — its plan
-    is just a Scan ExistingRDD), so the shape assertions run on the
-    pre-finalize lazy plan, with the basket cache released afterwards."""
+    The registered query returns a checkpoint (r17 — its plan is just a
+    Scan ExistingRDD), so the shape assertions run on the lazy plan
+    inside a barriers() scope, which releases the basket cache."""
+    from maxscale_cdc_connector_spark.operators.cache import barriers
     from maxscale_cdc_connector_spark.queries.relational import _market_basket_lazy
 
-    out, caches = _market_basket_lazy(spark, sf_dir)
-    try:
-        s = plan_summary(out)
+    with barriers() as hold:
+        s = plan_summary(_market_basket_lazy(spark, sf_dir, hold))
         assert not s.has("CartesianProduct"), s.nodes
         assert s.has("TakeOrderedAndProject"), s.nodes
         assert s.has("BroadcastExchange"), s.nodes
-    finally:
-        for c in caches:
-            c.unpersist(blocking=False)
 
 
 def test_stratified_sample_is_single_scan_plus_broadcasts(spark, sf_dir) -> None:

@@ -277,7 +277,25 @@ def test_connected_components_strict_pairs_matches_default(spark, pairs) -> None
     assert strict == base
 
 
-def test_checkpoint_if_small_gates_on_source_bytes(spark, sf_dir) -> None:
+def _visible_bytes(root) -> int:
+    """Bytes of a table's data files: every file under ``root`` except
+    ``_``/``.``-prefixed entries (``_SUCCESS``, ``.crc``, ``_temporary/``)."""
+    import os
+
+    if not os.path.isdir(root):
+        return os.path.getsize(root)
+    total = 0
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        total += sum(
+            os.path.getsize(os.path.join(d, f))
+            for f in files
+            if not f.startswith((".", "_"))
+        )
+    return total
+
+
+def test_checkpoint_if_small_gates_on_input_bytes(spark, sf_dir) -> None:
     """Below the limit the frame is materialized (plan bottoms out in a
     LogicalRDD); above it the frame is returned unchanged (lazy,
     recomputable). Rows identical either way — the gate is a storage
@@ -287,21 +305,21 @@ def test_checkpoint_if_small_gates_on_source_bytes(spark, sf_dir) -> None:
     from maxscale_cdc_connector_spark.operators.cache import (
         CKPT_MAX_INPUT_BYTES_ENV,
         checkpoint_if_small,
-        source_bytes,
+        input_bytes,
     )
     from maxscale_cdc_connector_spark.session import load_table
 
-    sb = source_bytes(sf_dir, "documents")
-    assert sb is not None and sb > 0
-    assert source_bytes(sf_dir, "no_such_table") is None
-
     df = load_table(spark, "documents", sf_dir).select("doc_id")
-    small = checkpoint_if_small(df, sb)
+    ib = input_bytes(df)
+    assert ib is not None and ib > 0
+    assert input_bytes(spark.range(3)) is None  # no file inputs: unknown
+
+    small = checkpoint_if_small(df, ib)
     assert small._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
     old = os.environ.get(CKPT_MAX_INPUT_BYTES_ENV)
     os.environ[CKPT_MAX_INPUT_BYTES_ENV] = "1"
     try:
-        big = checkpoint_if_small(df, sb)
+        big = checkpoint_if_small(df, ib)
         assert big is df  # unchanged, still lazy
         unknown = checkpoint_if_small(df, None)
         assert unknown is df  # unknown size must be treated as big
@@ -313,52 +331,88 @@ def test_checkpoint_if_small_gates_on_source_bytes(spark, sf_dir) -> None:
     assert small.count() == df.count()
 
 
-def test_source_bytes_walks_nested_partition_dirs(tmp_path) -> None:
-    """A partitioned parquet layout (``t.parquet/k=v/part-*.parquet``)
-    measures its files, not its directory inodes, so a corpus-scale
-    nested table cannot read as small and pass the checkpoint gate
-    (ADVICE r17). A flat layout measures its visible files as before."""
-    from maxscale_cdc_connector_spark.operators.cache import source_bytes
+def test_input_bytes_walks_nested_partition_dirs(spark, tmp_path) -> None:
+    """A Spark-written partitioned layout (``t.parquet/k=v/sub=w/part-*``)
+    measures its data files, so a corpus-scale nested table cannot read
+    as small and pass the checkpoint gate (ADVICE r17); ``_SUCCESS``, a
+    stray ``_temporary/`` file and ``.crc`` sidecars never count. A flat
+    layout measures its visible files; a projection measures the same
+    inputs; an unreadable input or a non-``file`` scheme is unknown."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from maxscale_cdc_connector_spark.operators.cache import input_bytes
 
     root = tmp_path / "t.parquet"
-    for part in ("k=1", "k=2/sub=a"):
-        (root / part).mkdir(parents=True)
-        (root / part / "part-0.parquet").write_bytes(b"x" * 100_000)
-    (root / "_SUCCESS").write_bytes(b"")
-    (root / "_temporary").mkdir()
-    (root / "_temporary" / "part-9.parquet").write_bytes(b"x" * 500_000)
-    assert source_bytes(str(tmp_path), "t") == 200_000
+    (
+        spark.range(0, 400, 1, 4)
+        .withColumn("k", F.col("id") % 2)
+        .withColumn("sub", F.when(F.col("id") % 3 == 0, "a").otherwise("b"))
+        .write.partitionBy("k", "sub")
+        .parquet(str(root))
+    )
+    assert (root / "_SUCCESS").exists()
+    (root / "_temporary" / "0").mkdir(parents=True)
+    (root / "_temporary" / "0" / "part-9.parquet").write_bytes(b"x" * 500_000)
+    expected = _visible_bytes(str(root))
+    assert 0 < expected < 500_000
+    df = spark.read.parquet(str(root))
+    assert input_bytes(df) == expected
+    assert input_bytes(df.select("id").where(F.col("k") == 1)) == expected
 
     flat = tmp_path / "f.parquet"
-    flat.mkdir()
-    (flat / "part-0.parquet").write_bytes(b"x" * 123)
-    (flat / ".part-0.parquet.crc").write_bytes(b"x" * 9)
-    assert source_bytes(str(tmp_path), "f") == 123
+    spark.range(0, 50, 1, 2).write.parquet(str(flat))
+    assert any(f.startswith(".") for f in os.listdir(flat))  # .crc sidecars
+    fdf = spark.read.parquet(str(flat))
+    assert input_bytes(fdf) == _visible_bytes(str(flat)) > 0
+    os.remove(next(p for p in flat.iterdir() if p.name.startswith("part-")))
+    assert input_bytes(fdf) is None  # unreadable input: unknown, not small
+
+    class _Remote:
+        def inputFiles(self):
+            return ["hdfs://namenode/warehouse/t.parquet/part-0.parquet"]
+
+    assert input_bytes(_Remote()) is None
+
+
+def test_input_bytes_decodes_percent_encoded_paths(spark, tmp_path) -> None:
+    """ADVICE r17: ``inputFiles`` percent-encodes a space in the table's
+    directory (``data%20dir``); the probe decodes the URI, so the
+    checkpoint gate still sees the table's real size instead of
+    silently reading it as unknown."""
+    from maxscale_cdc_connector_spark.operators.cache import input_bytes
+
+    root = tmp_path / "data dir" / "t.parquet"
+    spark.range(0, 100, 1, 2).write.parquet(str(root))
+    df = spark.read.parquet(str(root))
+    assert any("%20" in f for f in df.inputFiles())
+    assert input_bytes(df) == _visible_bytes(str(root)) > 0
 
 
 def test_eager_barrier_gates_and_releases_both_kinds(spark, sf_dir) -> None:
     """Below the limit eager_barrier is a checkpoint (LogicalRDD);
     above it an eagerly-populated persist (InMemoryRelation with loaded
-    buffers). finalize() must release EITHER kind without touching the
-    already-materialized result."""
+    buffers). The barriers() scope must release EITHER kind without
+    touching the already-materialized result."""
     import os
 
     from maxscale_cdc_connector_spark.operators.cache import (
         CKPT_MAX_INPUT_BYTES_ENV,
+        barriers,
         eager_barrier,
-        finalize,
         input_bytes,
-        source_bytes,
     )
     from maxscale_cdc_connector_spark.session import load_table
 
     df = load_table(spark, "documents", sf_dir).select("doc_id")
     ib = input_bytes(df)
-    assert ib is not None and ib == source_bytes(sf_dir, "documents")
+    assert ib is not None and ib == _visible_bytes(f"{sf_dir}/documents.parquet")
 
     small = eager_barrier(df, ib)
     assert small._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
-    out = finalize(small.limit(3), [small])
+    with barriers() as hold:
+        out = hold(small).limit(3).localCheckpoint(eager=True)
     assert out.count() == 3  # result survives the release
 
     old = os.environ.get(CKPT_MAX_INPUT_BYTES_ENV)
@@ -366,7 +420,8 @@ def test_eager_barrier_gates_and_releases_both_kinds(spark, sf_dir) -> None:
     try:
         big = eager_barrier(df, ib)
         assert big.storageLevel.useMemory  # persisted fallback
-        out = finalize(big.limit(3), [big])
+        with barriers() as hold:
+            out = hold(big).limit(3).localCheckpoint(eager=True)
         assert out.count() == 3
         assert not big.storageLevel.useMemory  # released
     finally:
