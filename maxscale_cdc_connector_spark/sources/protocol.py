@@ -19,8 +19,9 @@ speaks (behavioral spec, all cited from /root/reference):
 
 Design differences from the reference (deliberate, Spark-first):
 
-* Timeouts surface as ``None`` from :meth:`CDCClient.read_record` — the
-  Structured Streaming source maps them to an empty micro-batch.
+* Timeouts surface as ``None`` from :meth:`CDCClient.read_raw_block`
+  (and :meth:`CDCClient.read_record`) — the Structured Streaming reader
+  maps the block read's ``None`` to an empty micro-batch.
 * A mid-stream schema record raises :class:`SchemaChangedError` carrying
   the new schema: a Spark streaming query has a fixed schema, so the
   query must stop and be restarted with the new schema (SURVEY.md §7
@@ -197,17 +198,6 @@ class CDCClient:
         if is_schema_record(obj):
             raise SchemaChangedError(obj)
         return obj
-
-    def read_raw_lines(self, max_lines: int) -> list[bytes] | None:
-        """Up to ``max_lines`` complete newline-delimited event lines,
-        UNPARSED; ``None`` on idle timeout with nothing complete
-        buffered. Thin split over :meth:`read_raw_block` — callers that
-        feed ``pyarrow.json`` should use the block form directly and
-        never materialize per-line bytes objects."""
-        blk = self.read_raw_block(max_lines)
-        if blk is None:
-            return None
-        return blk[0].split(b"\n")
 
     def read_raw_block(
         self, max_lines: int, max_seconds: float | None = None

@@ -249,13 +249,11 @@ def test_streaming_checkpoint_resume_across_queries(spark, tmp_path) -> None:
 def test_partitioned_schema_change_restart(spark, tmp_path) -> None:
     """A mid-stream ALTER must survive the executor boundary: the
     SchemaChangedError is raised inside an executor task, and its
-    marker text must still reach the StreamingQueryException so run_with_schema_restarts
+    marker text must still reach the StreamingQueryException so run_supervised
     re-infers the widened schema and resumes from the checkpoint."""
     import threading
 
-    from maxscale_cdc_connector_spark.streaming.restart import (
-        run_with_schema_restarts,
-    )
+    from maxscale_cdc_connector_spark.streaming.restart import run_supervised
 
     new_schema = dict(TEST_SCHEMA_RECORD)
     new_schema["fields"] = TEST_SCHEMA_RECORD["fields"] + [
@@ -290,7 +288,7 @@ def test_partitioned_schema_change_restart(spark, tmp_path) -> None:
         result: dict = {}
 
         def run() -> None:
-            result["restarts"] = run_with_schema_restarts(
+            result["restarts"] = run_supervised(
                 spark,
                 {
                     "host": "127.0.0.1",

@@ -724,9 +724,7 @@ def test_schema_change_restart_wrapper_end_to_end(spark, tmp_path) -> None:
     Spark's fixed-schema-per-query model."""
     import threading
 
-    from maxscale_cdc_connector_spark.streaming.restart import (
-        run_with_schema_restarts,
-    )
+    from maxscale_cdc_connector_spark.streaming.restart import run_supervised
 
     new_schema = dict(TEST_SCHEMA_RECORD)
     new_schema["fields"] = TEST_SCHEMA_RECORD["fields"] + [
@@ -762,7 +760,7 @@ def test_schema_change_restart_wrapper_end_to_end(spark, tmp_path) -> None:
         result: dict = {}
 
         def run() -> None:
-            result["restarts"] = run_with_schema_restarts(
+            result["restarts"] = run_supervised(
                 spark,
                 {
                     "host": "127.0.0.1",
@@ -825,9 +823,7 @@ def test_snapshot_sink_schema_evolution_across_restart(spark, tmp_path) -> None:
     import threading
 
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-    from maxscale_cdc_connector_spark.streaming.restart import (
-        run_with_schema_restarts,
-    )
+    from maxscale_cdc_connector_spark.streaming.restart import run_supervised
 
     new_schema = dict(TEST_SCHEMA_RECORD)
     new_schema["fields"] = TEST_SCHEMA_RECORD["fields"] + [
@@ -861,7 +857,7 @@ def test_snapshot_sink_schema_evolution_across_restart(spark, tmp_path) -> None:
         result: dict = {}
 
         def run() -> None:
-            result["restarts"] = run_with_schema_restarts(
+            result["restarts"] = run_supervised(
                 spark,
                 {
                     "host": "127.0.0.1",
@@ -910,17 +906,21 @@ def test_snapshot_sink_schema_evolution_across_restart(spark, tmp_path) -> None:
         assert rows[i]["name"] == f"pre{i}"
 
 
-def test_run_supervised_multi_start_probe_failure_backs_off(spark, tmp_path) -> None:
+@pytest.mark.parametrize("entry", ["run_supervised", "run_supervised_multi"])
+def test_run_supervised_start_probe_failure_backs_off(spark, tmp_path, entry) -> None:
     """With ``schemaRecord`` unpinned, (re)starting a stream PROBES the
     CDC server for schema inside ``load()`` — so a restart against a
     still-down server raises ``ConnectionRefusedError`` synchronously,
-    outside any streaming query. That must consume a backoff round for
-    that table (the documented per-table isolation), not escape the
-    monitor loop (ADVICE r6), and the stream must still recover once the
-    server returns at the same address."""
+    outside any streaming query. Through either entry point that must
+    consume a backoff round for that stream (the documented per-table
+    isolation), not escape the monitor loop (ADVICE r6), and the stream
+    must still recover once the server returns at the same address."""
     import threading
 
-    from maxscale_cdc_connector_spark.streaming.restart import run_supervised_multi
+    from maxscale_cdc_connector_spark.streaming.restart import (
+        run_supervised,
+        run_supervised_multi,
+    )
 
     first = [make_event(s, name=f"a{s}") for s in range(1, 6)]
     spark.dataSource.register(MaxScaleCDCDataSource)
@@ -937,7 +937,7 @@ def test_run_supervised_multi_start_probe_failure_backs_off(spark, tmp_path) -> 
 
         return (
             df.writeStream.foreachBatch(collect_batch)
-            .option("checkpointLocation", str(tmp_path / "ckpt-t1"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(processingTime="300 milliseconds")
             .start()
         )
@@ -959,16 +959,16 @@ def test_run_supervised_multi_start_probe_failure_backs_off(spark, tmp_path) -> 
     result: dict = {}
 
     def supervise():
+        policy = dict(
+            max_restarts=10, initial_backoff=0.3, stop_when=done.is_set, timeout=150.0
+        )
         try:
-            result["restarts"] = run_supervised_multi(
-                spark,
-                {"t1": options},
-                {"t1": attach},
-                max_restarts=10,
-                initial_backoff=0.3,
-                stop_when=done.is_set,
-                timeout=150.0,
-            )
+            if entry == "run_supervised":
+                result["restarts"] = run_supervised(spark, options, attach, **policy)
+            else:
+                result["restarts"] = run_supervised_multi(
+                    spark, {"t1": options}, {"t1": attach}, **policy
+                )["t1"]
         except Exception as exc:  # noqa: BLE001 — recorded for the assert
             result["error"] = exc
 
@@ -996,63 +996,75 @@ def test_run_supervised_multi_start_probe_failure_backs_off(spark, tmp_path) -> 
     assert "error" not in result, f"probe failure escaped the monitor: {result.get('error')}"
     # At least one restart consumed by the in-query failure and one by a
     # start-time probe failure during the 2.5 s dead window.
-    assert result.get("restarts", {}).get("t1", 0) >= 2
+    assert result.get("restarts", 0) >= 2
     assert snap == {s: f"a{s}" for s in range(1, 11)}
 
 
-def test_run_supervised_start_probe_failure_backs_off(spark, tmp_path) -> None:
-    """Single-table mirror of the multi-table start-guard test: with
-    schemaRecord unpinned, a restart against a still-down server fails
-    synchronously in load()'s schema probe; run_supervised must treat
-    that as another backoff round (same policy as an in-query transport
-    loss) and recover once the server returns."""
+def test_run_supervised_multi_server_down_at_launch(spark, tmp_path) -> None:
+    """The FIRST start of a stream is guarded like every restart: t2's
+    schema is unpinned, so its launch ``load()`` probes a port nobody
+    listens on yet. That must back off t2 alone — not raise out of the
+    call and leave the already-started t1 running unsupervised — so t1
+    delivers with no restart and t2 recovers once its server comes up
+    at that port."""
+    import json as _json
+    import socket as _socket
     import threading
 
-    from maxscale_cdc_connector_spark.streaming.restart import run_supervised
+    from maxscale_cdc_connector_spark.streaming.restart import run_supervised_multi
 
-    first = [make_event(s, name=f"a{s}") for s in range(1, 6)]
     spark.dataSource.register(MaxScaleCDCDataSource)
-
     lock = threading.Lock()
-    snap: dict[int, str] = {}
+    snaps: dict[str, dict[int, str]] = {"t1": {}, "t2": {}}
+    started: list = []
 
-    def attach(df):
-        def collect_batch(batch, _bid):
-            rows = batch.select("id", "name").collect()
-            with lock:
-                for r in rows:
-                    snap[r["id"]] = r["name"]
+    def make_attach(name: str):
+        def attach(df):
+            def collect_batch(batch, _bid):
+                rows = batch.select("id", "name").collect()
+                with lock:
+                    for r in rows:
+                        snaps[name][r["id"]] = r["name"]
 
-        return (
-            df.writeStream.foreachBatch(collect_batch)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
+            q = (
+                df.writeStream.foreachBatch(collect_batch)
+                .option("checkpointLocation", str(tmp_path / f"ckpt-{name}"))
+                .trigger(processingTime="300 milliseconds")
+                .start()
+            )
+            started.append(q)
+            return q
 
-    srv = FakeMaxScale(TEST_SCHEMA_RECORD, first, table="test.t1")
-    srv.__enter__()
-    port = srv.port
-    options = {
-        "host": "127.0.0.1",
-        "port": str(port),
-        "user": "cdcuser",
-        "password": "cdcpw",
-        "table": "test.t1",
-        "pollseconds": "0.3",
-    }  # no schemaRecord — every (re)start probes the server
+        return attach
+
+    closed = _socket.socket()
+    closed.bind(("127.0.0.1", 0))
+    port2 = closed.getsockname()[1]
+    closed.close()  # nothing listens on port2 at launch
+
+    common = {"host": "127.0.0.1", "user": "cdcuser", "password": "cdcpw", "pollseconds": "0.3"}
+    srv1 = FakeMaxScale(
+        TEST_SCHEMA_RECORD, [make_event(s, name=f"a{s}") for s in range(1, 6)], table="test.t1"
+    )
+    srv1.__enter__()
+    tables = {
+        "t1": {**common, "port": str(srv1.port), "table": "test.t1",
+               "schemaRecord": _json.dumps(TEST_SCHEMA_RECORD)},
+        "t2": {**common, "port": str(port2), "table": "test.t2"},  # unpinned
+    }
 
     done = threading.Event()
     result: dict = {}
 
     def supervise():
         try:
-            result["restarts"] = run_supervised(
+            result["restarts"] = run_supervised_multi(
                 spark,
-                options,
-                attach,
-                max_restarts=10,
+                tables,
+                {"t1": make_attach("t1"), "t2": make_attach("t2")},
+                max_restarts=20,
                 initial_backoff=0.3,
+                max_backoff=1.0,
                 stop_when=done.is_set,
                 timeout=150.0,
             )
@@ -1063,26 +1075,30 @@ def test_run_supervised_start_probe_failure_backs_off(spark, tmp_path) -> None:
     t.start()
     try:
         deadline = time.time() + 60
-        while time.time() < deadline and len(snap) < 5:
+        while time.time() < deadline and len(snaps["t1"]) < 5 and "error" not in result:
             time.sleep(0.3)
-        assert len(snap) == 5
-
-        srv.stop()
-        time.sleep(2.5)  # several backoff rounds of dead-port probes
-        all_events = first + [make_event(s, name=f"a{s}") for s in range(6, 11)]
-        with FakeMaxScale(TEST_SCHEMA_RECORD, all_events, table="test.t1", port=port):
+        assert "error" not in result, f"launch probe escaped the monitor: {result['error']}"
+        assert len(snaps["t1"]) == 5
+        b_events = [make_event(s, name=f"b{s}") for s in range(1, 6)]
+        with FakeMaxScale(TEST_SCHEMA_RECORD, b_events, table="test.t2", port=port2):
             deadline = time.time() + 90
-            while time.time() < deadline and len(snap) < 10:
+            while time.time() < deadline and len(snaps["t2"]) < 5:
                 time.sleep(0.3)
             done.set()
             t.join(60)
+        assert not t.is_alive(), "supervisor did not stop"
     finally:
         done.set()
-        srv.stop()
+        srv1.stop()
+        for q in started:  # a launch failure would have left these unsupervised
+            if q.isActive:
+                q.stop()
 
-    assert "error" not in result, f"probe failure escaped run_supervised: {result.get('error')}"
-    assert result.get("restarts", 0) >= 2
-    assert snap == {s: f"a{s}" for s in range(1, 11)}
+    assert "error" not in result, result.get("error")
+    assert result["restarts"]["t1"] == 0, "healthy stream restarted needlessly"
+    assert result["restarts"]["t2"] >= 1
+    assert snaps["t1"] == {s: f"a{s}" for s in range(1, 6)}
+    assert snaps["t2"] == {s: f"b{s}" for s in range(1, 6)}
 
 
 def test_table_option_steady_trickle_commits_batches(spark, tmp_path) -> None:
