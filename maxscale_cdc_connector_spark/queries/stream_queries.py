@@ -286,10 +286,11 @@ FROM customer
     "original schema record; phase 2 — a NEW streaming incarnation, as "
     "the schema-restart wrapper would start — replays post-ALTER updates "
     "carrying an added c_tier column into the SAME state table. The "
-    "merged snapshot (parquet mergeSchema + unionByName allowMissing"
-    "Columns) must show NULL-backfilled c_tier on untouched keys and the "
-    "post-ALTER payload on updated ones — the same backfill MariaDB "
-    "applies to rows predating an ADD COLUMN. Exact-hash oracle over the "
+    "merged snapshot (unionByName allowMissingColumns in the merge, the "
+    "widened schema recorded in the manifest every read uses) must show "
+    "NULL-backfilled c_tier on untouched keys and the post-ALTER payload "
+    "on updated ones — the same backfill MariaDB applies to rows "
+    "predating an ADD COLUMN. Exact-hash oracle over the "
     "batch-derivable final state.",
 )
 def stream_snapshot_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:

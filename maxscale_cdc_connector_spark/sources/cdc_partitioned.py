@@ -45,9 +45,9 @@ events. Setting ``sourceId`` stamps a constant ``_source_id`` string
 column on every delivered row (appended to the inferred schema), keys
 stream identity (offsets + frontier files) by ``sourceId::table`` so two
 servers may stream the SAME table name, and ``streaming/ops.dedup_exact``
-/ ``SnapshotSink`` automatically include the column in the replay-dedup
-identity. All streams must carry a sourceId or none (a null
-discriminator would silently exempt a stream from the identity).
+automatically includes the column in the replay-dedup identity. All
+streams must carry a sourceId or none (a null discriminator would
+silently exempt a stream from the identity).
 
 Offset design (the part a socket protocol makes non-trivial — the CDC
 server has no "latest position" RPC, it only replays from a requested

@@ -15,29 +15,31 @@ Scale notes:
 * `dedup_exact` keys state on the envelope identity; with a watermark on
   the event timestamp, expired keys are evicted — mandatory under
   at-least-once GTID replay. This (or the foreachBatch keyed upsert in
-  `snapshot_sink`) is also the exactly-once recovery for the
+  `SnapshotSink`) is also the exactly-once recovery for the
   partition-parallel reader, whose REPLAYED micro-batches may deliver a
   SUPERSET of the original attempt (offsets are epoch ticks — see the
   replay-semantics section of sources/cdc_partitioned.py); batchId-skip
   idioms that assume per-batch determinism are NOT safe on that source.
-* `snapshot_sink` maintains the queryable current-state table via
-  foreachBatch compaction: per batch, dedup → per-key latest → merge
-  with the previous snapshot → atomic swap. On a real cluster the state
-  table is partitioned by key hash and only touched partitions rewrite
-  (or a Delta/Iceberg MERGE replaces the swap); the rewrite-all form
-  here keeps plain-parquet semantics exact.
+* `SnapshotSink` maintains the queryable current-state table via
+  foreachBatch compaction: per batch, per-key latest over the batch and
+  the touched hash buckets → fresh bucket dirs → one atomic manifest
+  publish. Only touched buckets rewrite, and a read opens exactly the
+  dirs one published manifest maps (a Delta/Iceberg table is the same
+  commit log with more machinery).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-import threading
+import time
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from maxscale_cdc_connector_spark.operators.cache import release
 
@@ -315,48 +317,62 @@ def stateful_snapshot(events: DataFrame, key_cols: Sequence[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# How long a superseded SnapshotSink version stays on disk after the
+# merge that replaced it publishes: the read-isolation bound for a
+# DataFrame returned by current()/snapshot(). A Spark file scan lists its
+# files when the DataFrame is built and opens them when its tasks run;
+# 30 s covers a dashboard query many times over on a loaded host, and at
+# a 3 s trigger keeps about ten versions of the touched buckets on disk.
+RETENTION_S = 30.0
+
+
 class SnapshotSink:
     """foreachBatch upsert maintaining a parquet current-state table.
 
     The whole point of consuming a CDC stream (`cdc_connector.h:42`
     docs: stream one table's changes) is a queryable current state.
-    Per micro-batch: dedup replays → reduce the batch to its per-key
-    latest → merge with the previous snapshot keeping the greater
-    (sequence, event_number) → write + atomic swap. Deleted keys stay
-    in-state as TOMBSTONES (a late replay of an older event can never
-    resurrect a deleted key); ``snapshot()`` filters them, ``current()``
-    returns them raw.
+    Per micro-batch: the batch plus the touched buckets of the current
+    version reduce to one row per key, the greatest ``order_cols`` →
+    the buckets are written to ``data/<version>-<id>/_bucket=<b>``, a
+    fresh dir nothing modifies later → ``_manifest/<version>.json`` is
+    published in one atomic ``os.replace`` (the commit-log pattern of
+    Spark's ``FileStreamSink`` ``_spark_metadata``). A manifest maps
+    every bucket to its dir and records the merged schema and
+    ``n_buckets``/``key_cols``/``order_cols``; a read opens the newest
+    one's dirs with that schema — no listing of the table, no footer
+    inference. Deleted keys stay in-state as TOMBSTONES (a late replay
+    of an older event can never resurrect a deleted key);
+    ``snapshot()`` filters them, ``current()`` returns them raw.
 
-    Concurrent reads: ``snapshot()``/``current()`` from a monitoring
-    thread are safe against recovery (it runs once per instance, under
-    the swap lock) but NOT snapshot-isolated against an in-flight
-    bucket swap — a read whose file listing was pinned just before a
-    swap can fail transiently (file-not-found on the replaced bucket
-    files). Retry such reads; they heal on the next call.
+    Reads are snapshot-isolated: a DataFrame returned by ``current()``/
+    ``snapshot()`` stays readable for ``RETENTION_S`` seconds after a
+    newer version is published; cache or copy it to hold it longer.
 
-    Restart-safe: merging is idempotent (an event applied twice yields
-    the same state), so at-least-once foreachBatch semantics suffice.
+    Restart-safe: the per-key max makes merging idempotent (an event
+    applied twice, or replayed, yields the same state), so
+    at-least-once foreachBatch semantics suffice with no replay dedup.
+    A driver crash before the publish leaves the previous version
+    current and a dir the next merge deletes; one after it loses
+    nothing.
 
-    Multi-server note (r9): when the partitioned reader stamps
-    ``_source_id``, replay dedup keys on it automatically (dedup_exact),
-    so two servers sharing (domain, server_id, sequence) ranges cannot
-    collapse distinct events in one sink. The default MERGE ordering,
-    however, is (sequence, event_number) — meaningful only within one
-    GTID space — so for active-active sources either include
-    ``_source_id`` in ``key_cols`` (per-source current state) or pass
-    an explicit cross-source ``order_cols`` (r10, VERDICT r9 item 5):
-    ``("event_ts", "_source_id", "sequence", "event_number")`` is the
-    documented last-writer-wins rule (event time, ties broken by
-    source then envelope — the same total order
-    cdc_multi_source_reconcile applies in batch), giving ONE reconciled
-    row per key across conflicting writers. The ordering is pinned in
-    the sink's meta marker like n_buckets/key_cols: changing it on live
-    state silently changes merge identity, so a mismatch is refused.
+    Multi-server note (r9): the default ordering, (sequence,
+    event_number), is meaningful only within one GTID space, so for
+    active-active sources either include ``_source_id`` in ``key_cols``
+    (per-source current state) or pass an explicit cross-source
+    ``order_cols`` (r10, VERDICT r9 item 5): ``("event_ts",
+    "_source_id", "sequence", "event_number")`` is the documented
+    last-writer-wins rule (event time, ties broken by source then
+    envelope — the same total order cdc_multi_source_reconcile applies
+    in batch), giving ONE reconciled row per key across conflicting
+    writers. The ordering is pinned in the manifest like
+    n_buckets/key_cols: changing it on live state silently changes
+    merge identity, so a mismatch is refused.
     """
 
     BUCKET_COL = "_bucket"
     # The single-GTID-space default (cdc_connector.h:199-208 envelope).
     DEFAULT_ORDER = ("sequence", "event_number")
+    _LATEST = "_latest"
 
     def __init__(
         self,
@@ -369,144 +385,165 @@ class SnapshotSink:
         self.key_cols = list(key_cols)
         self.order_cols = list(order_cols)
         self.n_buckets = n_buckets
-        # Shared by _recover and the swap loop (ADVICE r8): a monitoring
-        # thread calling current()/snapshot() on THIS instance can never
-        # interleave a recovery with an in-flight bucket swap.
-        self._lock = threading.Lock()
-        self._recovered = False
 
     def _bucket(self) -> Column:
         return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets))
 
-    def _ensure_meta(self) -> None:
-        """Pin (n_buckets, key_cols) to the state table (r9 review): a
-        restart with a DIFFERENT n_buckets re-hashes keys into other
-        buckets while stale rows sit untouched in the old ones —
-        snapshot() then returns two rows per key forever; a different
-        key_cols silently changes merge identity. First merge writes a
-        meta marker; later instances validate against it. Pre-r9 state
-        dirs lack the marker and adopt the current parameters."""
-        import json as _json
+    def _manifest(self, version: int | None = None) -> str:
+        d = os.path.join(self.path, "_manifest")
+        return d if version is None else os.path.join(d, f"{version}.json")
 
-        meta_path = os.path.join(self.path, ".sink-meta.json")
-        want = {
-            "n_buckets": self.n_buckets,
-            "key_cols": list(self.key_cols),
-            "order_cols": list(self.order_cols),
-        }
-        if os.path.isfile(meta_path):
-            try:
-                with open(meta_path) as fh:
-                    have = _json.load(fh)
-            except (OSError, ValueError):
-                have = None
-            if have is not None:
-                # Pre-r10 markers predate order_cols; they were written
-                # by sinks that always merged on the default.
-                have.setdefault("order_cols", list(self.DEFAULT_ORDER))
-            if have is not None and have != want:
-                raise ValueError(
-                    f"SnapshotSink parameters do not match the existing "
-                    f"state table at {self.path}: stored {have}, "
-                    f"constructed {want} — changing n_buckets or key_cols "
-                    "on live state strands rows in stale buckets; rebuild "
-                    "the snapshot (or construct with the stored values)"
-                )
-            if have is not None:
-                return
-        tmp = meta_path + ".tmp"
+    def _versions(self) -> list[int]:
+        """Published manifest versions, oldest first."""
+        try:
+            names = os.listdir(self._manifest())
+        except FileNotFoundError:
+            return []
+        return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
+
+    def _read(self, version: int) -> dict | None:
+        """The manifest, or None when it is unreadable or incomplete."""
+        try:
+            with open(self._manifest(version)) as fh:
+                m = json.load(fh)
+            if {"n_buckets", "key_cols", "order_cols", "schema", "buckets"} <= m.keys():
+                return m
+        except (OSError, ValueError, AttributeError):
+            pass
+        return None
+
+    def _head(self) -> dict | None:
+        """The newest readable manifest; None if none was ever published.
+        Publication is atomic, so an unreadable newest manifest was
+        damaged after the fact: fall back to the newest complete one.
+        With none readable, refuse: guessed parameters would switch off
+        the guard they exist for (r9 review: a different n_buckets
+        strands rows in stale buckets, a different key_cols or
+        order_cols silently changes merge identity)."""
+        versions = self._versions()
+        for v in reversed(versions):
+            m = self._read(v)
+            if m is not None:
+                return m
+        if versions:
+            raise ValueError(
+                f"no readable manifest among {len(versions)} under "
+                f"{self._manifest()}: the state table's parameters are unknown"
+            )
+        return None
+
+    def _params(self) -> dict:
+        return {"n_buckets": self.n_buckets, "key_cols": self.key_cols, "order_cols": self.order_cols}
+
+    def _check(self, head: dict) -> None:
+        want = self._params()
+        have = {k: head[k] for k in want}
+        if have != want:
+            raise ValueError(
+                f"SnapshotSink parameters do not match the existing "
+                f"state table at {self.path}: stored {have}, "
+                f"constructed {want} — changing n_buckets or key_cols "
+                "on live state strands rows in stale buckets; rebuild "
+                "the snapshot (or construct with the stored values)"
+            )
+
+    def _publish(self, version: int, manifest: dict) -> None:
+        os.makedirs(self._manifest(), exist_ok=True)
+        tmp = os.path.join(self._manifest(), ".next.tmp")  # one writer per sink path
         with open(tmp, "w") as fh:
-            _json.dump(want, fh)
-        os.replace(tmp, meta_path)
+            json.dump(manifest, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self._manifest(version))
 
-    # Pre-merge copies parked beside the live dir during a swap. The
-    # leading dot keeps them invisible to Spark's partition discovery,
-    # so even a stale one (writer crashed between rename and rmtree)
-    # can never surface as a bogus partition value in a read.
-    _OLD_PREFIX = ".old-"
+    def _adopt(self, spark) -> dict | None:
+        """Adopt a state dir of the earlier in-place layout — ``_bucket=<b>``
+        dirs swapped by rename beside a ``.sink-meta.json`` parameter
+        marker — once, as version 0. A bucket a crashed swap left parked
+        as ``.old-_bucket=<b>`` is restored when its live dir is missing
+        and dropped otherwise. A missing or unreadable marker is refused
+        like an unreadable manifest."""
+        live = f"{self.BUCKET_COL}="
+        try:
+            entries = os.listdir(self.path)
+        except FileNotFoundError:
+            return None
+        if not any(e.startswith((live, ".old-" + live)) for e in entries):
+            return None
+        marker = os.path.join(self.path, ".sink-meta.json")
+        try:
+            with open(marker) as fh:
+                params = json.load(fh)
+            params.setdefault("order_cols", list(self.DEFAULT_ORDER))  # pre-r10 marker
+            head = {k: params[k] for k in ("n_buckets", "key_cols", "order_cols")}
+        except (OSError, ValueError, AttributeError, KeyError) as exc:
+            raise ValueError(
+                f"cannot adopt the state table at {self.path}: its parameter "
+                f"marker {marker} is missing or unreadable"
+            ) from exc
+        for e in entries:
+            if e.startswith(".old-" + live):
+                old, dst = os.path.join(self.path, e), os.path.join(self.path, e[5:])
+                if os.path.isdir(dst):
+                    shutil.rmtree(old, ignore_errors=True)
+                else:
+                    os.rename(old, dst)
+            elif e.startswith(".tmp-"):
+                shutil.rmtree(os.path.join(self.path, e), ignore_errors=True)
+        parts = sorted(e for e in os.listdir(self.path) if e.startswith(live))
+        # One footer pass, once: the buckets may hold pre- and post-ALTER files.
+        schema = (
+            spark.read.option("mergeSchema", "true")
+            .parquet(*[os.path.join(self.path, p) for p in parts])
+            .schema
+        )
+        head["schema"] = schema.jsonValue()
+        head["buckets"] = {p[len(live):]: p for p in parts}
+        self._publish(0, head)
+        os.remove(marker)
+        return head
 
-    def _recover_locked(self) -> None:
-        """Heal the bucket-swap crash windows (r8 soak review). The swap
-        is rename(dst, .old-dst) → rename(scratch, dst) → rmtree(.old-);
-        a driver crash between the first two steps leaves the bucket
-        ONLY in ``.old-`` (its keys would silently vanish from every
-        later snapshot — the checkpoint will not replay events the sink
-        already consumed), and a crash between the last two leaves a
-        stale ``.old-`` beside the new dir. Both states are unambiguous
-        — the scratch dir lives under ``self.path`` (same filesystem),
-        so the second rename is atomic and a present ``dst`` is always
-        COMPLETE — recovery is mechanical: restore ``.old-`` when the
-        real dir is missing, drop it when present. (Pre-r9 the scratch
-        dir lived in tempfile.gettempdir(); on a different filesystem
-        shutil.move degrades to copytree and a crash mid-copy left a
-        partial dst whose complete ``.old`` twin recovery then deleted
-        — ADVICE r8.)
-
-        Caller must hold ``self._lock``. Runs once per instance (first
-        read or first merge), NOT on every read: a per-read recovery
-        racing a concurrent writer's swap could rename the pre-merge
-        copy back over the writer's in-flight window (ADVICE r8).
-
-        MIGRATION NOTE (r10, VERDICT r9 item 6): the ``<part>.old``
-        suffix branch below heals state dirs written by PRE-r9 sinks
-        that crashed mid-swap and were never reopened since. Any sink
-        opened once by a ≥r9 build is permanently migrated (this
-        healing is one-shot: afterwards only ``.old-`` prefixed names
-        can exist). The branch is test-pinned
-        (tests/test_streaming.py::test_snapshot_sink_crash_recovery)
-        and is kept because deleting it strands exactly the layout it
-        heals — a ``<part>.old`` dir STARTS WITH ``_bucket=`` and would
-        otherwise surface as a corrupt partition value to Spark's
-        partition discovery. Delete branch + test together once pre-r9
-        state dirs are out of support.
-        """
-        if not os.path.isdir(self.path):
-            return
-        for entry in os.listdir(self.path):
-            if entry.startswith(self._OLD_PREFIX):
-                dst_name = entry[len(self._OLD_PREFIX):]
-            elif entry.endswith(".old"):  # pre-r9 layout
-                dst_name = entry[: -len(".old")]
-            else:
+    def _gc(self) -> None:
+        """Delete what no reader can still hold. The newest manifest and
+        every one superseded less than ``RETENTION_S`` ago stay, with
+        the dirs they map; older manifests go, and so do data dirs none
+        of the kept ones maps — among them the unpublished write of a
+        merge that crashed before its publish."""
+        versions = self._versions()
+        now = time.time()
+        keep: set[str] = set()
+        for v, newer in zip(versions, versions[1:] + [None]):
+            if newer is not None and now - os.path.getmtime(self._manifest(newer)) >= RETENTION_S:
+                os.remove(self._manifest(v))
                 continue
-            old = os.path.join(self.path, entry)
-            dst = os.path.join(self.path, dst_name)
-            if os.path.isdir(dst):
-                shutil.rmtree(old, ignore_errors=True)  # crash after swap
-            else:
-                os.rename(old, dst)  # crash mid-swap: pre-merge state back
+            m = self._read(v)
+            if m is not None:
+                keep.update(os.path.dirname(d) or d for d in m["buckets"].values())
+        data = os.path.join(self.path, "data")
+        dirs = [f"data/{e}" for e in os.listdir(data)] if os.path.isdir(data) else []
+        dirs += [e for e in os.listdir(self.path) if e.startswith(self.BUCKET_COL + "=")]
+        for d in dirs:
+            if d not in keep:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
-    def _recover_once(self) -> None:
-        if self._recovered:
-            return
-        with self._lock:
-            if not self._recovered:
-                self._recover_locked()
-                self._recovered = True
-
-    def current(self, spark) -> DataFrame | None:
-        self._recover_once()
-        if not os.path.isdir(self.path):
-            return None
-        # The writer creates the dir (and its hidden scratch) BEFORE the
-        # first swap publishes a bucket; a read in that window — or after
-        # recovery healed everything away — must read as "no state yet",
-        # not an unable-to-infer-schema error on an empty dir.
-        if not any(
-            e.startswith(self.BUCKET_COL + "=") for e in os.listdir(self.path)
-        ):
-            return None
-        # mergeSchema: after a mid-stream ALTER the state table holds
-        # bucket files written under both the pre- and post-ALTER schema;
-        # merged reading widens them into one schema with NULL backfill.
-        return (
-            spark.read.option("basePath", self.path)
-            .option("mergeSchema", "true")
-            .parquet(self.path)
+    def _scan(self, spark, head: dict, dirs) -> DataFrame:
+        return spark.read.schema(T.StructType.fromJson(head["schema"])).parquet(
+            *[os.path.join(self.path, d) for d in dirs]
         )
 
-    def _buckets_of(self, df: DataFrame) -> list[int]:
-        return [r[0] for r in df.select(self.BUCKET_COL).distinct().collect()]
+    def current(self, spark) -> DataFrame | None:
+        """The newest version, tombstones included; None before the
+        first merge. A state dir of the earlier layout reads as None
+        until the writer's first merge adopts it."""
+        head = self._head()
+        return None if head is None else self._scan(spark, head, head["buckets"].values())
+
+    def snapshot(self, spark) -> DataFrame:
+        """The queryable current state (tombstones filtered)."""
+        df = self.current(spark)
+        if df is None:
+            raise FileNotFoundError(f"no snapshot at {self.path}")
+        return df.filter(F.col("event_type") != "delete")
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         """Incremental compaction: merge ONLY the hash buckets the batch
@@ -516,21 +553,17 @@ class SnapshotSink:
         copy-on-write contract a Delta/Iceberg MERGE provides on plain
         parquet. The distinct-bucket list is the only driver round-trip,
         ≤ n_buckets ints."""
-        spark = batch.sparkSession
-        incoming = dedup_exact(batch).withColumn(self.BUCKET_COL, self._bucket())
         # Freeze the batch BEFORE the multi-action merge (r8 soak
         # finding — burst-sized permanent loss on one stream): every
         # action on a partitioned-CDC batch re-executes the live socket
-        # read, so without this the `touched` bucket list (action 1)
-        # and the merged write (action 2) can see DIFFERENT rows. Rows
-        # arriving between the two actions were written under buckets
-        # absent from `touched`, left out of the swap, and permanently
-        # skipped once the frontier passed them. localCheckpoint pins
-        # ONE materialization for every downstream action (and halves
-        # the per-batch server re-dials as a side effect).
-        incoming = incoming.localCheckpoint(eager=True)
+        # read, so without this the `touched` bucket list and the merged
+        # write could see DIFFERENT rows, and rows seen only by the
+        # write would land in buckets the manifest does not remap. The
+        # checkpoint is lazy: the touched-bucket action is its one
+        # materialization, and every later action reads those blocks.
+        incoming = batch.withColumn(self.BUCKET_COL, self._bucket()).localCheckpoint(eager=False)
         try:
-            return self._merge(spark, incoming)
+            self._merge(batch.sparkSession, incoming)
         finally:
             # Free the checkpoint blocks eagerly — on a long-running
             # stream, waiting for the ContextCleaner to GC one frozen
@@ -538,92 +571,48 @@ class SnapshotSink:
             release(incoming)
 
     def _merge(self, spark, incoming: DataFrame) -> None:
-        touched = self._buckets_of(incoming)
+        touched = [r[0] for r in incoming.select(self.BUCKET_COL).distinct().collect()]
         if not touched:
             return
-        # Heal BEFORE reading prev (r9 review): if a swap on THIS
-        # instance failed between its two renames (transient EIO, NFS
-        # hiccup) and the supervised query replays the batch on the same
-        # sink object, _recover_once is already consumed — prev would be
-        # read WITHOUT the parked bucket's state and the re-swap would
-        # then replace the healed dir with merged output built without
-        # those rows, losing every pre-existing key in the bucket. The
-        # writer healing under the swap lock cannot race a reader.
-        with self._lock:
-            self._recover_locked()
-            self._recovered = True
-        os.makedirs(self.path, exist_ok=True)
-        self._ensure_meta()
-        # Read back ONLY the touched buckets' directories (r9 review):
-        # a whole-table read with mergeSchema lists and footer-reads
-        # EVERY file under the path per micro-batch — per-batch cost
-        # growing with total state size, defeating the
-        # |touched|/n_buckets IO bound this sink exists for. Keep
-        # deletes in-state as tombstones so a late replay of an older
-        # event can never resurrect a deleted key; filter tombstones
-        # only at read time (snapshot()).
-        prev_dirs = [
-            os.path.join(self.path, f"{self.BUCKET_COL}={b}")
-            for b in touched
-        ]
-        prev_dirs = [d for d in prev_dirs if os.path.isdir(d)]
-        if prev_dirs:
-            prev_touched = (
-                spark.read.option("basePath", self.path)
-                .option("mergeSchema", "true")
-                .parquet(*prev_dirs)
+        head = self._head() or self._adopt(spark)
+        buckets = {}
+        if head is not None:
+            self._check(head)
+            buckets = dict(head["buckets"])
+            # Read back ONLY the touched buckets' dirs (r9 review): the
+            # per-batch IO stays |touched|/n_buckets of the state.
+            prev = [buckets[str(b)] for b in touched if str(b) in buckets]
+            if prev:
+                # allowMissingColumns: a post-ALTER batch carries columns
+                # the stored snapshot predates (and, on a dropped column,
+                # vice versa) — union the schemas and NULL-fill, the same
+                # backfill MariaDB applies to rows predating an ADD COLUMN.
+                incoming = incoming.unionByName(
+                    self._scan(spark, head, prev).withColumn(self.BUCKET_COL, self._bucket()),
+                    allowMissingColumns=True,
+                )
+        # One aggregate: the per-key max of (order_cols, rest) is the
+        # whole latest row, and one shuffle sized by the touched buckets
+        # leaves each bucket in one task, so in one file.
+        rest = [c for c in incoming.columns if c not in self.key_cols and c != self.BUCKET_COL]
+        latest = F.max(F.struct(*self.order_cols, *[c for c in rest if c not in self.order_cols]))
+        merged = (
+            incoming.repartition(len(touched), self.BUCKET_COL)
+            .groupBy(*self.key_cols, self.BUCKET_COL)
+            .agg(latest.alias(self._LATEST))
+            .select(
+                *self.key_cols,
+                self.BUCKET_COL,
+                *[F.col(self._LATEST)[c].alias(c) for c in rest],
             )
-            # allowMissingColumns: a post-ALTER batch carries columns the
-            # stored snapshot predates (and, on a dropped column, vice
-            # versa) — union the schemas and NULL-fill, the same backfill
-            # MariaDB applies to rows predating an ADD COLUMN.
-            incoming = incoming.unionByName(prev_touched, allowMissingColumns=True)
-        ord_key = F.struct(*[F.col(c) for c in self.order_cols])
-        merged = incoming.groupBy(*self.key_cols, self.BUCKET_COL).agg(
-            *[
-                F.max_by(F.col(c), ord_key).alias(c)
-                for c in incoming.columns
-                if c not in self.key_cols and c != self.BUCKET_COL
-            ]
         )
-        # Rewrite only the touched partition dirs: write to a scratch
-        # dir UNDER self.path — same filesystem, so every move below is
-        # an atomic os.rename and a visible bucket dir is always a
-        # complete one (ADVICE r8: a gettempdir() scratch on another
-        # filesystem made shutil.move a non-atomic copytree). The dot
-        # prefix hides the scratch dir from partition discovery, so
-        # concurrent reads of self.path never see half-written files.
-        # Single-writer contract (one streaming query per sink path):
-        # reap scratch dirs a crashed predecessor left behind. Readers
-        # never touch .tmp- dirs, so this cannot race a live writer.
-        for entry in os.listdir(self.path):
-            if entry.startswith(".tmp-"):
-                shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
-        tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex[:12]}")
-        merged.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(tmp)
-        with self._lock:
-            # Healing already ran before the prev read above; the write
-            # action between cannot park dirs. Swap each touched bucket
-            # atomically.
-            for b in touched:
-                part = f"{self.BUCKET_COL}={b}"
-                src = os.path.join(tmp, part)
-                dst = os.path.join(self.path, part)
-                old = os.path.join(self.path, self._OLD_PREFIX + part)
-                if not os.path.isdir(src):  # all rows in the bucket merged away
-                    continue
-                if os.path.isdir(dst):
-                    os.rename(dst, old)
-                os.rename(src, dst)  # atomic: same filesystem by construction
-                shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    def snapshot(self, spark) -> DataFrame:
-        """The queryable current state (tombstones filtered)."""
-        df = self.current(spark)
-        if df is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        return df.filter(F.col("event_type") != "delete").drop(self.BUCKET_COL)
+        version = max(self._versions(), default=-1) + 1
+        data = f"data/{version}-{uuid.uuid4().hex[:12]}"
+        merged.write.partitionBy(self.BUCKET_COL).parquet(os.path.join(self.path, data))
+        buckets.update({str(b): f"{data}/{self.BUCKET_COL}={b}" for b in touched})
+        schema = merged.drop(self.BUCKET_COL).schema.jsonValue()
+        self._publish(version, {**self._params(), "schema": schema, "buckets": buckets})
+        self._gc()
 
 
 def write_snapshot_stream(

@@ -584,7 +584,7 @@ def _run_kill_supervisor(args) -> int:
             # push history, under the sink's LWW total order — identical
             # assertion to the in-process --conflict soak, but it must
             # now hold across whole-driver SIGKILLs (checkpoint + sink
-            # bucket-swap atomicity across process death, not just
+            # manifest-publish atomicity across process death, not just
             # query restarts inside one JVM).
             # Composed --alter (VERDICT r12 item 6): the winner tuple
             # additionally carries the winning EVENT's recorded ``extra``
@@ -1105,8 +1105,8 @@ def main() -> int:
                     break
             except FileNotFoundError:
                 continue
-            except Exception:  # noqa: BLE001 — a poll racing the live
-                continue  # sink's bucket swap is retried, not fatal
+            except Exception:  # noqa: BLE001 — a failed poll is retried,
+                continue  # not fatal
         if not got:
             # Deadline hit: dump what is missing, as contiguous ranges.
             try:
@@ -1134,15 +1134,14 @@ def main() -> int:
             # Widened-schema value check: every post-ALTER row carries
             # its exact extra value; every pre-ALTER row is NULL-filled
             # (rows written under the old schema read as NULL through
-            # mergeSchema; rows replayed post-ALTER are backfilled by
+            # the manifest's widened schema; rows replayed post-ALTER are backfilled by
             # nullMissingColumns — both must land NULL, never a value).
             from pyspark.sql import functions as F
 
             viol = None
             for _attempt in range(5):
-                # The query is still live here — a read racing an
-                # in-flight bucket swap can raise (same class the drain
-                # loop above retries on); retry, never traceback a
+                # The query is still live here; a failed read is
+                # retried like the drain loop's, never a traceback on a
                 # correct run.
                 try:
                     cur = snap.snapshot(spark)

@@ -851,9 +851,10 @@ def test_two_same_gtid_space_servers_do_not_collide_in_one_sink(
     """End-to-end (VERDICT r8 item 5 'done' criterion): two fake servers
     emitting IDENTICAL (domain, server_id, sequence, event_number)
     envelopes for DIFFERENT rows stream through one partitioned query
-    into one SnapshotSink. The stamped _source_id joins the replay-dedup
-    identity automatically, so all rows survive; without it, dedup_exact
-    would collapse each colliding pair to one arbitrary survivor."""
+    into one SnapshotSink. The rows have distinct keys, so the sink's
+    per-key merge keeps every one of them: it never collapses rows by
+    envelope identity, and the stamped _source_id tells the servers
+    apart in the state."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     n = 10
@@ -924,9 +925,9 @@ def test_active_active_conflicting_writes_reconcile_lww(spark, tmp_path) -> None
     - key 2: B's update is LATER            → B wins
     - key 3: exact timestamp TIE            → _source_id breaks it (B>A)
     - key 4: only A ever wrote it           → A wins trivially
-    The servers also share a GTID space (identical envelopes), so the
-    replay dedup must key on _source_id or conflicting halves vanish
-    before the merge ever sees them."""
+    The servers also share a GTID space (identical envelopes), so only
+    an order that includes _source_id tells the conflicting halves
+    apart."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     T = 1_700_000_000
@@ -1007,7 +1008,7 @@ def test_active_active_conflicting_writes_reconcile_lww(spark, tmp_path) -> None
         finally:
             query.stop()
     # Restarting on the live state with a DIFFERENT ordering is refused
-    # (meta pin): silently changing merge identity corrupts reconciliation.
+    # (manifest pin): silently changing merge identity corrupts reconciliation.
     import pytest as _pytest
     from pyspark.sql import functions as F
 

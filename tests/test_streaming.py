@@ -31,6 +31,20 @@ def _write_log(path: str, events: list[dict]) -> None:
             fh.write(json.dumps(e) + "\n")
 
 
+def _sink_events(spark, events: list[dict]):
+    """Decoded CDC events as one SnapshotSink batch."""
+    from maxscale_cdc_connector_spark.operators.cdc import decode_events
+    from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
+
+    lines = [(json.dumps(e),) for e in events]
+    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
+    return decode_events(spark.createDataFrame(lines, "value string"), schema)
+
+
+def _snapshot_ids(sink, spark) -> list[int]:
+    return sorted(r["id"] for r in sink.snapshot(spark).collect())
+
+
 @pytest.fixture(scope="module")
 def event_log(tmp_path_factory) -> tuple[str, list[dict]]:
     """Two log files (⇒ ≥2 micro-batches with maxFilesPerTrigger=1):
@@ -306,40 +320,21 @@ def test_watermark_drops_late_event(spark, tmp_path) -> None:
 
 
 def test_snapshot_sink_incremental_and_idempotent(spark, tmp_path) -> None:
-    """Only hash buckets touched by a batch are rewritten, and applying
-    the same batch twice leaves the state unchanged (restart safety)."""
-    import os as _os
-
-    from maxscale_cdc_connector_spark.operators.cdc import decode_events
+    """Only hash buckets touched by a batch are rewritten (exactly one
+    manifest entry changes), and applying the same batch twice leaves
+    the state unchanged (restart safety)."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-    from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
-
-    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
-
-    def as_df(events):
-        import json as _json
-
-        lines = [( _json.dumps(e), ) for e in events]
-        return decode_events(spark.createDataFrame(lines, "value string"), schema)
 
     sink = SnapshotSink(str(tmp_path / "state"), ["id"], n_buckets=8)
-    sink(as_df([make_event(s, id_=s) for s in range(1, 129)]), 0)
-
-    def bucket_mtimes():
-        return {
-            d: _os.stat(_os.path.join(sink.path, d)).st_mtime_ns
-            for d in _os.listdir(sink.path)
-            if d.startswith("_bucket=")
-        }
-
-    before = bucket_mtimes()
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 129)]), 0)
+    before = dict(sink._head()["buckets"])
     assert len(before) == 8  # 128 keys cover all 8 buckets
 
-    # Batch 2 updates a single key → exactly one bucket dir rewritten.
-    single = as_df([make_event(1000, "update_after", 2, id_=7, name="seven2")])
+    # Batch 2 updates a single key → exactly one bucket remapped.
+    single = _sink_events(spark, [make_event(1000, "update_after", 2, id_=7, name="seven2")])
     sink(single, 1)
-    after = bucket_mtimes()
-    changed = {d for d in after if after[d] != before.get(d)}
+    after = sink._head()["buckets"]
+    changed = {b for b in after if after[b] != before.get(b)}
     assert len(changed) == 1, f"expected 1 rewritten bucket, got {changed}"
 
     # Idempotency: re-applying the same batch yields identical state.
@@ -414,149 +409,146 @@ def test_snapshot_sink_consistent_under_reexecuting_source(spark, tmp_path) -> N
     )
 
 
-def test_snapshot_sink_recovers_interrupted_bucket_swap(spark, tmp_path) -> None:
-    """Both driver-crash windows of the bucket swap heal on the next
-    process's first read (r8 soak review, restated per ADVICE r8: a
-    crashed driver is a NEW sink instance, and recovery runs once per
-    instance instead of on every read so a concurrent reader can never
-    rewrite a live writer's in-flight swap). A bucket left ONLY under
-    the parked pre-merge name (crash between the two renames — its keys
-    would otherwise vanish forever, the checkpoint never replays
-    consumed events) is restored, and a stale parked copy beside a
-    swapped-in dir (crash before rmtree) is dropped. Both the r9 hidden
-    ``.old-<part>`` layout and the pre-r9 ``<part>.old`` suffix heal."""
-    import os as _os
-    import shutil as _shutil
-
-    from maxscale_cdc_connector_spark.operators.cdc import decode_events
-    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-    from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
-
-    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
-
-    def as_df(events):
-        import json as _json
-
-        lines = [(_json.dumps(e),) for e in events]
-        return decode_events(spark.createDataFrame(lines, "value string"), schema)
-
-    path = str(tmp_path / "state")
-    sink = SnapshotSink(path, ["id"], n_buckets=4)
-    sink(as_df([make_event(s, id_=s) for s in range(1, 65)]), 0)
-    want = sorted(r["id"] for r in sink.snapshot(spark).collect())
-    buckets = sorted(
-        d for d in _os.listdir(sink.path) if d.startswith("_bucket=")
-    )
-    assert len(buckets) == 4
-
-    # Window 1: crash between rename(dst, .old-dst) and rename(src, dst)
-    # — r9 hidden layout. A fresh instance (post-crash driver) heals it.
-    b0 = _os.path.join(path, buckets[0])
-    _os.rename(b0, _os.path.join(path, ".old-" + buckets[0]))
-    sink2 = SnapshotSink(path, ["id"], n_buckets=4)
-    assert sorted(r["id"] for r in sink2.snapshot(spark).collect()) == want
-
-    # Window 2: crash between rename(src, dst) and rmtree — the new dir
-    # is live, the parked copy is stale garbage. Exercise the legacy
-    # pre-r9 ``<part>.old`` suffix to pin backward-compatible healing.
-    b1 = _os.path.join(path, buckets[1])
-    _shutil.copytree(b1, b1 + ".old")
-    sink3 = SnapshotSink(path, ["id"], n_buckets=4)
-    assert sorted(r["id"] for r in sink3.snapshot(spark).collect()) == want
-    assert not any(
-        d.endswith(".old") or d.startswith(".old-")
-        for d in _os.listdir(path)
-    )
-
-    # Even though a bucket dir briefly went missing above, the hidden
-    # parked name must never have surfaced as a partition value.
-    assert all(
-        d.startswith(("_bucket=", ".")) for d in _os.listdir(path)
-    )
+def _crash(*_args) -> None:
+    raise RuntimeError("driver died here")
 
 
-def test_snapshot_sink_same_instance_retry_heals_before_merge(
-    spark, tmp_path
+def test_snapshot_sink_crash_before_publish_keeps_previous_version(
+    spark, tmp_path, monkeypatch
 ) -> None:
-    """r9 review finding: a swap that fails between its two renames on
-    THIS instance leaves the bucket parked while ``_recovered`` is
-    already consumed; the supervised query replays the batch on the
-    same sink object. The merge must heal BEFORE reading prev, or the
-    re-swap replaces the healed bucket with merged output built without
-    its pre-existing keys — permanent loss the checkpoint never
-    replays."""
-    import os as _os
-
-    from maxscale_cdc_connector_spark.operators.cdc import decode_events
+    """A driver crash after a merge wrote its data dir but before it
+    published the manifest leaves the previous version current: a read
+    on the same or a fresh instance sees exactly it and leaves the
+    unpublished dir alone (readers never write). The next merge — a
+    fresh instance, as after a restart — deletes that dir, since no
+    manifest maps it."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-    from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
-
-    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
-
-    def as_df(events):
-        import json as _json
-
-        lines = [(_json.dumps(e),) for e in events]
-        return decode_events(spark.createDataFrame(lines, "value string"), schema)
 
     path = str(tmp_path / "state")
+    data = os.path.join(path, "data")
     sink = SnapshotSink(path, ["id"], n_buckets=4)
-    sink(as_df([make_event(s, id_=s) for s in range(1, 65)]), 0)
-    want = sorted(r["id"] for r in sink.snapshot(spark).collect())
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)]), 0)
+    want = _snapshot_ids(sink, spark)
+    published = set(os.listdir(data))
 
-    # Simulate the failed-swap window on the SAME instance: one bucket
-    # parked under its pre-merge name, _recovered already True.
-    buckets = sorted(d for d in _os.listdir(path) if d.startswith("_bucket="))
-    _os.rename(
-        _os.path.join(path, buckets[0]),
-        _os.path.join(path, ".old-" + buckets[0]),
-    )
-    # Apply a batch of NEW keys (32 ids → touches every bucket with
-    # certainty under the fixed xxhash64 bucketing), still on the same
-    # instance. The parked bucket's pre-existing keys are NOT in this
-    # batch, so without the pre-prev heal they cannot be rebuilt from
-    # incoming and the re-swap destroys them.
-    sink(as_df([make_event(100 + i, id_=100 + i) for i in range(32)]), 1)
+    monkeypatch.setattr(sink, "_publish", _crash)
+    with pytest.raises(RuntimeError, match="driver died"):
+        sink(_sink_events(spark, [make_event(100 + i, id_=100 + i) for i in range(32)]), 1)
+    orphan = set(os.listdir(data)) - published
+    assert len(orphan) == 1
+
+    for reader in (sink, SnapshotSink(path, ["id"], n_buckets=4)):
+        assert _snapshot_ids(reader, spark) == want
+    assert set(os.listdir(data)) - published == orphan
+
+    restarted = SnapshotSink(path, ["id"], n_buckets=4)
+    restarted(_sink_events(spark, [make_event(200, id_=200)]), 1)
+    assert not orphan & set(os.listdir(data))
+    assert _snapshot_ids(restarted, spark) == sorted(want + [200])
+
+
+def test_snapshot_sink_same_instance_retry_after_failed_publish(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """r9 review finding, on the manifest layout: a merge that fails on
+    THIS instance after its data write (the publish raised) is replayed
+    by the supervised query on the same sink object. The retry must
+    merge against the still-current previous version — every
+    pre-existing key kept — and leave no unpublished dir behind."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    path = str(tmp_path / "state")
+    data = os.path.join(path, "data")
+    sink = SnapshotSink(path, ["id"], n_buckets=4)
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)]), 0)
+    want = _snapshot_ids(sink, spark)
+    published = set(os.listdir(data))
+
+    # 32 new ids touch every bucket with certainty under the fixed
+    # xxhash64 bucketing, so a retry built without the previous state
+    # would lose keys in all of them.
+    batch = _sink_events(spark, [make_event(100 + i, id_=100 + i) for i in range(32)])
+    monkeypatch.setattr(sink, "_publish", _crash)
+    with pytest.raises(RuntimeError, match="driver died"):
+        sink(batch, 1)
+    orphan = set(os.listdir(data)) - published
+    monkeypatch.undo()
+    sink(batch, 1)
+    got = _snapshot_ids(sink, spark)
     want = sorted(want + [100 + i for i in range(32)])
-    got = sorted(r["id"] for r in sink.snapshot(spark).collect())
-    assert got == want, (
-        f"keys lost across same-instance failed-swap retry: "
-        f"{sorted(set(want) - set(got))[:10]} missing"
-    )
+    assert got == want, f"keys lost across the retry: {sorted(set(want) - set(got))[:10]}"
+    assert orphan and not orphan & set(os.listdir(data))
 
 
-def test_snapshot_sink_recovery_runs_once_per_instance(spark, tmp_path) -> None:
-    """ADVICE r8: recovery must NOT re-run on every read — a concurrent
-    reader's recovery landing inside a writer's swap window would rename
-    the parked pre-merge copy back over the in-flight swap. Pin the
-    contract: after the first read, a parked dir appearing on disk is
-    left alone by the same instance (only a fresh instance heals it)."""
-    import os as _os
-    import shutil as _shutil
-
-    from maxscale_cdc_connector_spark.operators.cdc import decode_events
+def test_snapshot_sink_crash_after_publish_loses_nothing(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A driver crash right after the publish (before garbage
+    collection) loses nothing: a fresh instance reads the new version.
+    Superseded dirs stay while a reader may still hold them — for
+    RETENTION_S after the newer version's publish — and the first merge
+    after that deletes them with their manifests; the newest version is
+    never deleted."""
+    from maxscale_cdc_connector_spark.streaming import ops
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-    from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
-
-    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
-
-    def as_df(events):
-        import json as _json
-
-        lines = [(_json.dumps(e),) for e in events]
-        return decode_events(spark.createDataFrame(lines, "value string"), schema)
 
     path = str(tmp_path / "state")
     sink = SnapshotSink(path, ["id"], n_buckets=4)
-    sink(as_df([make_event(s, id_=s) for s in range(1, 65)]), 0)
-    sink.snapshot(spark)  # first read: recovery consumed here
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)]), 0)
+    monkeypatch.setattr(sink, "_gc", _crash)
+    with pytest.raises(RuntimeError, match="driver died"):
+        sink(_sink_events(spark, [make_event(100, id_=100)]), 1)
 
-    buckets = sorted(d for d in _os.listdir(path) if d.startswith("_bucket="))
-    parked = _os.path.join(path, ".old-" + buckets[0])
-    _shutil.copytree(_os.path.join(path, buckets[0]), parked)
-    sink.snapshot(spark)  # same instance: must NOT touch the parked dir
-    assert _os.path.isdir(parked)
-    _shutil.rmtree(parked)
+    restarted = SnapshotSink(path, ["id"], n_buckets=4)
+    assert _snapshot_ids(restarted, spark) == list(range(1, 65)) + [100]
+    restarted(_sink_events(spark, [make_event(101, id_=101)]), 2)
+    assert restarted._versions() == [0, 1, 2]  # v0 superseded just now
+
+    monkeypatch.setattr(ops, "RETENTION_S", 0.0)
+    restarted(_sink_events(spark, [make_event(102, id_=102)]), 3)
+    head = restarted._head()
+    assert restarted._versions() == [3]
+    mapped = {os.path.dirname(d) for d in head["buckets"].values()}
+    assert {f"data/{d}" for d in os.listdir(os.path.join(path, "data"))} == mapped
+    assert _snapshot_ids(restarted, spark) == list(range(1, 65)) + [100, 101, 102]
+
+
+def test_snapshot_sink_adopts_legacy_layout_once(spark, tmp_path) -> None:
+    """A state dir of the earlier in-place layout — ``_bucket=<b>`` dirs
+    beside a ``.sink-meta.json`` marker, one bucket left parked as
+    ``.old-_bucket=<b>`` by a swap that crashed between its renames and
+    another with a stale parked copy beside it — is adopted once, as
+    version 0, by the first merge. An unreadable marker is refused: it
+    is never replaced by the constructing instance's parameters."""
+    import shutil
+
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    path = str(tmp_path / "state")
+    legacy = SnapshotSink(path, ["id"], n_buckets=4)
+    rows = _sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)])
+    rows.withColumn("_bucket", legacy._bucket()).write.partitionBy("_bucket").parquet(path)
+    parts = sorted(d for d in os.listdir(path) if d.startswith("_bucket="))
+    assert len(parts) == 4
+    os.rename(os.path.join(path, parts[0]), os.path.join(path, ".old-" + parts[0]))
+    shutil.copytree(os.path.join(path, parts[1]), os.path.join(path, ".old-" + parts[1]))
+    marker = os.path.join(path, ".sink-meta.json")
+
+    with open(marker, "w") as fh:
+        fh.write("{torn")
+    with pytest.raises(ValueError, match="sink-meta"):
+        SnapshotSink(path, ["id"], n_buckets=8)(_sink_events(spark, [make_event(99, id_=99)]), 0)
+
+    with open(marker, "w") as fh:
+        json.dump({"n_buckets": 4, "key_cols": ["id"]}, fh)  # pre-r10: no order_cols
+    sink = SnapshotSink(path, ["id"], n_buckets=4)
+    assert sink.current(spark) is None  # readers wait for the writer's adoption
+    sink(_sink_events(spark, [make_event(100, id_=100)]), 0)
+    sink(_sink_events(spark, [make_event(101, id_=101)]), 1)
+    assert sink._versions() == [0, 1, 2]
+    assert sorted(sink._read(0)["buckets"].values()) == parts
+    assert _snapshot_ids(sink, spark) == list(range(1, 65)) + [100, 101]
+    assert not [d for d in os.listdir(path) if d.startswith(".old-") or d == ".sink-meta.json"]
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path) -> None:
@@ -1020,32 +1012,126 @@ def test_dedup_exact_rejects_missing_identity_columns(spark) -> None:
 def test_snapshot_sink_rejects_changed_parameters(spark, tmp_path) -> None:
     """r9 review: restarting a sink with a different n_buckets re-hashes
     keys into new buckets while stale rows sit untouched in old ones —
-    two rows per key forever. The meta marker written on first merge
-    makes the mismatch a loud constructor-time... merge-time error."""
-    import pytest as _pytest
-
-    from maxscale_cdc_connector_spark.operators.cdc import decode_events
+    two rows per key forever. The parameters every manifest records
+    make the mismatch a loud merge-time error."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-    from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
-
-    schema = schema_record_to_struct(TEST_SCHEMA_RECORD)
-
-    def as_df(events):
-        import json as _json
-
-        lines = [(_json.dumps(e),) for e in events]
-        return decode_events(spark.createDataFrame(lines, "value string"), schema)
 
     path = str(tmp_path / "state")
-    SnapshotSink(path, ["id"], n_buckets=8)(as_df([make_event(1, id_=1)]), 0)
+    SnapshotSink(path, ["id"], n_buckets=8)(_sink_events(spark, [make_event(1, id_=1)]), 0)
     # Same parameters: fine.
-    SnapshotSink(path, ["id"], n_buckets=8)(as_df([make_event(2, id_=2)]), 1)
+    SnapshotSink(path, ["id"], n_buckets=8)(_sink_events(spark, [make_event(2, id_=2)]), 1)
     # Different n_buckets: refused before any corruption.
-    with _pytest.raises(ValueError, match="n_buckets"):
-        SnapshotSink(path, ["id"], n_buckets=4)(as_df([make_event(3, id_=3)]), 2)
+    with pytest.raises(ValueError, match="n_buckets"):
+        SnapshotSink(path, ["id"], n_buckets=4)(_sink_events(spark, [make_event(3, id_=3)]), 2)
     # Different key_cols: refused too.
-    with _pytest.raises(ValueError, match="key_cols|stored"):
-        SnapshotSink(path, ["name"], n_buckets=8)(as_df([make_event(4, id_=4)]), 3)
+    with pytest.raises(ValueError, match="key_cols|stored"):
+        SnapshotSink(path, ["name"], n_buckets=8)(_sink_events(spark, [make_event(4, id_=4)]), 3)
+
+
+def test_snapshot_sink_unreadable_manifest_keeps_parameter_guard(spark, tmp_path) -> None:
+    """An unreadable newest manifest falls back to the newest complete
+    one, and with none readable the sink refuses: the stored parameters
+    are never replaced by the constructing instance's guess."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    path = str(tmp_path / "state")
+    sink = SnapshotSink(path, ["id"], n_buckets=8)
+    sink(_sink_events(spark, [make_event(1, id_=1)]), 0)
+    sink(_sink_events(spark, [make_event(2, id_=2)]), 1)
+    with open(sink._manifest(1), "w") as fh:
+        fh.write('{"n_buckets": 4')
+    assert _snapshot_ids(sink, spark) == [1]  # version 0
+    batch = _sink_events(spark, [make_event(3, id_=3)])
+    with pytest.raises(ValueError, match="n_buckets"):
+        SnapshotSink(path, ["id"], n_buckets=4)(batch, 2)
+    with open(sink._manifest(0), "w") as fh:
+        fh.write("garbage")
+    with pytest.raises(ValueError, match="no readable manifest"):
+        SnapshotSink(path, ["id"], n_buckets=4)(batch, 2)
+
+
+def test_snapshot_sink_merge_job_budget(spark, tmp_path) -> None:
+    """One merge of a multi-bucket batch into existing state launches at
+    most 4 Spark jobs: two for the touched-bucket list (the first is the
+    frozen read), the shuffle into the touched buckets and the write —
+    no replay-dedup shuffle and no footer-inference job. A fresh
+    instance's snapshot() launches none."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "state")
+    SnapshotSink(path, ["id"], n_buckets=8)(
+        _sink_events(spark, [make_event(s, id_=s) for s in range(1, 129)]), 0
+    )
+    sink = SnapshotSink(path, ["id"], n_buckets=8)
+    batch = _sink_events(spark, [make_event(1000 + s, "update_after", 2, id_=s) for s in range(1, 33)])
+    try:
+        sc.setJobGroup("snapshot-sink-merge", "one merge")
+        sink(batch, 1)
+        sc.setJobGroup("snapshot-sink-read", "one snapshot() call")
+        snap = SnapshotSink(path, ["id"], n_buckets=8).snapshot(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sink._head()["buckets"]) == 8
+    merge_jobs = sc.statusTracker().getJobIdsForGroup("snapshot-sink-merge")
+    assert 0 < len(merge_jobs) <= 4, f"{len(merge_jobs)} jobs for one merge"
+    assert sc.statusTracker().getJobIdsForGroup("snapshot-sink-read") == []
+    assert snap.count() == 128
+
+
+def test_snapshot_sink_reads_isolated_from_merges(spark, tmp_path) -> None:
+    """A reader looping snapshot() plus an aggregate beside 200 small
+    merges sees no error. Each read opens the dirs one published
+    manifest maps, which no merge modifies and garbage collection keeps
+    for RETENTION_S — there is no bucket swap to race (the in-place
+    layout failed here: file not found on a swapped bucket's file)."""
+    import threading
+
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    n_keys, n_merges = 8, 200
+
+    def batch(k):
+        return spark.range(0, n_keys, 1, 1).select(
+            F.lit(0).alias("domain"),
+            F.lit(3000).alias("server_id"),
+            (F.col("id") + n_keys * k).alias("sequence"),
+            F.lit(1).alias("event_number"),
+            F.lit("update_after").alias("event_type"),
+            F.col("id").cast("int").alias("id"),
+            F.lit(k).alias("version"),
+        )
+
+    path = str(tmp_path / "state")
+    writer = SnapshotSink(path, ["id"], n_buckets=4)
+    writer(batch(0), 0)
+    reader = SnapshotSink(path, ["id"], n_buckets=4)
+    errors: list[BaseException] = []
+    reads = 0
+    done = threading.Event()
+
+    def read_loop() -> None:
+        nonlocal reads
+        while not done.is_set():
+            try:
+                rows = reader.snapshot(spark).groupBy("version").count().collect()
+                assert sum(r["count"] for r in rows) == n_keys
+                reads += 1
+            except BaseException as exc:  # noqa: BLE001 — every failure is the finding
+                errors.append(exc)
+
+    thread = threading.Thread(target=read_loop, daemon=True)
+    thread.start()
+    try:
+        for k in range(1, n_merges + 1):
+            writer(batch(k), k)
+    finally:
+        done.set()
+        thread.join(60)
+    assert not errors, f"{len(errors)} of {reads + len(errors)} reads failed: {errors[0]!r}"
+    assert reads > 0
+    final = reader.snapshot(spark).collect()
+    assert {(r["id"], r["version"]) for r in final} == {(i, n_merges) for i in range(n_keys)}
 
 
 def test_windowed_agg_watermark_covers_column_event_time(spark, event_log) -> None:
