@@ -32,7 +32,8 @@ that is valid wherever executors share the driver's filesystem (every
 On a multi-host cluster, set it to a shared path next to the checkpoint.
 
 Tuning options: ``maxRecordsPerBatch`` (per-stream micro-batch cap),
-``pollSeconds`` (idle timeout ending a batch), ``arrowCpus`` (size of
+``pollSeconds`` (idle timeout ending a batch: a read ends one
+``pollSeconds`` of silence after its last byte), ``arrowCpus`` (size of
 the Arrow parse pool each read task restores — PySpark workers export
 ``OMP_NUM_THREADS=1``, which would otherwise serialize ``pyarrow.json``;
 default 4).

@@ -21,7 +21,9 @@ Design differences from the reference (deliberate, Spark-first):
 
 * Timeouts surface as ``None`` from :meth:`CDCClient.read_raw_block`
   (and :meth:`CDCClient.read_record`) — the Structured Streaming reader
-  maps the block read's ``None`` to an empty micro-batch.
+  maps the block read's ``None`` to the end of its micro-batch. The
+  block read keeps one silence clock across calls, so a read is idle
+  one timeout after its last byte, not one timeout after each call.
 * A mid-stream schema record raises :class:`SchemaChangedError` carrying
   the new schema: a Spark streaming query has a fixed schema, so the
   query must stop and be restarted with the new schema (SURVEY.md §7
@@ -124,6 +126,12 @@ class CDCClient:
         self._pos = 0  # consumed prefix of _buf (compacted lazily)
         self.schema_record: dict[str, Any] | None = None
         self._streaming = False  # handshake done, data may flow
+        # The idle clock of read_raw_block: seconds of silence observed
+        # in recv since bytes last arrived (zero through connect(), whose
+        # last bytes are the leading schema record; reset by every
+        # non-empty recv). Idle is ``timeout`` of it, however many calls
+        # it spans.
+        self._quiet_s = 0.0
 
     # -- session ------------------------------------------------------------
 
@@ -192,6 +200,8 @@ class CDCClient:
         Raises :class:`SchemaChangedError` when the server pushes a new
         schema record mid-stream.
         """
+        assert self._sock is not None, "not connected"
+        self._sock.settimeout(self.timeout)  # read_raw_block narrows it
         obj = self._read_json(allow_timeout=True)
         if obj is None:
             return None
@@ -215,20 +225,25 @@ class CDCClient:
         tolerant. Disconnection with complete lines in hand returns
         them first; the NEXT call raises ``ConnectionError``.
 
+        Idle is ``timeout`` of silence since bytes last arrived, not
+        since this call began: each recv waits only what remains of it
+        (``_quiet_s`` sums the silence recv has seen). A block that ended
+        on silence has spent all of it, so the next call returns ``None``
+        without a recv, and a read ends one ``timeout`` after its last
+        byte. Time between calls is not counted: bytes may have arrived
+        unread while the caller was busy.
+
         ``max_seconds`` bounds ACCUMULATION time: a steady trickle whose
         inter-event gaps stay below the socket timeout would otherwise
         keep this call collecting toward ``max_lines`` indefinitely
-        (never idle, cap hours away at low rates). Past the budget the
-        lines in hand are returned — at most one socket-timeout of
-        overshoot (one in-flight recv).
+        (never idle, cap hours away at low rates). With lines in hand, a
+        recv waits no longer than the budget's remainder.
         """
         assert self._sock is not None, "not connected"
         deadline = None if max_seconds is None else time.monotonic() + max_seconds
         parts: list[bytes] = []
         n = 0
         while n < max_lines:
-            if deadline is not None and parts and time.monotonic() > deadline:
-                break
             last_nl = self._buf.rfind(b"\n", self._pos)
             if last_nl >= self._pos:
                 region = bytes(self._buf[self._pos : last_nl])
@@ -259,14 +274,22 @@ class CDCClient:
                 continue
             if len(self._buf) - self._pos > MAX_LINE_BYTES:
                 raise CDCProtocolError("CDC event line exceeds 16 MiB bound")
+            wait = self.timeout - self._quiet_s
+            if parts and deadline is not None:
+                wait = min(wait, deadline - time.monotonic())
+            if wait <= 0:  # settimeout(0) would mean non-blocking
+                break
+            self._sock.settimeout(wait)
             try:
                 chunk = self._sock.recv(1 << 20)
             except (TimeoutError, socket.timeout):
+                self._quiet_s += wait
                 break
             if not chunk:
                 if parts:
                     break
                 raise ConnectionError("CDC server closed the connection")
+            self._quiet_s = 0.0
             self._buf.extend(chunk)
         if not parts:
             return None

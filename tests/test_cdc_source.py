@@ -224,6 +224,48 @@ def test_reader_empty_batch_on_idle() -> None:
         reader.stop()
 
 
+def test_reader_ends_one_poll_after_the_last_byte() -> None:
+    """A read ends one ``pollSeconds`` after its last byte, not two: the
+    block that ended on silence has used the whole idle timeout, so the
+    prefetch thread's next block read returns at once."""
+    events = [make_event(s) for s in range(1, 2001)]
+    with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
+        reader = _reader(srv, pollseconds="1.0")
+        t0 = time.monotonic()
+        rows, end = _drain(reader, reader.initialOffset())
+        backlog_s = time.monotonic() - t0
+        assert len(rows) == 2000
+        # At rest: the re-dial replays the resume GTID and the cursor
+        # drops it, so this read delivers nothing.
+        t0 = time.monotonic()
+        rows, _ = _drain(reader, end)
+        at_rest_s = time.monotonic() - t0
+        assert rows == []
+        assert backlog_s < 1.6 and at_rest_s < 1.6, (backlog_s, at_rest_s)
+        reader.stop()
+
+
+def test_reader_silence_shorter_than_poll_keeps_reading() -> None:
+    """Two bursts pushed 0.5 s apart, under ``pollSeconds=1.0``, arrive
+    in one read: idle never fires before a full timeout of silence."""
+    import threading
+
+    with FakeMaxScale(TEST_SCHEMA_RECORD, [make_event(s) for s in range(1, 101)]) as srv:
+        reader = _reader(srv, pollseconds="1.0")
+
+        def second_burst() -> None:
+            for s in range(101, 201):
+                srv.push_event(make_event(s))
+
+        timer = threading.Timer(0.5, second_burst)
+        timer.start()
+        rows, _ = _drain(reader, reader.initialOffset())
+        timer.join(timeout=10)
+        assert not timer.is_alive()
+        assert sorted(r[2] for r in rows) == list(range(1, 201))
+        reader.stop()
+
+
 def test_reader_dense_row_enforced() -> None:
     broken = make_event(1)
     del broken["name"]
@@ -304,6 +346,9 @@ class _ScriptedSocket:
             raise TimeoutError
         return self._chunks.pop(0)
 
+    def settimeout(self, _t):
+        pass
+
 
 def _framed_client() -> CDCClient:
     c = CDCClient("h", 0, "u", "p", "t")
@@ -341,12 +386,7 @@ def test_framing_malformed_json_raises() -> None:
 
 def test_framing_disconnect_raises() -> None:
     c = _framed_client()
-
-    class _Closed:
-        def recv(self, _n):
-            return b""
-
-    c._sock = _Closed()
+    c._sock = _ScriptedSocket([b""])  # recv() == b"": the server closed
     with pytest.raises(ConnectionError):
         c.read_record()
 

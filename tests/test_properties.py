@@ -4,7 +4,10 @@ event-order permutation, typemap totality/round-trips, GTID round-trip.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import types
+from unittest import mock
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -473,10 +476,14 @@ def test_merge_upsert_equals_replay_for_any_split(spark, events, data) -> None:
 
 
 class _ScriptedSocket:
-    """recv() plays back a fixed byte stream in scripted chunk sizes,
-    then raises socket.timeout (the protocol's legal idle state)."""
+    """recv() plays back a fixed byte stream in scripted chunk sizes on a
+    fake clock (``now``): chunk i arrives ``gaps[i]`` seconds after the
+    one before it (default 0). When the socket timeout runs out first,
+    recv advances the clock by that timeout and raises socket.timeout
+    (the protocol's legal idle state); after the last chunk the stream
+    stays silent."""
 
-    def __init__(self, stream: bytes, cuts: list[int]) -> None:
+    def __init__(self, stream: bytes, cuts, gaps=()) -> None:
         self._chunks: list[bytes] = []
         pos = 0
         for c in sorted(set(cuts)):
@@ -485,13 +492,46 @@ class _ScriptedSocket:
                 pos = c
         self._chunks.append(stream[pos:])
         self._chunks = [c for c in self._chunks if c]
+        self._gaps = list(gaps)[: len(self._chunks)]
+        self._gaps += [0.0] * (len(self._chunks) - len(self._gaps))
+        self.now = 0.0
+        self.timeout: float | None = None
+        self.recvs = 0
+        self.timeouts = 0
+
+    def settimeout(self, timeout: float) -> None:
+        self.timeout = timeout
 
     def recv(self, _n: int) -> bytes:
         import socket as _socket
 
-        if not self._chunks:
+        self.recvs += 1
+        gap = self._gaps[0] if self._chunks else float("inf")
+        if gap > self.timeout:
+            self.now += self.timeout
+            if self._chunks:
+                self._gaps[0] -= self.timeout
+            self.timeouts += 1
             raise _socket.timeout()
+        self.now += gap
+        self._gaps.pop(0)
         return self._chunks.pop(0)
+
+
+@contextlib.contextmanager
+def _scripted_client(stream: bytes, cuts=(), gaps=(), timeout: float = 10.0):
+    """A streaming CDCClient on a _ScriptedSocket whose clock stands in
+    for ``protocol.time``; yields ``(client, sock)``."""
+    from maxscale_cdc_connector_spark.sources import protocol
+
+    client = protocol.CDCClient("h", 1, "u", "p", "db.t", timeout=timeout)
+    sock = _ScriptedSocket(stream, cuts, gaps)
+    sock.settimeout(timeout)  # as connect() leaves it
+    client._sock = sock  # type: ignore[assignment]
+    client._streaming = True
+    clock = types.SimpleNamespace(monotonic=lambda: sock.now)
+    with mock.patch.object(protocol, "time", clock):
+        yield client, sock
 
 
 @settings(max_examples=60, deadline=None)
@@ -513,23 +553,56 @@ def test_read_raw_block_is_chunking_invariant(lines, cuts, cap) -> None:
     """However the TCP stream is cut into recv() chunks, wherever blank
     lines appear, and whatever the per-call line cap, read_raw_block
     must reassemble EXACTLY the sent non-blank lines, report exact line
-    counts, and end with a clean idle None."""
-    from maxscale_cdc_connector_spark.sources.protocol import CDCClient
-
+    counts, and end with a clean idle None — after exactly one timeout
+    of silence, however the blocks fell."""
     stream = b"".join(ln + b"\n" for ln in lines)
     lines = [ln for ln in lines if ln]  # blank lines must be filtered out
-    client = CDCClient("h", 1, "u", "p", "db.t")
-    client._sock = _ScriptedSocket(stream, cuts)  # type: ignore[assignment]
-    client._streaming = True
 
     got: list[bytes] = []
-    while True:
-        blk = client.read_raw_block(cap)
-        if blk is None:
-            break
-        block, n = blk
-        part = block.split(b"\n")
-        assert len(part) == n, "reported line count must match the block"
-        assert all(p for p in part), "no empty lines may be emitted"
-        got.extend(part)
+    with _scripted_client(stream, cuts) as (client, sock):
+        while True:
+            blk = client.read_raw_block(cap)
+            if blk is None:
+                break
+            block, n = blk
+            part = block.split(b"\n")
+            assert len(part) == n, "reported line count must match the block"
+            assert all(p for p in part), "no empty lines may be emitted"
+            got.extend(part)
     assert got == lines
+    assert sock.timeouts == 1 and sock.now == client.timeout
+
+
+def test_read_raw_block_idle_spans_calls() -> None:
+    """A block that ended on a full timeout of silence leaves nothing to
+    wait for: the next call is idle at once, without a recv."""
+    with _scripted_client(b"a\nb\n", timeout=1.0) as (client, sock):
+        assert client.read_raw_block(100) == (b"a\nb", 2)
+        assert sock.now == 1.0
+        recvs = sock.recvs
+        assert client.read_raw_block(100) is None
+        assert sock.recvs == recvs and sock.now == 1.0
+
+
+def test_read_raw_block_returns_by_its_budget() -> None:
+    """Lines 0.375 s apart never make a timeout of silence, so only
+    ``max_seconds`` ends a block — at the budget, not one recv later —
+    and silence seen before that counts toward the idle end."""
+    stream = b"0\n1\n2\n3\n"
+    with _scripted_client(stream, [2, 4, 6], [0.375] * 4, 1.0) as (client, sock):
+        assert client.read_raw_block(100, max_seconds=1.0) == (b"0\n1", 2)
+        assert sock.now == 1.0
+        assert client.read_raw_block(100, max_seconds=1.0) == (b"2\n3", 2)
+        assert sock.now == 2.0
+        assert client.read_raw_block(100, max_seconds=1.0) is None
+        assert sock.now == 2.5  # one timeout after the last byte (1.5 s)
+
+
+def test_read_raw_block_time_between_calls_is_not_silence() -> None:
+    """A caller busy between calls (a full prefetch queue) has not
+    watched the socket: lines that arrived meanwhile are read, not
+    taken for idle."""
+    with _scripted_client(b"a\nb\n", [2], timeout=1.0) as (client, sock):
+        assert client.read_raw_block(1) == (b"a", 1)
+        sock.now += 5.0
+        assert client.read_raw_block(1) == (b"b", 1)
