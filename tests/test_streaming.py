@@ -508,7 +508,9 @@ def test_snapshot_sink_crash_after_publish_loses_nothing(
     restarted(_sink_events(spark, [make_event(102, id_=102)]), 3)
     head = restarted._head()
     assert restarted._versions() == [3]
-    mapped = {os.path.dirname(d) for d in head["buckets"].values()}
+    # An entry's data dir is its first two path parts: `data/<v>-<id>`
+    # for a merge dir and for the earlier layout's `_bucket=<b>` leaves.
+    mapped = {"/".join(d.split("/")[:2]) for d in head["buckets"].values()}
     assert {f"data/{d}" for d in os.listdir(os.path.join(path, "data"))} == mapped
     assert _snapshot_ids(restarted, spark) == list(range(1, 65)) + [100, 101, 102]
 
@@ -549,6 +551,107 @@ def test_snapshot_sink_adopts_legacy_layout_once(spark, tmp_path) -> None:
     assert sorted(sink._read(0)["buckets"].values()) == parts
     assert _snapshot_ids(sink, spark) == list(range(1, 65)) + [100, 101]
     assert not [d for d in os.listdir(path) if d.startswith(".old-") or d == ".sink-meta.json"]
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.select("id", "sequence", "event_type", "name").collect())
+
+
+def test_snapshot_sink_reads_mixed_layouts(spark, tmp_path, monkeypatch) -> None:
+    """A manifest may map buckets to three kinds of dir: an adopted root
+    ``_bucket=<b>`` dir, a ``data/<v>-<id>/_bucket=<b>`` leaf of the
+    one-file-per-bucket layout, and a merge dir holding several buckets
+    — here also superseded rows of buckets it no longer serves. A read
+    on the same or a fresh instance is exactly the latest row per key.
+    A merge touching one bucket leaves the others readable, and garbage
+    collection keeps every dir the newest manifest maps."""
+    from maxscale_cdc_connector_spark.streaming import ops
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    path = str(tmp_path / "state")
+    data = os.path.join(path, "data")
+    sink = SnapshotSink(path, ["id"], n_buckets=4)
+    inserts = [make_event(s, id_=s, name=f"n{s}") for s in range(1, 65)]
+    updates = [make_event(100 + s, "update_after", 2, id_=s, name=f"u{s}") for s in range(1, 65)]
+    old = _sink_events(spark, inserts).withColumn("_bucket", sink._bucket())
+    new = _sink_events(spark, updates).withColumn("_bucket", sink._bucket())
+    staging = str(tmp_path / "staging")
+    new.filter("_bucket = 0").write.partitionBy("_bucket").parquet(staging)
+    os.makedirs(path)
+    os.rename(os.path.join(staging, "_bucket=0"), os.path.join(path, "_bucket=0"))
+    new.filter("_bucket = 1").write.partitionBy("_bucket").parquet(os.path.join(data, "0-leaf"))
+    new.filter("_bucket >= 2").unionByName(old.filter("_bucket < 2")).write.parquet(
+        os.path.join(data, "1-merge")
+    )
+    os.makedirs(sink._manifest())
+    with open(sink._manifest(1), "w") as fh:
+        json.dump(
+            {
+                "n_buckets": 4,
+                "key_cols": ["id"],
+                "order_cols": ["sequence", "event_number"],
+                "schema": new.drop("_bucket").schema.jsonValue(),
+                "buckets": {
+                    "0": "_bucket=0",
+                    "1": "data/0-leaf/_bucket=1",
+                    "2": "data/1-merge",
+                    "3": "data/1-merge",
+                },
+            },
+            fh,
+        )
+
+    want = _rows(latest_snapshot(_sink_events(spark, inserts + updates), ["id"]))
+    for reader in (sink, SnapshotSink(path, ["id"], n_buckets=4)):
+        assert reader.current(spark).columns == new.drop("_bucket").columns
+        assert _rows(reader.snapshot(spark)) == want
+
+    monkeypatch.setattr(ops, "RETENTION_S", 0.0)
+    key = new.filter("_bucket = 0").first()["id"]
+    for seq in (500, 501):
+        sink(_sink_events(spark, [make_event(seq, "update_after", 2, id_=key, name="again")]), seq)
+    want = sorted(r if r[0] != key else (key, 501, "update_after", "again") for r in want)
+    head = sink._head()
+    assert {b: d for b, d in head["buckets"].items() if b != "0"} == {
+        "1": "data/0-leaf/_bucket=1",
+        "2": "data/1-merge",
+        "3": "data/1-merge",
+    }
+    assert sorted(os.listdir(data)) == sorted(["0-leaf", "1-merge", head["buckets"]["0"][5:]])
+    assert not os.path.exists(os.path.join(path, "_bucket=0"))  # no manifest maps it now
+    for reader in (sink, SnapshotSink(path, ["id"], n_buckets=4)):
+        assert _rows(reader.snapshot(spark)) == want
+
+
+def test_snapshot_sink_sparse_merge_reads_only_mapped_buckets(spark, tmp_path) -> None:
+    """After a merge over every bucket and one over a single bucket, the
+    older dir still holds that bucket's superseded row, yet snapshot()
+    has one row per key, with the new value: a read keeps only the
+    buckets the manifest maps to each dir. The `_bucket IN (…)` filter
+    is pushed into the parquet scan that current(), snapshot() and the
+    merge's read-back share, and current() carries no `_bucket`."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    path = str(tmp_path / "state")
+    sink = SnapshotSink(path, ["id"], n_buckets=4)
+    sink(_sink_events(spark, [make_event(s, id_=s, name=f"n{s}") for s in range(1, 65)]), 0)
+    (first,) = set(sink._head()["buckets"].values())
+    sink(_sink_events(spark, [make_event(100, "update_after", 2, id_=7, name="seven")]), 1)
+    head = sink._head()
+    older = {b: d for b, d in head["buckets"].items() if d == first}
+    assert len(older) == 3 and len(set(head["buckets"].values())) == 2
+
+    stale = spark.read.parquet(os.path.join(path, first)).filter("id = 7").collect()
+    assert [r["name"] for r in stale] == ["n7"]
+    rows = sink.snapshot(spark).select("id", "name").collect()
+    assert len(rows) == 64 and len({r["id"] for r in rows}) == 64
+    assert {r["id"]: r["name"] for r in rows}[7] == "seven"
+
+    current = sink.current(spark)
+    assert "_bucket" not in current.columns
+    read_back = sink._scan(spark, head, older)
+    for df in (current, read_back):
+        assert "In(_bucket, [" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path) -> None:
@@ -1053,30 +1156,46 @@ def test_snapshot_sink_unreadable_manifest_keeps_parameter_guard(spark, tmp_path
 def test_snapshot_sink_merge_job_budget(spark, tmp_path) -> None:
     """One merge of a multi-bucket batch into existing state launches at
     most 4 Spark jobs: two for the touched-bucket list (the first is the
-    frozen read), the shuffle into the touched buckets and the write —
-    no replay-dedup shuffle and no footer-inference job. A fresh
-    instance's snapshot() launches none."""
+    frozen read), the shuffle on `_bucket` and the write — no
+    replay-dedup shuffle and no footer-inference job. A fresh
+    instance's snapshot() launches none. The merge, which touches every
+    bucket, adds exactly one data dir, and AQE sizes its file count from
+    the data: at most `spark.sql.shuffle.partitions` files, however
+    many buckets (here twice that many) it holds."""
+    import glob
+
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     sc = spark.sparkContext
     path = str(tmp_path / "state")
-    SnapshotSink(path, ["id"], n_buckets=8)(
+    data = os.path.join(path, "data")
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_buckets = 2 * parts
+    SnapshotSink(path, ["id"], n_buckets=n_buckets)(
         _sink_events(spark, [make_event(s, id_=s) for s in range(1, 129)]), 0
     )
-    sink = SnapshotSink(path, ["id"], n_buckets=8)
-    batch = _sink_events(spark, [make_event(1000 + s, "update_after", 2, id_=s) for s in range(1, 33)])
+    before = set(os.listdir(data))
+    sink = SnapshotSink(path, ["id"], n_buckets=n_buckets)
+    batch = _sink_events(spark, [make_event(1000 + s, "update_after", 2, id_=s) for s in range(1, 129)])
     try:
         sc.setJobGroup("snapshot-sink-merge", "one merge")
         sink(batch, 1)
         sc.setJobGroup("snapshot-sink-read", "one snapshot() call")
-        snap = SnapshotSink(path, ["id"], n_buckets=8).snapshot(spark)
+        snap = SnapshotSink(path, ["id"], n_buckets=n_buckets).snapshot(spark)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sink._head()["buckets"]) == 8
+    head = sink._head()
+    assert len(head["buckets"]) == n_buckets
     merge_jobs = sc.statusTracker().getJobIdsForGroup("snapshot-sink-merge")
     assert 0 < len(merge_jobs) <= 4, f"{len(merge_jobs)} jobs for one merge"
     assert sc.statusTracker().getJobIdsForGroup("snapshot-sink-read") == []
     assert snap.count() == 128
+
+    added = set(os.listdir(data)) - before
+    assert len(added) == 1, f"one merge added data dirs {sorted(added)}"
+    files = glob.glob(os.path.join(data, *added, "**", "*.parquet"), recursive=True)
+    assert 0 < len(files) <= parts, f"{len(files)} parquet files for {n_buckets} buckets"
+    assert set(head["buckets"].values()) == {f"data/{d}" for d in added}
 
 
 def test_snapshot_sink_reads_isolated_from_merges(spark, tmp_path) -> None:
