@@ -3,29 +3,38 @@ training-data pipeline runs after near-dup pair detection (MinHash/LSH
 pairs say "A ~ B"; components say "this whole set is one document",
 so one canonical copy is kept and the rest dropped).
 
-Two algorithms, both pure DataFrame join/groupBy (shuffle on the node
-key, so successive rounds reuse the same hash partitioning):
+The algorithm is alternating large-star / small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14), pure DataFrame join/groupBy shuffled on the node key so
+successive rounds reuse the same hash partitioning. It converges in
+O(log^2 n) rounds worst-case, ~log n in practice, INDEPENDENT of graph
+diameter — at 100 TB a single long path would stall a label
+propagation.
 
-- ``two_phase`` (default): alternating large-star / small-star
-  contraction (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", SoCC'14). Converges in O(log^2 n) rounds worst-case, ~log n
-  in practice, INDEPENDENT of graph diameter — the right default at
-  100 TB where a single long path would stall propagation.
-- ``label_prop``: iterative min-label propagation; one join + groupBy
-  min per round, rounds = graph diameter. Cheaper per round, fine for
-  the near-clique, low-diameter graphs LSH dup-pairs produce.
-
-Per-round ``localCheckpoint`` truncates the logical plan, keeping
-Catalyst analysis cost constant across rounds (an unbounded iterative
-join plan grows exponentially otherwise).
+Every iterative operator with a convergence test (connected
+components, the k-core peel, the ancestor closure) runs its rounds
+through one loop, :func:`_fixpoint`. Round ``n`` builds
+``nxt = step(cur)`` behind a LAZY ``localCheckpoint`` (it truncates
+the logical plan, keeping Catalyst analysis cost constant across
+rounds — an unbounded iterative join plan grows exponentially) and
+calls ``stop(cur, nxt, n)``, which runs the round's ONE action: the
+convergence signature, whose job also materializes ``nxt``'s blocks.
+``cur`` is released only after ``stop`` returns; on any exit but the
+fixed point — ``stop`` raising, or the round budget spent — every
+frame the loop still holds is released. :func:`pagerank` has no
+convergence test: its fixed-count loop runs inside
+:func:`~maxscale_cdc_connector_spark.operators.cache.barriers`.
 """
 
 from __future__ import annotations
 
+import math
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from maxscale_cdc_connector_spark.operators.cache import release
+from maxscale_cdc_connector_spark.operators.cache import barriers, release
 
 __all__ = ["connected_components"]
 
@@ -111,13 +120,45 @@ def _require_materialized(df: DataFrame, flag: str) -> None:
         )
 
 
+def _fixpoint(
+    frame: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    stop: Callable[[DataFrame, DataFrame, int], bool],
+    max_rounds: int,
+    what: str,
+) -> tuple[DataFrame, int]:
+    """Iterate ``cur -> step(cur)`` from ``frame`` to a fixed point;
+    returns ``(frame at the fixed point, rounds run)``.
+
+    Round ``n`` builds ``nxt = step(cur).localCheckpoint(eager=False)``
+    and calls ``stop(cur, nxt, n)``: it runs the round's single action
+    (which materializes ``nxt``'s blocks in the same job) and returns
+    True at the fixed point, or raises. ``cur`` is released only after
+    ``stop`` returns — its blocks are the only copy and ``stop`` may
+    still read them. ``frame`` is the loop's from the call on: every
+    frame it still holds is released when ``stop`` or ``step`` raises,
+    and a ``RuntimeError`` is raised, with everything released, when
+    ``max_rounds`` rounds pass without a fixed point. Only the returned
+    frame survives; the caller owns it.
+    """
+    live = [frame]
+    try:
+        for n in range(1, max_rounds + 1):
+            live.append(step(live[0]).localCheckpoint(eager=False))
+            done = stop(live[0], live[1], n)
+            release(live.pop(0))
+            if done:
+                return live.pop(), n
+        raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
+    finally:
+        release(*live)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 25,
-    algorithm: str = "two_phase",
-    rounds_out: list | None = None,
     input_materialized: bool = False,
     input_strict_pairs: bool = False,
 ) -> DataFrame:
@@ -125,37 +166,35 @@ def connected_components(
 
     ``edges`` is undirected input (each pair listed once suffices).
     Returns ``(node, component)``; only nodes appearing in ``edges`` are
-    labeled (isolated nodes have no edges to say they exist).
+    labeled (isolated nodes have no edges to say they exist). The round
+    count of the last call in this process is left in ``LAST_ROUNDS``.
 
-    ``rounds_out``, if given, receives the number of rounds executed
-    (appended) — used by tests to pin the O(log n) convergence bound.
-
-    Raises ``RuntimeError`` if not converged within ``max_iters`` —
-    a silently partial labeling would split clusters.
+    Raises ``RuntimeError`` if not converged within ``max_iters``
+    rounds — a silently partial labeling would split clusters.
 
     The input edge plan is materialized ONCE up front (eager
-    ``localCheckpoint``): both algorithms read it from multiple branches
-    (node extraction + canonicalization / symmetrization), and a typical
-    caller hands in an expensive upstream pipeline (the LSH/Jaccard pair
-    join) that must not be re-executed per branch.
+    ``localCheckpoint``): the algorithm reads it from multiple branches
+    (node extraction + canonicalization), and a typical caller hands in
+    an expensive upstream pipeline (the LSH/Jaccard pair join) that must
+    not be re-executed per branch.
 
     ``input_materialized=True`` skips that up-front checkpoint (and its
     block release — the caller owns its own blocks): pass it ONLY when
     ``edges`` is already materialized (an eager checkpoint, such as the
     pair operators return, optionally behind a pure projection), where the
     extra copy is a wasted job. Passing it with a lazy plan is not just
-    a recompute-cost bug — it is a CORRECTNESS hazard: the algorithms
-    read ``edges`` from multiple branches (node extraction,
-    canonicalization, symmetrization), and a lazy nondeterministic plan
-    (sampling, ``rand()``, a changed-underneath source) evaluates
-    independently per branch, so nodes and the canonical edge set can
-    come from DIFFERENT graph views and the component labels are wrong.
+    a recompute-cost bug — it is a CORRECTNESS hazard: the algorithm
+    reads ``edges`` from multiple branches (node extraction,
+    canonicalization), and a lazy nondeterministic plan (sampling,
+    ``rand()``, a changed-underneath source) evaluates independently
+    per branch, so nodes and the canonical edge set can come from
+    DIFFERENT graph views and the component labels are wrong.
     The flag is therefore guarded: when the plan API is reachable, a
     detectably-lazy input raises ``ValueError`` instead of silently
     mislabeling (best-effort — on Spark Connect the check is skipped).
 
-    ``input_strict_pairs=True`` (r17, two_phase only) asserts the input
-    rows are DISTINCT pairs with ``src != dst`` on every row — exactly
+    ``input_strict_pairs=True`` (r17) asserts the input rows are
+    DISTINCT pairs with ``src != dst`` on every row — exactly
     what the dedup pair pipelines emit (``jaccard_pairs_prefix`` /
     ``minhash_dedup_pairs``: a distinct candidate set with
     ``doc_a < doc_b`` strictly). Two per-call savings, both exact under
@@ -178,31 +217,25 @@ def connected_components(
     — which is why the flag demands ``src != dst`` rather than checking
     it at runtime (the check would cost the exact filter it removes).
     """
-    if algorithm not in ("two_phase", "label_prop"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     pruned = edges.select(F.col(src), F.col(dst))
     if input_materialized:
         _require_materialized(pruned, "input_materialized")
     edges0 = pruned if input_materialized else pruned.localCheckpoint(eager=True)
-    ro = rounds_out if rounds_out is not None else []
     try:
-        if algorithm == "two_phase":
-            out = _two_phase(
-                edges0, src, dst, max_iters, ro,
-                nodes_lazy=input_materialized,
-                strict_pairs=input_strict_pairs,
-            )
-        else:
-            out = _label_prop(edges0, src, dst, max_iters, ro)
+        out, rounds = _two_phase(
+            edges0, src, dst, max_iters,
+            nodes_lazy=input_materialized,
+            strict_pairs=input_strict_pairs,
+        )
         global LAST_ROUNDS
-        LAST_ROUNDS = ro[-1] if ro else None
+        LAST_ROUNDS = rounds
         return out
     finally:
-        # Both algorithms return frames whose lineage stops at their own
-        # checkpoints (nodes/e/labels), so the input blocks can be freed
-        # as soon as the algorithm body has materialized them. Only the
-        # checkpoint created HERE is freed — a caller-owned input stays
-        # the caller's to release.
+        # The result's lineage stops at its own checkpoints (nodes and
+        # the fixpoint star set), so the input blocks can be freed as
+        # soon as _two_phase has materialized them. Only the checkpoint
+        # created HERE is freed — a caller-owned input stays the
+        # caller's to release.
         if not input_materialized:
             release(edges0)
 
@@ -212,11 +245,11 @@ def _two_phase(
     src: str,
     dst: str,
     max_iters: int,
-    rounds_out: list | None,
     nodes_lazy: bool = False,
     strict_pairs: bool = False,
-) -> DataFrame:
-    """Alternating large-star / small-star contraction.
+) -> tuple[DataFrame, int]:
+    """Alternating large-star / small-star contraction; returns
+    ``(labels, rounds)``.
 
     Invariant: ``e`` holds canonical directed edges ``(u, v)`` with
     ``v < u`` (every node points toward a smaller one). Each round:
@@ -236,29 +269,9 @@ def _two_phase(
     from pyspark.sql import Window
 
     a, b = "a", "b"
-    if strict_pairs:
-        # Labels are derived from the fixpoint star set below — no
-        # nodes frame at all (every input node appears in the stars
-        # because no row is a self-loop; see the dispatcher contract).
-        nodes = None
-    else:
-        # Eager by default: the returned ``labels`` frame reads ``nodes``
-        # lazily, after the dispatcher has already freed the input-edge
-        # blocks — a lazy plan here would try to recompute from truncated
-        # lineage. With ``nodes_lazy`` (caller-owned, already-materialized
-        # input: the dispatcher frees nothing) the checkpoint job is
-        # skipped outright and the node extraction folds into the caller's
-        # final action over the input's stable blocks.
-        nodes = (
-            edges.select(F.col(src).alias("node"))
-            .union(edges.select(F.col(dst).alias("node")))
-            .distinct()
-        )
-        if not nodes_lazy:
-            nodes = nodes.localCheckpoint(eager=True)
     # canonical (u > v), self-loops dropped (nodes frame keeps them alive).
-    # LAZY checkpoint: the _sig aggregate below materializes the blocks
-    # in the SAME job that returns the signature — an eager checkpoint
+    # LAZY checkpoint: the initial signature below materializes the
+    # blocks in the SAME job that returns it — an eager checkpoint
     # would pay a separate materialization job per frame (the r15 form:
     # 2 jobs per round; now 1). Under ``strict_pairs`` the input is
     # already a distinct self-loop-free pair set, so canonicalization is
@@ -272,212 +285,128 @@ def _two_phase(
         # by the initial signature job) — multiple readers of a lazy
         # unmaterialized plan would recompute the exchange per branch.
         e = e.where(F.col(a) != F.col(b)).distinct().localCheckpoint(eager=False)
-    # Set signature of the current (distinct) edge set — ALSO the job
-    # that populates the frame's lazy checkpoint blocks (every _sig
-    # caller passes a lazily-checkpointed frame; the aggregation runs
+    # Set signature of a (distinct) edge set — ALSO the job that
+    # populates the frame's lazy checkpoint blocks (the aggregation runs
     # every partition, so the checkpoint is fully materialized when it
     # returns). bit_xor of a 64-bit row hash is order-independent and
     # overflow-free; it gates (never replaces) the exact exceptAll
     # confirmation below.
-    def _sig(df: DataFrame) -> tuple:
-        return tuple(
-            df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(xxhash64({a}, {b}))").alias("x"),
-            ).collect()[0]
-        )
-
+    sig_cols = [
+        F.count(F.lit(1)).alias("n"),
+        F.expr(f"bit_xor(xxhash64({a}, {b}))").alias("x"),
+    ]
     win = Window.partitionBy(a)
-    spent: list[DataFrame] = []
-    converged = False
-    try:
-        # Under strict_pairs, e is a pure projection over the caller's
-        # already-materialized blocks (no checkpoint of its own), so the
-        # standalone initial-signature job is skipped: round 1 computes
-        # BOTH signatures in one tagged-union aggregate (r17 — one job
-        # + its driver gap saved per call; re-reading the cheap
-        # projection inside that job costs only a block re-decode).
-        # In the default mode the distinct must be materialized alone
-        # first, exactly as before.
-        e_sig = None if strict_pairs else _sig(e)
-        for rounds in range(1, max_iters + 1):
-            # ---- large-star over symmetrized edges ----
-            # m = min(N(x) ∪ {x}) via a window min — ONE exchange on the
-            # node key (the groupBy+re-join form shuffles sym twice).
-            sym = e.union(e.select(F.col(b).alias(a), F.col(a).alias(b)))
-            large = (
-                sym.withColumn("m", F.least(F.col(a), F.min(b).over(win)))
-                .where(F.col(b) > F.col(a))
-                # emit (bigger neighbor -> star min); m <= a < b keeps the
-                # (u > v) canonical orientation with no self-loops.
-                # Duplicate emissions are NOT collapsed here — the
-                # small-star window min is multiplicity-blind and the
-                # round's final distinct dedups once, saving an exchange.
-                .select(F.col(b).alias(a), F.col("m").alias(b))
-            )
-            # ---- small-star ----
-            # Per group a with minimum m: every row emits its (b -> m)
-            # re-parenting (when b != m) AND the group's own (a -> m)
-            # star edge; the trailing distinct collapses the per-row
-            # (a -> m) copies. Identical output to the join+union form
-            # with one exchange instead of three.
-            emit = F.array(
-                F.when(
-                    F.col(b) != F.col("m"),
-                    F.struct(F.col(b).alias(a), F.col("m").alias(b)),
-                ),
-                F.struct(F.col(a).alias(a), F.col("m").alias(b)),
-            )
-            small = (
-                large.withColumn("m", F.min(b).over(win))
-                .select(F.explode(emit).alias("s"))
-                .where(F.col("s").isNotNull())
-                .select(F.col(f"s.{a}").alias(a), F.col(f"s.{b}").alias(b))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            # fixed point: equal sets. The (count, xor-hash) signature
-            # doubles as the round's checkpoint-materialization job;
-            # only a signature match triggers the exact exceptAll
-            # confirmation (both sides distinct, so count match + empty
-            # one-sided difference suffices).
-            if e_sig is None:
-                # strict_pairs round 1: both signatures in ONE job via a
-                # tagged union (e re-read as a cheap projection; small's
-                # lazy checkpoint blocks materialize in this same job).
-                rows = (
-                    e.select(F.col(a), F.col(b), F.lit(0).alias("t"))
-                    .union(small.select(F.col(a), F.col(b), F.lit(1).alias("t")))
-                    .groupBy("t")
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.expr(f"bit_xor(xxhash64({a}, {b}))").alias("x"),
-                    )
-                    .collect()
-                )
-                by_t = {r["t"]: (r["n"], r["x"]) for r in rows}
-                # A tag can be absent only for an EMPTY side (groupBy
-                # drops empty groups): canonicalize to (0, None).
-                e_sig = by_t.get(0, (0, None))
-                small_sig = by_t.get(1, (0, None))
-            else:
-                small_sig = _sig(small)
-            if small_sig == e_sig and small.exceptAll(e).isEmpty():
-                spent.append(e)
-                e = small
-                converged = True
-                break
-            # Superseded edge set: free NOW (r9 review) — deferring to
-            # the finally held O(rounds) dead O(|E|) checkpoints in
-            # block storage simultaneously. The exceptAll above was the
-            # last read of the old frame.
-            release(e)
-            e, e_sig = small, small_sig
-        if not converged:
-            spent.append(e)
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iters} iterations; "
-                "raise max_iters"
-            )
-        if rounds_out is not None:
-            rounds_out.append(rounds)
-        if strict_pairs:
-            # The fixpoint edge set IS the labeling: one distinct
-            # (non-root -> component min) row per non-root, and the
-            # distinct b side is exactly the component minima labeling
-            # themselves. No join, no node-extraction distinct.
-            labels = e.select(
-                F.col(a).alias("node"), F.col(b).alias("component")
-            ).union(
-                e.select(F.col(b).alias("node"), F.col(b).alias("component"))
-                .distinct()
-            )
-            return labels
-        # stars: every non-root points straight at its component min;
-        # nodes absent from the star map (isolated / self-loop-only) are
-        # their own component.
-        labels = (
-            nodes.join(e, nodes.node == e.a, "left")
-            .select("node", F.coalesce(F.col(b), F.col("node")).alias("component"))
+
+    def star(e: DataFrame) -> DataFrame:
+        # ---- large-star over symmetrized edges ----
+        # m = min(N(x) ∪ {x}) via a window min — ONE exchange on the
+        # node key (the groupBy+re-join form shuffles sym twice).
+        sym = e.union(e.select(F.col(b).alias(a), F.col(a).alias(b)))
+        large = (
+            sym.withColumn("m", F.least(F.col(a), F.min(b).over(win)))
+            .where(F.col(b) > F.col(a))
+            # emit (bigger neighbor -> star min); m <= a < b keeps the
+            # (u > v) canonical orientation with no self-loops.
+            # Duplicate emissions are NOT collapsed here — the
+            # small-star window min is multiplicity-blind and the
+            # round's final distinct dedups once, saving an exchange.
+            .select(F.col(b).alias(a), F.col("m").alias(b))
         )
-        return labels
-    finally:
-        release(*spent)
+        # ---- small-star ----
+        # Per group a with minimum m: every row emits its (b -> m)
+        # re-parenting (when b != m) AND the group's own (a -> m)
+        # star edge; the trailing distinct collapses the per-row
+        # (a -> m) copies. Identical output to the join+union form
+        # with one exchange instead of three.
+        emit = F.array(
+            F.when(
+                F.col(b) != F.col("m"),
+                F.struct(F.col(b).alias(a), F.col("m").alias(b)),
+            ),
+            F.struct(F.col(a).alias(a), F.col("m").alias(b)),
+        )
+        return (
+            large.withColumn("m", F.min(b).over(win))
+            .select(F.explode(emit).alias("s"))
+            .where(F.col("s").isNotNull())
+            .select(F.col(f"s.{a}").alias(a), F.col(f"s.{b}").alias(b))
+            .distinct()
+        )
 
+    # Under strict_pairs, e is a pure projection over the caller's
+    # already-materialized blocks (no checkpoint of its own), so the
+    # standalone initial-signature job is skipped: round 1 computes
+    # BOTH signatures in one tagged-union aggregate (r17 — one job
+    # + its driver gap saved per call; re-reading the cheap
+    # projection inside that job costs only a block re-decode).
+    # In the default mode the distinct is materialized alone first.
+    sig = None if strict_pairs else tuple(e.agg(*sig_cols).collect()[0])
 
-def _label_prop(
-    edges: DataFrame, src: str, dst: str, max_iters: int, rounds_out: list | None
-) -> DataFrame:
-    """Min-label propagation: rounds = graph diameter.
+    def stop(cur: DataFrame, nxt: DataFrame, n: int) -> bool:
+        nonlocal sig
+        # fixed point: equal sets. The (count, xor-hash) signature
+        # doubles as the round's checkpoint-materialization job;
+        # only a signature match triggers the exact exceptAll
+        # confirmation (both sides distinct, so count match + empty
+        # one-sided difference suffices).
+        if sig is None:
+            # strict_pairs round 1: both signatures in ONE job via a
+            # tagged union (cur re-read as a cheap projection).
+            rows = (
+                cur.select(F.col(a), F.col(b), F.lit(0).alias("t"))
+                .union(nxt.select(F.col(a), F.col(b), F.lit(1).alias("t")))
+                .groupBy("t")
+                .agg(*sig_cols)
+                .collect()
+            )
+            by_t = {r["t"]: (r["n"], r["x"]) for r in rows}
+            # A tag can be absent only for an EMPTY side (groupBy
+            # drops empty groups): canonicalize to (0, None).
+            sig = by_t.get(0, (0, None))
+            nxt_sig = by_t.get(1, (0, None))
+        else:
+            nxt_sig = tuple(nxt.agg(*sig_cols).collect()[0])
+        if nxt_sig == sig and nxt.exceptAll(cur).isEmpty():
+            return True
+        sig = nxt_sig
+        return False
 
-    Labels only ever decrease, so convergence is detected by comparing
-    ``bit_xor(xxhash64(node, label))`` across iterations (one scalar
-    action, no extra join). The hash signature is (a) type-agnostic —
-    the old ``sum(label)`` over STRING labels cast to double and
-    yielded NULL, which compared equal on round one and returned
-    un-converged components (r9 review) — (b) association-sensitive (a
-    plain label sum cannot distinguish compensating label changes
-    across nodes), and (c) overflow-free under ANSI mode.
-    """
-    half = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.localCheckpoint(eager=False)
-    # Lazy: the first _checksum materializes sym AND labels in one job.
-    labels = (
-        sym.select(F.col("a").alias("node"))
+    e, rounds = _fixpoint(e, star, stop, max_iters, "connected_components")
+    if strict_pairs:
+        # The fixpoint edge set IS the labeling: one distinct
+        # (non-root -> component min) row per non-root, and the
+        # distinct b side is exactly the component minima labeling
+        # themselves. No join, no node-extraction distinct.
+        labels = e.select(
+            F.col(a).alias("node"), F.col(b).alias("component")
+        ).union(
+            e.select(F.col(b).alias("node"), F.col(b).alias("component"))
+            .distinct()
+        )
+        return labels, rounds
+    # Taken only after convergence, so a failed call leaves no nodes
+    # checkpoint behind. Eager by default: the returned ``labels`` frame
+    # reads ``nodes`` lazily, after the dispatcher has already freed the
+    # input-edge blocks — a lazy plan here would try to recompute from
+    # truncated lineage. With ``nodes_lazy`` (caller-owned,
+    # already-materialized input: the dispatcher frees nothing) the
+    # checkpoint job is skipped outright and the node extraction folds
+    # into the caller's final action over the input's stable blocks.
+    nodes = (
+        edges.select(F.col(src).alias("node"))
+        .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=False)
     )
-    spent = [sym]  # checkpoints to free; sym is not part of the result
-
-    def _checksum(lbl: DataFrame):
-        # bit_xor, not sum: order-independent AND overflow-free (a SUM
-        # of 64-bit hashes overflows BIGINT under ANSI mode) — the same
-        # signature _two_phase's _sig uses.
-        return lbl.agg(
-            F.expr("bit_xor(xxhash64(node, component))")
-        ).collect()[0][0]
-
-    try:
-        prev_sum = _checksum(labels)
-        for rounds in range(1, max_iters + 1):
-            nbr_min = (
-                sym.join(labels, sym.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            new_labels = (
-                labels.join(nbr_min, labels.node == nbr_min.a, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce("nbr_component", F.col("component")),
-                    ).alias("component"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # The checksum job materializes new_labels' lazy checkpoint
-            # (reading the OLD labels' blocks while doing so — release
-            # strictly after). One job per round instead of two.
-            cur_sum = _checksum(new_labels)
-            release(labels)
-            labels = new_labels
-            if cur_sum == prev_sum:  # labels are monotone non-increasing
-                if rounds_out is not None:
-                    rounds_out.append(rounds)
-                return labels
-            prev_sum = cur_sum
-        spent.append(labels)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} iterations; "
-            "graph diameter exceeds cap — raise max_iters or use two_phase"
-        )
-    finally:
-        # Free every superseded checkpoint; only the returned frame's
-        # blocks stay (the caller owns those — O(|nodes|), not edges).
-        release(*spent)
+    if not nodes_lazy:
+        nodes = nodes.localCheckpoint(eager=True)
+    # stars: every non-root points straight at its component min;
+    # nodes absent from the star map (isolated / self-loop-only) are
+    # their own component.
+    labels = (
+        nodes.join(e, nodes.node == e.a, "left")
+        .select("node", F.coalesce(F.col(b), F.col("node")).alias("component"))
+    )
+    return labels, rounds
 
 
 def triangle_stats(
@@ -624,69 +553,73 @@ def pagerank(
     docstring used to promise an assertion that did not exist, and
     dangling input silently deflated every rank).
     """
-    # Eager checkpoint (r9 review): `nodes` feeds the count, the rank
-    # init, the dangling check, and every iteration's left join — an
-    # expensive upstream edge pipeline would otherwise re-execute
-    # ~iters+3 times.
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # Empty graph: empty (node, rank) result, not ZeroDivisionError.
-        return nodes.withColumn("rank", F.lit(0.0))
-    out_w = edges.groupBy(F.col(src).alias("node")).agg(
-        F.sum("weight").alias("out_w")
-    )
-    n_dangling = nodes.join(out_w, "node", "left_anti").count()
-    if n_dangling:
-        raise ValueError(
-            f"pagerank requires every node to have out-edges; "
-            f"{n_dangling} dangling node(s) found — pass each undirected "
-            "edge in both orientations, or drop sink nodes first "
-            "(their missing redistribution would silently deflate "
-            "every rank)"
+    # Every frame but the returned ranks is held, so a raise (the
+    # dangling check, a failed job) frees them too; the result is an
+    # eager checkpoint with self-contained blocks.
+    with barriers() as hold:
+        # Eager checkpoint (r9 review): `nodes` feeds the count, the rank
+        # init, the dangling check, and every iteration's left join — an
+        # expensive upstream edge pipeline would otherwise re-execute
+        # ~iters+3 times.
+        nodes = hold(
+            edges.select(F.col(src).alias("node"))
+            .unionByName(edges.select(F.col(dst).alias("node")))
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-    norm = (
-        edges.join(out_w, edges[src] == out_w.node)
-        .select(
-            F.col(src).alias("e_src"),
-            F.col(dst).alias("e_dst"),
-            (F.col("weight") / F.col("out_w")).alias("p"),
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            # Empty graph: empty (node, rank) result, not ZeroDivisionError
+            # (a local frame: `nodes` is released on return).
+            return edges.sparkSession.createDataFrame(
+                [], nodes.schema.add("rank", "double")
+            )
+        out_w = edges.groupBy(F.col(src).alias("node")).agg(
+            F.sum("weight").alias("out_w")
         )
-        .localCheckpoint(eager=True)
-    )
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank")).localCheckpoint(
-        eager=True
-    )
-    teleport = (1.0 - damping) / n_nodes
-    for _ in range(iters):
-        contribs = (
-            norm.join(ranks, norm.e_src == ranks.node)
-            .groupBy(F.col("e_dst").alias("node"))
-            .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
-        )
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
+        n_dangling = nodes.join(out_w, "node", "left_anti").count()
+        if n_dangling:
+            raise ValueError(
+                f"pagerank requires every node to have out-edges; "
+                f"{n_dangling} dangling node(s) found — pass each undirected "
+                "edge in both orientations, or drop sink nodes first "
+                "(their missing redistribution would silently deflate "
+                "every rank)"
+            )
+        norm = hold(
+            edges.join(out_w, edges[src] == out_w.node)
             .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
+                F.col(src).alias("e_src"),
+                F.col(dst).alias("e_dst"),
+                (F.col("weight") / F.col("out_w")).alias("p"),
             )
             .localCheckpoint(eager=True)
         )
-        release(ranks)
-        ranks = new_ranks
-    # The returned frame is checkpointed (self-contained blocks), so the
-    # intermediates can be freed eagerly instead of waiting for the
-    # ContextCleaner.
-    release(norm, nodes)
-    return ranks
+        ranks = nodes.select(
+            "node", F.lit(1.0 / n_nodes).alias("rank")
+        ).localCheckpoint(eager=True)
+        teleport = (1.0 - damping) / n_nodes
+        for _ in range(iters):
+            prev = hold(ranks)
+            contribs = (
+                norm.join(prev, norm.e_src == prev.node)
+                .groupBy(F.col("e_dst").alias("node"))
+                .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
+            )
+            ranks = (
+                nodes.join(contribs, "node", "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(teleport)
+                        + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            # Superseded now, not at scope exit: one |V| frame live.
+            release(prev)
+        return ranks
 
 
 def kcore(
@@ -717,7 +650,7 @@ def kcore(
     # .distinct() as two rows, double-count every degree, and report a
     # too-large core (connected_components/triangle_stats already
     # canonicalize; this peel must too).
-    # Lazy checkpoint + count in one job (same merge as _two_phase).
+    # Lazy checkpoint + count in one job (the merge _fixpoint's rounds make).
     cur = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -727,31 +660,36 @@ def kcore(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    rounds = 0
-    n_edges = cur.count()
-    while True:
-        if n_edges == 0:
-            break
+    # Edge count per shrinking round; the peel depth is len(sizes) - 1.
+    sizes = [cur.count()]
+
+    def peel(cur: DataFrame) -> DataFrame:
         sym = cur.select("a", "b").unionAll(
             cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         deg = sym.groupBy("a").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("a")
-        pruned = (
+        return (
             cur.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
-        n_pruned = pruned.count()
-        release(cur)
-        cur = pruned
-        if n_pruned == n_edges:
-            break
-        n_edges = n_pruned
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"k-core peel exceeded {max_rounds} rounds")
+
+    def stop(cur: DataFrame, nxt: DataFrame, n: int) -> bool:
+        m = nxt.count()
+        if m == sizes[-1]:
+            return True
+        sizes.append(m)
+        # The budget is max_rounds peel rounds plus the no-change round
+        # that confirms the core; a round that peels the graph empty
+        # needs no confirmation but is still a peel round.
+        return m == 0 and n <= max_rounds
+
+    if sizes[0]:
+        cur, _ = _fixpoint(
+            cur, peel, stop, max_rounds + 1, f"k-core peel (max_rounds={max_rounds})"
+        )
+    rounds = len(sizes) - 1
     nodes = (
         cur.select(F.col("a").alias("node"))
         .unionAll(cur.select(F.col("b").alias("node")))
@@ -784,7 +722,7 @@ def ancestor_closure(
     materializes, but produced in logarithmic rounds.
     """
     # Lazy checkpoint: the count() below materializes the blocks in the
-    # same job (same merge as _two_phase's _sig — one job per frame
+    # same job (the merge _fixpoint's rounds make — one job per frame
     # instead of two).
     #
     # (r17 note: an explicit repartition-by-desc before the dedup — to
@@ -799,7 +737,7 @@ def ancestor_closure(
     # construction — so the initial dedup exchange is skipped. Duplicate
     # rows under a violated contract would only repeat identical
     # (desc, anc, dist) rows into round 1, whose groupBy dedups them;
-    # the only effect would be a wrong initial n_cur (one extra round,
+    # the only effect would be a wrong initial pair count (one extra round,
     # never a wrong closure).
     cur = edges.select(
         F.col(child).alias("desc"), F.col(parent).alias("anc"),
@@ -808,21 +746,11 @@ def ancestor_closure(
     if not input_distinct:
         cur = cur.distinct()
     cur = cur.localCheckpoint(eager=False)
-    import math as _math
+    # Pair count after the latest round (monotone; equality is the
+    # fixpoint).
+    n_pairs = cur.count()
 
-    # ceil(log2(depth)) doubling rounds close the hierarchy; +2 covers
-    # the final no-change confirmation pass.
-    max_rounds = _math.ceil(_math.log2(max(2, max_depth))) + 2
-    rounds = 0
-    n_cur = cur.count()
-    while True:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"ancestor closure did not converge in {max_rounds} doubling "
-                f"rounds (reach 2^{max_rounds}) — cyclic input, or a "
-                f"hierarchy far deeper than max_depth={max_depth}"
-            )
+    def double(cur: DataFrame) -> DataFrame:
         hop = cur.select(
             F.col("desc").alias("meet"), F.col("anc").alias("anc2"),
             F.col("dist").alias("dist2"),
@@ -832,25 +760,23 @@ def ancestor_closure(
             .select("desc", F.col("anc2").alias("anc"),
                     (F.col("dist") + F.col("dist2")).alias("dist"))
         )
-        nxt = (
+        return (
             cur.unionByName(doubled)
             .groupBy("desc", "anc")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
-        # One job per round: the count + max(dist) aggregate below ALSO
+
+    def stop(cur: DataFrame, nxt: DataFrame, n: int) -> bool:
+        nonlocal n_pairs
+        # One job per round: the count + max(dist) aggregate ALSO
         # materializes nxt's lazy checkpoint blocks (the r15 form paid
-        # a separate eager-checkpoint job first).
-        # n_cur carries over from the previous round (pair count is
-        # monotone, equality means fixpoint). The max(dist) check ends
-        # a round EARLY: an ancestor at distance k implies ancestors at
-        # every distance < k (the chain through it), so if no pair sits
-        # at the doubling reach 2^rounds, nothing deeper exists and the
-        # confirmation round is provably unnecessary.
+        # a separate eager-checkpoint job first). The max(dist) check
+        # ends a round EARLY: an ancestor at distance k implies
+        # ancestors at every distance < k (the chain through it), so if
+        # no pair sits at the doubling reach 2^n, nothing deeper exists
+        # and the confirmation round is provably unnecessary.
         stats = nxt.agg(F.count("*").alias("n"), F.max("dist").alias("m")).first()
         n_nxt, max_dist = stats["n"], stats["m"]
-        release(cur)
-        cur = nxt
         if max_dist is not None and max_dist > max_depth:
             # Enforce the declared cap (r9 review: the doubling rounds
             # cover depths up to ~4× max_depth, so callers using
@@ -861,6 +787,11 @@ def ancestor_closure(
             raise RuntimeError(
                 f"hierarchy depth ≥{max_dist} exceeds max_depth={max_depth}"
             )
-        if n_nxt == n_cur or max_dist < 2 ** rounds:
-            return cur
-        n_cur = n_nxt
+        done = n_nxt == n_pairs or max_dist < 2 ** n
+        n_pairs = n_nxt
+        return done
+
+    # ceil(log2(depth)) doubling rounds close the hierarchy; +2 covers
+    # the final no-change confirmation pass.
+    max_rounds = math.ceil(math.log2(max(2, max_depth))) + 2
+    return _fixpoint(cur, double, stop, max_rounds, "ancestor closure")[0]

@@ -1112,10 +1112,12 @@ FROM reach GROUP BY node
     "doc labeled with the min doc_id in its component; is_canonical marks "
     "the one copy a dedup pass would keep — the terminal step of every "
     "near-dup pipeline (pairs alone don't say which docs form one group). "
-    "Spark side is iterative min-label propagation (operators/graph.py): "
-    "per iteration one equi-join + one groupBy min on the node key, "
-    "convergence by monotone sum(label), localCheckpoint per step to keep "
-    "the plan bounded. Oracle is a DuckDB recursive-CTE transitive "
+    "Spark side is large-star/small-star contraction (operators/graph.py, "
+    "Kiveris et al. SoCC'14): per round one window-min exchange per star "
+    "phase and a distinct on the node key, convergence by a (count, "
+    "bit_xor(xxhash64)) edge-set signature confirmed by exceptAll, "
+    "localCheckpoint per round to keep the plan bounded; rounds grow with "
+    "log n, not with the diameter. Oracle is a DuckDB recursive-CTE transitive "
     "closure — correct but quadratic in component size; the iterative "
     "formulation is the one that scales.",
 )

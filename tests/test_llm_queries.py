@@ -718,21 +718,148 @@ def test_kcore_canonicalizes_reversed_duplicate_edges(spark, sf_dir):
     assert core2.count() == 3
 
 
-def test_label_prop_converges_on_string_node_ids(spark, sf_dir):
-    """r9 review: the old sum(label) convergence checksum cast STRING
-    labels to double → NULL, compared equal on round one, and returned
-    a silently split cluster. The hash signature must converge the
-    chain fully."""
+def test_connected_components_converges_on_string_node_ids(spark, sf_dir):
+    """r9 review: a sum(label) convergence checksum casts STRING labels
+    to double → NULL, compares equal on round one, and returns a
+    silently split cluster. The hash signature must converge the chain
+    fully."""
     from maxscale_cdc_connector_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
     )
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, algorithm="label_prop").collect()
-    }
+    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
+
+
+@pytest.mark.parametrize(
+    "case", ["cc_budget", "kcore_budget", "closure_depth", "pagerank_dangling"]
+)
+def test_graph_operators_release_checkpoints_when_they_raise(spark, case):
+    """A raising graph operator leaves none of its round checkpoints
+    registered: the budget errors of connected_components and kcore,
+    ancestor_closure's depth error, and pagerank's dangling-node
+    check."""
+    from maxscale_cdc_connector_spark.operators.graph import (
+        ancestor_closure,
+        connected_components,
+        kcore,
+        pagerank,
+    )
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(64)], "src long, dst long")
+    chain = spark.createDataFrame(
+        [(i + 1, i) for i in range(40)], "child long, parent long"
+    )
+    dangling = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, weight double")
+    call, error, match = {
+        "cc_budget": (lambda: connected_components(path, max_iters=2),
+                      RuntimeError, "did not converge"),
+        "kcore_budget": (lambda: kcore(path, 2, max_rounds=2), RuntimeError, ""),
+        "closure_depth": (lambda: ancestor_closure(chain, max_depth=4),
+                          RuntimeError, "exceeds max_depth"),
+        "pagerank_dangling": (lambda: pagerank(dangling), ValueError, "dangling"),
+    }[case]
+    registered = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(registered())
+    with pytest.raises(error, match=match):
+        call()
+    leaked = set(registered()) - before
+    assert not leaked, f"{case} left checkpoint RDDs {sorted(leaked)} registered"
+
+
+def test_graph_round_budget_boundaries(spark):
+    """Each budget sits where it always did: the smallest budget that
+    converges, and one less raises. kcore's max_rounds counts peel
+    rounds (the no-change confirmation is free), also when the last
+    peel empties the graph; ancestor_closure's max_depth is the chain
+    depth; connected_components' max_iters counts the confirming
+    round."""
+    from maxscale_cdc_connector_spark.operators import graph
+
+    L = "src long, dst long"
+    # A triangle with a 4-edge tail: 4 peel rounds, core = the triangle.
+    tail = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 6)], L
+    )
+    nodes, core, rounds = graph.kcore(tail, 2, max_rounds=4)
+    assert rounds == 4 and core.count() == 3
+    assert {r["node"] for r in nodes.collect()} == {0, 1, 2}
+    with pytest.raises(RuntimeError):
+        graph.kcore(tail, 2, max_rounds=3)
+    # An 8-edge path peels two edges a round: empty after 4 rounds.
+    path8 = spark.createDataFrame([(i, i + 1) for i in range(8)], L)
+    nodes, core, rounds = graph.kcore(path8, 2, max_rounds=4)
+    assert rounds == 4 and core.count() == 0
+    with pytest.raises(RuntimeError):
+        graph.kcore(path8, 2, max_rounds=3)
+
+    chain = spark.createDataFrame(
+        [(i + 1, i) for i in range(40)], "child long, parent long"
+    )
+    closure = graph.ancestor_closure(chain, max_depth=40)
+    assert closure.count() == 40 * 41 // 2
+    assert closure.agg({"dist": "max"}).first()[0] == 40
+    with pytest.raises(RuntimeError, match="exceeds max_depth=39"):
+        graph.ancestor_closure(chain, max_depth=39)
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(64)], L)
+    graph.connected_components(path, max_iters=7).count()
+    assert graph.LAST_ROUNDS == 7
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components(path, max_iters=6)
+
+
+def test_graph_operator_job_counts(spark):
+    """Spark jobs per operator call plus one count() on the result, on
+    fixed small inputs: one action per round, the initial signature,
+    and the strict_pairs round-1 tagged union. A change to any round
+    body shows here as a different count."""
+    import uuid
+
+    from maxscale_cdc_connector_spark.operators import graph
+
+    sc = spark.sparkContext
+
+    def jobs(call):
+        group = f"graph-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "graph operator job count")
+        try:
+            call().count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # The status store is fed by the listener bus: drain it first.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    L = "src long, dst long"
+    path = spark.createDataFrame([(i, i + 1) for i in range(64)], L)
+    tail = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 6)], L
+    )
+    chain = spark.createDataFrame(
+        [(i + 1, i) for i in range(40)], "child long, parent long"
+    )
+    ring = spark.createDataFrame(
+        [(u, v, 1.0) for i in range(6) for u, v in ((i, (i + 1) % 6), ((i + 1) % 6, i))],
+        "src long, dst long, weight double",
+    )
+    got = {
+        "cc": jobs(lambda: graph.connected_components(path)),
+        "cc_rounds": graph.LAST_ROUNDS,
+        "cc_strict": jobs(
+            lambda: graph.connected_components(path, input_strict_pairs=True)
+        ),
+        "cc_strict_rounds": graph.LAST_ROUNDS,
+        "kcore": jobs(lambda: graph.kcore(tail, 2)[0]),
+        "closure": jobs(lambda: graph.ancestor_closure(chain)),
+        "pagerank": jobs(lambda: graph.pagerank(ring, iters=3)),
+    }
+    assert got == {
+        "cc": 48, "cc_rounds": 7, "cc_strict": 41, "cc_strict_rounds": 7,
+        "kcore": 36, "closure": 41, "pagerank": 37,
+    }
 
 
 def test_pagerank_rejects_dangling_and_handles_empty(spark, sf_dir):

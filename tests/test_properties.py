@@ -209,7 +209,7 @@ def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_connected_components_matches_union_find(spark, edges) -> None:
-    """Min-label propagation agrees with union-find on random graphs
+    """Star contraction agrees with union-find on random graphs
     (self-loops and duplicate/reversed edges included)."""
     from maxscale_cdc_connector_spark.operators.graph import connected_components
 
@@ -225,20 +225,21 @@ def test_connected_components_matches_union_find(spark, edges) -> None:
 def test_connected_components_long_chain_converges_fast(spark) -> None:
     """A 1000-node path graph (diameter 999) must still converge in
     O(log^2 n) star-contraction rounds — the diameter-independence that
-    justifies two_phase as the default — and label every node with the
-    chain minimum."""
-    from maxscale_cdc_connector_spark.operators.graph import connected_components
+    justifies star contraction over label propagation — and label every
+    node with the chain minimum."""
+    from maxscale_cdc_connector_spark.operators import graph
 
     n = 1000
     edges = [(i, i + 1) for i in range(n - 1)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    rounds: list[int] = []
     got = {
         r["node"]: r["component"]
-        for r in connected_components(df, max_iters=25, rounds_out=rounds).collect()
+        for r in graph.connected_components(df, max_iters=25).collect()
     }
     assert got == {i: 0 for i in range(n)}
-    assert rounds[0] <= 15, f"chain took {rounds[0]} rounds — diameter leaked in"
+    assert graph.LAST_ROUNDS <= 15, (
+        f"chain took {graph.LAST_ROUNDS} rounds — diameter leaked in"
+    )
 
 
 @settings(

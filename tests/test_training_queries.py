@@ -211,25 +211,23 @@ def test_connected_components_two_phase_log_rounds_on_path(spark) -> None:
     """Star-contraction must converge in O(log n) rounds on a path graph —
     the worst case for min-label propagation (rounds = diameter).
 
-    A 65-node path has diameter 64: label_prop needs ~64 rounds, so a cap
-    of 8 must fail it, while two_phase (large-star halves path length per
-    round) converges within the same cap — and produces the same labels.
+    A 65-node path has diameter 64, yet large-star halves the path
+    length per round, so a cap of 8 rounds is enough — with every node
+    labeled by the path minimum.
     """
-    from maxscale_cdc_connector_spark.operators.graph import connected_components
+    from maxscale_cdc_connector_spark.operators import graph
 
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "src long, dst long"
     )
-    rounds: list[int] = []
     got = {
         r["node"]: r["component"]
-        for r in connected_components(path, max_iters=8, rounds_out=rounds).collect()
+        for r in graph.connected_components(path, max_iters=8).collect()
     }
     assert got == {i: 0 for i in range(65)}
-    assert rounds[0] <= 8, f"two_phase took {rounds[0]} rounds on a 65-node path"
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, max_iters=8, algorithm="label_prop")
+    assert graph.LAST_ROUNDS <= 8, (
+        f"two_phase took {graph.LAST_ROUNDS} rounds on a 65-node path"
+    )
 
 
 def test_dedup_cluster_cc_clusters_known_dups(spark, sf_dir) -> None:
