@@ -209,10 +209,10 @@ FROM ranked WHERE rn = 1 AND event_type <> 'delete'
     "replays through Structured Streaming (4 log files, maxFilesPerTrigger=1 "
     "⇒ ≥4 foreachBatch upserts) into the incremental SnapshotSink; the "
     "resulting current-state table must equal the batch latest-snapshot "
-    "(same oracle as cdc_latest_snapshot). This pins the sink's merge "
-    "(max_by over (sequence, event_number), tombstone handling, per-bucket "
-    "copy-on-write) against an exact hash, across micro-batch boundaries "
-    "that split updates/deletes from their inserts.",
+    "(same oracle as cdc_latest_snapshot). This pins the sink's per-key "
+    "reduction (max over (sequence, event_number), tombstone handling, "
+    "appended deltas folded by compaction) against an exact hash, across "
+    "micro-batch boundaries that split updates/deletes from their inserts.",
 )
 def stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -260,6 +260,7 @@ def stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not query.awaitTermination(300):
             query.stop()
             raise RuntimeError("snapshot-sink replay did not finish in 300s")
+        sink.compact(spark)  # no compaction writes into the dir deleted below
         snap = sink.snapshot(spark).select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
         )
@@ -286,8 +287,8 @@ FROM customer
     "original schema record; phase 2 — a NEW streaming incarnation, as "
     "the schema-restart wrapper would start — replays post-ALTER updates "
     "carrying an added c_tier column into the SAME state table. The "
-    "merged snapshot (unionByName allowMissingColumns in the merge, the "
-    "widened schema recorded in the manifest every read uses) must show "
+    "merged snapshot (the widened schema recorded in the manifest every "
+    "read and compaction uses, NULL-filling older files) must show "
     "NULL-backfilled c_tier on untouched keys and the post-ALTER payload "
     "on updated ones — the same backfill MariaDB applies to rows "
     "predating an ADD COLUMN. Exact-hash oracle over the "
@@ -341,7 +342,9 @@ def stream_snapshot_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
-        snap = SnapshotSink(state, ["c_custkey"]).snapshot(spark).select(
+        sink = SnapshotSink(state, ["c_custkey"])
+        sink.compact(spark)  # no compaction writes into the dir deleted below
+        snap = sink.snapshot(spark).select(
             "c_custkey", "c_name", "c_acctbal", "c_mktsegment", "c_tier"
         )
         out = snap.localCheckpoint(eager=True)
@@ -650,7 +653,7 @@ FROM ranked WHERE rn = 1 AND event_type <> 'delete'
     "change log replays with its middle file DUPLICATED (every update "
     "pair delivered twice, in a separate micro-batch) and the resulting "
     "current-state table must still hash-match the exactly-once oracle "
-    "— because the sink's merge keeps max_by((sequence, event_number)) "
+    "— because the sink's reduction keeps the max (sequence, event_number) "
     "per key, re-applying an already-applied event is a no-op. This is "
     "the delivery guarantee the reference's GTID-resume contract "
     "(cdc_connector.h:62-69) forces every consumer to handle: resuming "
@@ -700,6 +703,7 @@ def stream_snapshot_sink_replayed(spark: SparkSession, sf_dir: str) -> DataFrame
         if not query.awaitTermination(300):
             query.stop()
             raise RuntimeError("replayed snapshot sink did not finish in 300s")
+        sink.compact(spark)  # no compaction writes into the dir deleted below
         snap = sink.snapshot(spark).select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
         )

@@ -21,14 +21,13 @@ Scale notes:
   replay-semantics section of sources/cdc_partitioned.py); batchId-skip
   idioms that assume per-batch determinism are NOT safe on that source.
 * `SnapshotSink` maintains the queryable current-state table via
-  foreachBatch compaction: per batch, per-key latest over the batch and
-  the touched hash buckets → one fresh data dir, its files sorted by a
-  stored `_bucket` column → one atomic manifest publish. Only touched
-  buckets rewrite, and a read opens exactly the dirs one published
-  manifest maps, keeping each dir's mapped buckets by a `_bucket`
-  filter pushed into the scan (a Delta/Iceberg table is the same
-  commit log with more machinery, and skips files by the same kind of
-  statistics).
+  foreachBatch, merge-on-read: a micro-batch is one Spark job that
+  appends it as a delta dir, listed by one atomic manifest publish;
+  reads reduce the buckets the deltas touch to the latest row per key,
+  and a background compaction folds the deltas into fresh base dirs,
+  files sorted by a stored `_bucket` column (a Delta/Iceberg table is
+  the same commit log with more machinery, and skips files by the same
+  kind of statistics).
 """
 
 from __future__ import annotations
@@ -37,15 +36,15 @@ import functools
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
+import weakref
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from maxscale_cdc_connector_spark.operators.cache import release
 
 # Envelope identity of one event: GTID triple + event_number
 # (cdc_connector.h:199-208 + event_number disambiguates the two halves
@@ -242,129 +241,98 @@ def stream_stream_interval_join(
 
 
 # ---------------------------------------------------------------------------
-# In-flight stateful snapshot: applyInPandasWithState keyed on the pk.
-# ---------------------------------------------------------------------------
-
-
-def stateful_snapshot(events: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """Continuously-maintained current state via the state store.
-
-    The custom-stateful-operator form of the snapshot (SURVEY.md §2B
-    `stream_stateful_snapshot`): state per key is the winning event
-    (greatest (sequence, event_number)) as a JSON blob; each micro-batch
-    emits the key's new current row whenever it changes. Compared to the
-    foreachBatch `SnapshotSink`, state lives in Spark's state store
-    (RocksDB-backed on a cluster) instead of a parquet table — right
-    when the snapshot feeds further streaming stages rather than ad-hoc
-    queries.
-
-    Output = key columns + `current` (JSON of the full winning event,
-    envelope included; tombstones carry event_type='delete' — filter
-    downstream). JSON keeps the state/output schemas fixed for any
-    payload, so one operator serves every table.
-
-    Multi-server note (r9): the winning-event comparison is
-    (sequence, event_number), meaningful only within ONE GTID space —
-    so when the partitioned reader stamps ``_source_id``, it joins the
-    state key automatically (per-source current state, same guidance as
-    SnapshotSink's key_cols); cross-source sequences are incomparable
-    and a shared key would pin the winner to whichever server's counter
-    runs numerically higher.
-    """
-    if SOURCE_ID_COL in events.columns and SOURCE_ID_COL not in key_cols:
-        key_cols = [*key_cols, SOURCE_ID_COL]
-    key_schema = ", ".join(f"`{c}` {dict(events.dtypes)[c]}" for c in key_cols)
-    out_schema = f"{key_schema}, current string"
-    state_schema = "sequence bigint, event_number int, current string"
-
-    # Self-contained closure: executors unpickle by value (no package on
-    # the worker PYTHONPATH — same constraint as operators/multimodal.py).
-    def update(key, pdfs, state):
-        import json as _json
-
-        import pandas as _pd
-
-        best_seq, best_num, best_row = -1, -1, None
-        if state.exists:
-            best_seq, best_num, cur = state.get
-            best_row = _json.loads(cur)
-        changed = False
-        for pdf in pdfs:
-            for rec in pdf.to_dict("records"):
-                sq, num = int(rec["sequence"]), int(rec["event_number"])
-                if (sq, num) > (best_seq, best_num):
-                    best_seq, best_num, best_row = sq, num, rec
-                    changed = True
-        if changed and best_row is not None:
-            blob = _json.dumps(
-                {k: (v.item() if hasattr(v, "item") else v) for k, v in best_row.items()},
-                default=str,
-                sort_keys=True,
-            )
-            state.update((best_seq, best_num, blob))
-            data = dict(zip(key_names, ([k] for k in key)))
-            data["current"] = [blob]
-            yield _pd.DataFrame(data)
-
-    key_names = list(key_cols)
-    return events.groupBy(*key_cols).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
-# ---------------------------------------------------------------------------
 # Snapshot sink: change log → continuously-maintained current-state table.
 # ---------------------------------------------------------------------------
 
 
 # How long a superseded SnapshotSink version stays on disk after the
-# merge that replaced it publishes: the read-isolation bound for a
-# DataFrame returned by current()/snapshot(). A Spark file scan lists its
-# files when the DataFrame is built and opens them when its tasks run;
-# 30 s covers a dashboard query many times over on a loaded host, and at
-# a 3 s trigger keeps about ten versions of the touched buckets on disk.
+# publish that replaced it: the read-isolation bound for a DataFrame
+# returned by current()/snapshot(). A Spark file scan lists its files
+# when the DataFrame is built and opens them when its tasks run; 30 s
+# covers a dashboard query many times over on a loaded host, and at a
+# 3 s trigger keeps about ten batches' deltas and compactions on disk.
 RETENTION_S = 30.0
 
 
+class _Writer:
+    """What the writing threads of one sink path share in this process,
+    on any instance: a stream's batches, its compactor, ``compact()``
+    callers. ``cond`` guards "read head → compose manifest → publish →
+    GC"; ``pending`` holds the data dirs being written and not yet
+    published, which GC keeps; ``compacting`` is the one compaction
+    slot; ``error`` is a failed background compaction's exception,
+    kept for the next batch to raise."""
+
+    def __init__(self) -> None:
+        self.cond = threading.Condition(threading.Lock())
+        self.pending: set[str] = set()
+        self.compacting = False
+        self.error: BaseException | None = None
+
+
+_WRITERS: weakref.WeakValueDictionary[str, _Writer] = weakref.WeakValueDictionary()
+_WRITERS_LOCK = threading.Lock()
+
+
 class SnapshotSink:
-    """foreachBatch upsert maintaining a parquet current-state table.
+    """foreachBatch upsert maintaining a merge-on-read parquet
+    current-state table.
 
     The whole point of consuming a CDC stream (`cdc_connector.h:42`
-    docs: stream one table's changes) is a queryable current state.
-    Per micro-batch: the batch plus the touched buckets of the current
-    version reduce to one row per key, the greatest ``order_cols`` →
-    the touched buckets are written together to ``data/<version>-<id>``,
-    a fresh dir nothing modifies later, as files sorted by a stored
-    ``_bucket`` column whose count AQE sizes from the data (one file at
-    tens of thousands of rows; the write costs per file, not per row)
-    → ``_manifest/<version>.json`` is published in one atomic
-    ``os.replace`` (the commit-log pattern of Spark's ``FileStreamSink``
-    ``_spark_metadata``). A manifest maps every bucket to its dir and
-    records the merged schema and ``n_buckets``/``key_cols``/
-    ``order_cols``; a read opens the newest one's dirs with that schema
-    — no listing of the table, no footer inference — and keeps from
-    each dir only the buckets mapped to it: an older dir still holds
-    the rows of buckets a later merge superseded. Entries of the
-    earlier layouts, ``data/<version>-<id>/_bucket=<b>`` leaves and
-    adopted root ``_bucket=<b>`` dirs, read through the same scan.
-    Deleted keys stay in-state as TOMBSTONES (a late replay of an
-    older event can never resurrect a deleted key); ``snapshot()``
-    filters them, ``current()`` returns them raw.
+    docs: stream one table's changes) is a queryable current state. The
+    table is a base plus deltas, both listed by the newest manifest:
+
+    * A micro-batch is ONE Spark job: its rows, with a stored
+      ``_bucket`` column (a hash of ``key_cols``), are written to a
+      fresh delta dir ``data/delta-<id>``, and a manifest listing it
+      after the earlier deltas is published as ``_manifest/<version>.json``
+      in one atomic ``os.replace`` (the commit-log pattern of Spark's
+      ``FileStreamSink`` ``_spark_metadata``). The delta's row count and
+      buckets come from that write, as observed metrics.
+    * A read reduces the buckets the deltas touch — their base rows and
+      every delta row — to one row per key, the greatest ``order_cols``;
+      the other buckets read as stored.
+    * Compaction writes that same reduction to a fresh
+      ``data/compact-<id>`` dir of AQE-sized files sorted by
+      ``_bucket``, then publishes a manifest that maps the touched
+      buckets to it and drops the deltas it folded, keeping every delta
+      appended while it ran. It runs on a driver thread with its own job
+      group, started after a publish when none is in flight, and folds
+      every delta published when it starts, so deltas batch up on their
+      own whenever compaction is slower than the trigger. ``compact()``
+      runs one synchronously.
+
+    A manifest maps every base bucket to its dir, lists the deltas with
+    their buckets, and records the merged schema and
+    ``n_buckets``/``key_cols``/``order_cols``. A read opens the newest
+    one's dirs with that schema — no listing of the table, no footer
+    inference — NULL-filling the columns a dir predates, and keeps from
+    each base dir only the buckets mapped to it: an older dir still
+    holds the rows of buckets a later compaction superseded. Base
+    entries of the earlier layouts, ``data/<version>-<id>`` merge dirs,
+    ``data/<version>-<id>/_bucket=<b>`` leaves and adopted root
+    ``_bucket=<b>`` dirs, read through the same scan, and a manifest
+    without a delta list has no deltas. Deleted keys stay in-state as
+    TOMBSTONES (a late replay of an older event can never resurrect a
+    deleted key); ``snapshot()`` filters them, ``current()`` returns
+    them raw.
 
     Reads are snapshot-isolated: a DataFrame returned by ``current()``/
     ``snapshot()`` stays readable for ``RETENTION_S`` seconds after a
     newer version is published; cache or copy it to hold it longer.
 
-    Restart-safe: the per-key max makes merging idempotent (an event
-    applied twice, or replayed, yields the same state), so
-    at-least-once foreachBatch semantics suffice with no replay dedup.
-    A driver crash before the publish leaves the previous version
-    current and a dir the next merge deletes; one after it loses
-    nothing.
+    Restart-safe: the per-key max is commutative and idempotent, so a
+    replayed batch, even a superset of the original, is appended again
+    harmlessly, and at-least-once foreachBatch semantics suffice with
+    no batch-id dedup. A driver crash before a publish leaves the
+    previous version current and a dir the next publish deletes; one
+    after it loses nothing. A failed background compaction publishes
+    nothing, and the next batch raises its error.
+
+    One writer per sink path: the instances of one process that write
+    a path share one lock and one compaction slot, so a stream, its
+    compactor and a restarted stream's fresh instance never publish
+    over each other.
 
     Multi-server note (r9): the default ordering, (sequence,
     event_number), is meaningful only within one GTID space, so for
@@ -396,6 +364,8 @@ class SnapshotSink:
         self.key_cols = list(key_cols)
         self.order_cols = list(order_cols)
         self.n_buckets = n_buckets
+        with _WRITERS_LOCK:
+            self._w = _WRITERS.setdefault(os.path.realpath(path), _Writer())
 
     def _bucket(self) -> Column:
         return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets))
@@ -517,12 +487,13 @@ class SnapshotSink:
     def _gc(self) -> None:
         """Delete what no reader can still hold. The newest manifest and
         every one superseded less than ``RETENTION_S`` ago stay, with
-        the dirs they map; older manifests go, and so do data dirs none
-        of the kept ones maps — among them the unpublished write of a
-        merge that crashed before its publish."""
+        the dirs they list; older manifests go, and so do data dirs that
+        none of the kept ones lists and no writer is still writing —
+        among them the unpublished write of a batch or compaction that
+        crashed before its publish. Runs under the writer lock."""
         versions = self._versions()
         now = time.time()
-        keep: set[str] = set()
+        keep = set(self._w.pending)
         for v, newer in zip(versions, versions[1:] + [None]):
             if newer is not None and now - os.path.getmtime(self._manifest(newer)) >= RETENTION_S:
                 os.remove(self._manifest(v))
@@ -530,6 +501,7 @@ class SnapshotSink:
             m = self._read(v)
             if m is not None:
                 keep.update(self._top(d) for d in m["buckets"].values())
+                keep.update(d["dir"] for d in m.get("deltas", ()))
         data = os.path.join(self.path, "data")
         dirs = [f"data/{e}" for e in os.listdir(data)] if os.path.isdir(data) else []
         dirs += [e for e in os.listdir(self.path) if e.startswith(self.BUCKET_COL + "=")]
@@ -539,22 +511,25 @@ class SnapshotSink:
 
     @staticmethod
     def _top(entry: str) -> str:
-        """The data dir a manifest entry lives in: ``data/<v>-<id>`` for
-        a merge dir and for a ``data/<v>-<id>/_bucket=<b>`` leaf of the
-        earlier per-bucket layout, the entry itself for an adopted
-        root ``_bucket=<b>`` dir."""
+        """The data dir a base entry lives in: ``data/<name>`` for a
+        compaction or merge dir and for a ``data/<v>-<id>/_bucket=<b>``
+        leaf of the earlier per-bucket layout, the entry itself for an
+        adopted root ``_bucket=<b>`` dir."""
         return "/".join(entry.split("/")[:2]) if entry.startswith("data/") else entry
 
+    def _schema(self, head: dict) -> T.StructType:
+        return T.StructType.fromJson(head["schema"]).add(self.BUCKET_COL, T.LongType())
+
     def _scan(self, spark, head: dict, buckets: dict[str, str]) -> DataFrame:
-        """The rows of ``buckets`` (bucket → manifest entry) with the
+        """The base rows of ``buckets`` (bucket → manifest entry) with the
         manifest's schema plus ``_bucket``. Each distinct dir opens once
         and keeps only the buckets mapped to it, by a ``_bucket IN (…)``
-        filter Spark pushes into the parquet scan: a merge dir holds
-        every bucket it wrote, including ones a later merge superseded.
-        Leaves of the earlier layouts (``_bucket=<b>`` dirs) open by
-        parent, as ``basePath``, so ``_bucket`` comes from the dir
-        name."""
-        schema = T.StructType.fromJson(head["schema"]).add(self.BUCKET_COL, T.LongType())
+        filter Spark pushes into the parquet scan: a compaction dir holds
+        every bucket it wrote, including ones a later compaction
+        superseded. Leaves of the earlier layouts (``_bucket=<b>`` dirs)
+        open by parent, as ``basePath``, so ``_bucket`` comes from the
+        dir name."""
+        schema = self._schema(head)
         groups: dict[str, tuple[set[str], list[int]]] = {}
         for b, d in buckets.items():
             leaf = os.path.basename(d).startswith(self.BUCKET_COL + "=")
@@ -571,79 +546,32 @@ class SnapshotSink:
         ]
         return functools.reduce(DataFrame.unionByName, frames)
 
-    def current(self, spark) -> DataFrame | None:
-        """The newest version, tombstones included; None before the
-        first merge. A state dir of the earlier layout reads as None
-        until the writer's first merge adopts it."""
-        head = self._head()
-        if head is None:
-            return None
-        return self._scan(spark, head, head["buckets"]).drop(self.BUCKET_COL)
+    @staticmethod
+    def _touched(head: dict) -> set[str]:
+        """The buckets the head's deltas hold rows of."""
+        return {str(b) for d in head.get("deltas", ()) for b in d["buckets"]}
 
-    def snapshot(self, spark) -> DataFrame:
-        """The queryable current state (tombstones filtered)."""
-        df = self.current(spark)
-        if df is None:
-            raise FileNotFoundError(f"no snapshot at {self.path}")
-        return df.filter(F.col("event_type") != "delete")
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        """Incremental compaction: merge ONLY the hash buckets the batch
-        touches. At 100 TB the state table is large but a micro-batch
-        touches few keys — reading and rewriting the touched buckets
-        bounds the per-batch IO, the same copy-on-write contract a
-        Delta/Iceberg MERGE provides on plain parquet. The
-        distinct-bucket list is the only driver round-trip, ≤ n_buckets
-        ints."""
-        # Freeze the batch BEFORE the multi-action merge (r8 soak
-        # finding — burst-sized permanent loss on one stream): every
-        # action on a partitioned-CDC batch re-executes the live socket
-        # read, so without this the `touched` bucket list and the merged
-        # write could see DIFFERENT rows, and rows seen only by the
-        # write would land in buckets the manifest does not remap. The
-        # checkpoint is lazy: the touched-bucket action is its one
-        # materialization, and every later action reads those blocks.
-        incoming = batch.withColumn(self.BUCKET_COL, self._bucket()).localCheckpoint(eager=False)
-        try:
-            self._merge(batch.sparkSession, incoming)
-        finally:
-            # Free the checkpoint blocks eagerly — on a long-running
-            # stream, waiting for the ContextCleaner to GC one frozen
-            # batch per trigger accumulates block-manager storage.
-            release(incoming)
-
-    def _merge(self, spark, incoming: DataFrame) -> None:
-        touched = [r[0] for r in incoming.select(self.BUCKET_COL).distinct().collect()]
-        if not touched:
-            return
-        head = self._head() or self._adopt(spark)
-        buckets = {}
-        if head is not None:
-            self._check(head)
-            buckets = dict(head["buckets"])
-            # Read back ONLY the touched buckets (r9 review): the scan
-            # opens only the dirs they map to and skips other buckets'
-            # files and row groups by their `_bucket` statistics (where
-            # several buckets share one small file, it is read whole and
-            # filtered).
-            prev = {str(b): buckets[str(b)] for b in touched if str(b) in buckets}
-            if prev:
-                # allowMissingColumns: a post-ALTER batch carries columns
-                # the stored snapshot predates (and, on a dropped column,
-                # vice versa) — union the schemas and NULL-fill, the same
-                # backfill MariaDB applies to rows predating an ADD COLUMN.
-                incoming = incoming.unionByName(
-                    self._scan(spark, head, prev), allowMissingColumns=True
-                )
-        # One aggregate: the per-key max of (order_cols, rest) is the
-        # whole latest row. The one shuffle, on `_bucket` with no count,
-        # lets AQE size the file count from the data, and the sort
-        # aggregate leaves each file sorted by `_bucket`, so a reader's
-        # `_bucket` filter skips row groups by their statistics.
-        rest = [c for c in incoming.columns if c not in self.key_cols and c != self.BUCKET_COL]
+    def _reduce(self, spark, head: dict, touched: set[str]) -> DataFrame:
+        """The latest row per key of the ``touched`` buckets, with
+        ``_bucket``: their base rows and every delta row under one
+        aggregate, the per-key max of (order_cols, rest), which is the
+        whole latest row. The max is commutative and idempotent, so the
+        order of the deltas, a replayed batch and a delta folded twice
+        are all harmless. The one shuffle, on ``_bucket`` with no count,
+        lets AQE size a compaction's file count from the data, and the
+        sort aggregate leaves each file sorted by ``_bucket``, so a
+        reader's ``_bucket`` filter skips row groups by their
+        statistics."""
+        rows = spark.read.schema(self._schema(head)).parquet(
+            *[os.path.join(self.path, d["dir"]) for d in head["deltas"]]
+        )
+        base = {b: d for b, d in head["buckets"].items() if b in touched}
+        if base:
+            rows = rows.unionByName(self._scan(spark, head, base))
+        rest = [c for c in rows.columns if c not in self.key_cols and c != self.BUCKET_COL]
         latest = F.max(F.struct(*self.order_cols, *[c for c in rest if c not in self.order_cols]))
-        merged = (
-            incoming.repartition(self.BUCKET_COL)
+        return (
+            rows.repartition(self.BUCKET_COL)
             .groupBy(self.BUCKET_COL, *self.key_cols)
             .agg(latest.alias(self._LATEST))
             .select(
@@ -652,13 +580,193 @@ class SnapshotSink:
                 *[F.col(self._LATEST)[c].alias(c) for c in rest],
             )
         )
+
+    def current(self, spark) -> DataFrame | None:
+        """The newest version, tombstones included; None before the
+        first publish. The buckets a delta touches are reduced on read.
+        A state dir of the earlier layout reads as None until the
+        writer's first batch adopts it."""
+        head = self._head()
+        if head is None:
+            return None
+        touched = self._touched(head)
+        stored = {b: d for b, d in head["buckets"].items() if b not in touched}
+        frames = [self._scan(spark, head, stored)] if stored else []
+        if touched:
+            frames.append(self._reduce(spark, head, touched))
+        columns = T.StructType.fromJson(head["schema"]).names
+        return functools.reduce(DataFrame.unionByName, frames).select(*columns)
+
+    def snapshot(self, spark) -> DataFrame:
+        """The queryable current state (tombstones filtered)."""
+        df = self.current(spark)
+        if df is None:
+            raise FileNotFoundError(f"no snapshot at {self.path}")
+        return df.filter(F.col("event_type") != "delete")
+
+    def _reserve(self, kind: str) -> str:
+        """A fresh data dir, kept from GC until it is published or its
+        write fails. Called under the writer lock."""
+        name = f"data/{kind}-{uuid.uuid4().hex[:12]}"
+        self._w.pending.add(name)
+        return name
+
+    def _commit(self, schema: dict, buckets: dict[str, str], deltas: list[dict]) -> None:
+        """Publish the next version, then collect garbage. Called under
+        the writer lock, so the version is one past the newest."""
         version = max(self._versions(), default=-1) + 1
-        data = f"data/{version}-{uuid.uuid4().hex[:12]}"
-        merged.write.parquet(os.path.join(self.path, data))
-        buckets.update({str(b): data for b in touched})
-        schema = merged.drop(self.BUCKET_COL).schema.jsonValue()
-        self._publish(version, {**self._params(), "schema": schema, "buckets": buckets})
+        manifest = {**self._params(), "schema": schema, "buckets": buckets, "deltas": deltas}
+        self._publish(version, manifest)
         self._gc()
+
+    @staticmethod
+    def _widen(spark, head: dict | None, columns: DataFrame) -> dict:
+        """The manifest schema once ``columns`` join the state. A
+        post-ALTER batch carries columns the stored state predates (and,
+        on a dropped column, vice versa): the manifest keeps the union,
+        typed as unionByName allowMissingColumns types it, and reads
+        NULL-fill — the backfill MariaDB applies to rows predating an ADD
+        COLUMN. Analysis only, no job, and none when nothing is new."""
+        if head is None:
+            return columns.schema.jsonValue()
+        stored = T.StructType.fromJson(head["schema"])
+        have = {f.name: f.dataType for f in stored}
+        if all(have.get(f.name) == f.dataType for f in columns.schema):
+            return head["schema"]
+        empty = spark.createDataFrame([], stored)
+        return empty.unionByName(columns, allowMissingColumns=True).schema.jsonValue()
+
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        """Append the batch as one delta: one Spark job writes it with
+        ``_bucket``, then a manifest listing it is published, and a
+        background compaction starts if none is in flight. The write is
+        the batch's only action, so the batch needs no freeze: a
+        partitioned-CDC batch re-executes its live socket read per
+        action (r8 soak finding), and its row count and buckets are
+        observed on the write's own execution. Nothing is keyed on
+        ``batch_id``: a replay may deliver a superset of the original
+        batch, and appending it again is harmless. A failed background
+        compaction's error is raised here, before anything is
+        written."""
+        w = self._w
+        with w.cond:
+            failed, w.error = w.error, None
+        if failed is not None:
+            raise RuntimeError(f"SnapshotSink compaction at {self.path} failed") from failed
+        spark = batch.sparkSession
+        with w.cond:
+            head = self._head() or self._adopt(spark)
+            if head is not None:
+                self._check(head)
+            name = self._reserve("delta")
+        try:
+            rest = [c for c in batch.columns if c not in self.key_cols]
+            delta = batch.select(*self.key_cols, self._bucket().alias(self.BUCKET_COL), *rest)
+            seen = Observation()
+            delta.observe(
+                seen, F.count(F.lit(1)).alias("rows"), F.collect_set(self.BUCKET_COL).alias("buckets")
+            ).write.parquet(os.path.join(self.path, name))
+            written = seen.get
+            if not written["rows"]:
+                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+                return
+            with w.cond:
+                head = self._head()
+                schema = self._widen(spark, head, delta.drop(self.BUCKET_COL))
+                entry = {"dir": name, "buckets": sorted(written["buckets"])}
+                if head is None:
+                    self._commit(schema, {}, [entry])
+                else:
+                    self._commit(schema, head["buckets"], [*head.get("deltas", ()), entry])
+        finally:
+            with w.cond:
+                w.pending.discard(name)
+        self._compact_in_background(spark)
+
+    def compact(self, spark) -> None:
+        """Fold every published delta into the base now, in this thread
+        and job group, after the compaction in flight (if any) ends.
+        Call it before relying on a folded layout, and before deleting
+        the sink dir: no compaction writes into it afterwards."""
+        w = self._w
+        with w.cond:
+            w.cond.wait_for(lambda: not w.compacting)
+            w.compacting = True
+        try:
+            self._fold(spark)
+        finally:
+            with w.cond:
+                w.compacting = False
+                w.cond.notify_all()
+
+    def _compact_in_background(self, spark) -> None:
+        """Start a compactor thread unless a compaction is in flight."""
+        w = self._w
+        with w.cond:
+            if w.compacting:
+                return
+            w.compacting = True
+        threading.Thread(
+            target=self._compactor, args=(spark,), name=f"SnapshotSink compactor {self.path}", daemon=True
+        ).start()
+
+    def _compactor(self, spark) -> None:
+        """Fold until no delta is left, then free the slot in the same
+        locked step that saw none, so a batch published after it starts
+        a new compactor. The job group comes first: a query's stop()
+        cancels its own group, and no compaction job carries the
+        stream's batch id. An error frees the slot and is kept for the
+        next batch."""
+        w = self._w
+        sc = spark.sparkContext
+        sc.setJobGroup(f"snapshot-sink-compact:{self.path}", "SnapshotSink compaction")
+        sc.setLocalProperty("streaming.sql.batchId", None)
+        try:
+            while True:
+                with w.cond:
+                    if not (self._head() or {}).get("deltas"):
+                        w.compacting = False
+                        w.cond.notify_all()
+                        return
+                self._fold(spark)
+        except Exception as exc:  # noqa: BLE001 — kept for the next batch to raise
+            with w.cond:
+                w.error, w.compacting = exc, False
+                w.cond.notify_all()
+
+    def _fold(self, spark) -> None:
+        """One compaction: the merge of every delta the head lists into
+        the base buckets they touch, written to one fresh dir, then a
+        publish that maps those buckets to it and keeps the deltas
+        appended since the head was read. The caller holds the
+        compaction slot, so the base does not change meanwhile."""
+        w = self._w
+        with w.cond:
+            head = self._head()
+            if head is None or not head.get("deltas"):
+                return
+            self._check(head)
+            name = self._reserve("compact")
+        try:
+            touched = self._touched(head)
+            self._reduce(spark, head, touched).write.parquet(os.path.join(self.path, name))
+            self._replace(head, touched, name)
+        finally:
+            with w.cond:
+                w.pending.discard(name)
+
+    def _replace(self, head: dict, touched: set[str], name: str) -> None:
+        """Publish the compaction of ``head``'s deltas written to
+        ``name``: the touched buckets map to it, and every delta
+        appended since ``head`` was read stays listed."""
+        folded = {d["dir"] for d in head["deltas"]}
+        with self._w.cond:
+            now = self._head()
+            self._commit(
+                now["schema"],
+                {**now["buckets"], **dict.fromkeys(sorted(touched), name)},
+                [d for d in now["deltas"] if d["dir"] not in folded],
+            )
 
 
 def write_snapshot_stream(
@@ -670,7 +778,9 @@ def write_snapshot_stream(
     n_buckets: int = 16,
     order_cols: Sequence[str] = SnapshotSink.DEFAULT_ORDER,
 ):
-    """Wire a CDC event stream into a SnapshotSink via foreachBatch."""
+    """Wire a CDC event stream into a SnapshotSink via foreachBatch. A
+    compaction may still run after the query ends; call the returned
+    sink's ``compact()`` before deleting its path."""
     sink = SnapshotSink(path, key_cols, n_buckets, order_cols)
     writer = events.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

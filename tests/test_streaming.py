@@ -217,50 +217,6 @@ def test_snapshot_sink_equals_batch_snapshot(spark, event_log, tmp_path) -> None
     assert 10 not in got and got[4][1] == "upd4" and got[1][1] == "n1"
 
 
-def test_stateful_snapshot_matches_batch(spark, event_log) -> None:
-    """applyInPandasWithState snapshot: the last 'update' emitted per key
-    equals the batch latest_snapshot row (state-store path vs parquet
-    compaction path agree)."""
-    import json as _json
-
-    from maxscale_cdc_connector_spark.streaming.ops import stateful_snapshot
-
-    path, _ = event_log
-    stream = replay_stream(spark, path, TEST_SCHEMA_RECORD, max_files_per_trigger=1)
-    out = stateful_snapshot(stream, ["id"])
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stateful_snap")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # Memory sink accumulates one row per (batch, changed key); the last
-    # emission per key is the current state.
-    rows = spark.sql("SELECT * FROM stateful_snap").collect()
-    latest: dict[int, dict] = {}
-    for r in rows:
-        cur = _json.loads(r["current"])
-        k = r["id"]
-        prev = latest.get(k)
-        if prev is None or (cur["sequence"], cur["event_number"]) > (
-            prev["sequence"], prev["event_number"]
-        ):
-            latest[k] = cur
-    got = {
-        k: (v["sequence"], v["name"])
-        for k, v in latest.items()
-        if v["event_type"] != "delete"
-    }
-    batch = replay_batch(spark, path, TEST_SCHEMA_RECORD)
-    want = {
-        r["id"]: (r["sequence"], r["name"])
-        for r in latest_snapshot(batch, ["id"]).collect()
-    }
-    assert got == want
-
-
 def test_watermark_drops_late_event(spark, tmp_path) -> None:
     """stream_watermark_late (SURVEY §2B): with a 10s watermark, an event
     arriving after the watermark passed its window is dropped from the
@@ -320,22 +276,30 @@ def test_watermark_drops_late_event(spark, tmp_path) -> None:
 
 
 def test_snapshot_sink_incremental_and_idempotent(spark, tmp_path) -> None:
-    """Only hash buckets touched by a batch are rewritten (exactly one
-    manifest entry changes), and applying the same batch twice leaves
-    the state unchanged (restart safety)."""
+    """A batch is appended as one delta that records the buckets it
+    touches, and its compaction rewrites only those (exactly one base
+    entry changes); applying the same batch twice leaves the state
+    unchanged (restart safety)."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     sink = SnapshotSink(str(tmp_path / "state"), ["id"], n_buckets=8)
     sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 129)]), 0)
+    sink.compact(spark)
     before = dict(sink._head()["buckets"])
     assert len(before) == 8  # 128 keys cover all 8 buckets
 
-    # Batch 2 updates a single key → exactly one bucket remapped.
+    # Batch 2 updates a single key → one delta of one bucket, published
+    # as the next version beside the unchanged base; its compaction
+    # remaps exactly that bucket.
     single = _sink_events(spark, [make_event(1000, "update_after", 2, id_=7, name="seven2")])
+    appended = sink._versions()[-1] + 1
     sink(single, 1)
+    (delta,) = sink._read(appended)["deltas"]
+    assert len(delta["buckets"]) == 1 and sink._read(appended)["buckets"] == before
+    sink.compact(spark)
     after = sink._head()["buckets"]
     changed = {b for b in after if after[b] != before.get(b)}
-    assert len(changed) == 1, f"expected 1 rewritten bucket, got {changed}"
+    assert changed == {str(b) for b in delta["buckets"]}, f"rewritten buckets {changed}"
 
     # Idempotency: re-applying the same batch yields identical state.
     state_1 = sorted(
@@ -416,18 +380,19 @@ def _crash(*_args) -> None:
 def test_snapshot_sink_crash_before_publish_keeps_previous_version(
     spark, tmp_path, monkeypatch
 ) -> None:
-    """A driver crash after a merge wrote its data dir but before it
+    """A driver crash after a batch wrote its delta dir but before it
     published the manifest leaves the previous version current: a read
     on the same or a fresh instance sees exactly it and leaves the
-    unpublished dir alone (readers never write). The next merge — a
+    unpublished dir alone (readers never write). The next publish — a
     fresh instance, as after a restart — deletes that dir, since no
-    manifest maps it."""
+    manifest lists it."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     path = str(tmp_path / "state")
     data = os.path.join(path, "data")
     sink = SnapshotSink(path, ["id"], n_buckets=4)
     sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)]), 0)
+    sink.compact(spark)  # no compaction in flight from here on
     want = _snapshot_ids(sink, spark)
     published = set(os.listdir(data))
 
@@ -450,17 +415,18 @@ def test_snapshot_sink_crash_before_publish_keeps_previous_version(
 def test_snapshot_sink_same_instance_retry_after_failed_publish(
     spark, tmp_path, monkeypatch
 ) -> None:
-    """r9 review finding, on the manifest layout: a merge that fails on
+    """r9 review finding, on the manifest layout: a batch that fails on
     THIS instance after its data write (the publish raised) is replayed
     by the supervised query on the same sink object. The retry must
-    merge against the still-current previous version — every
-    pre-existing key kept — and leave no unpublished dir behind."""
+    append to the still-current previous version — every pre-existing
+    key kept — and leave no unpublished dir behind."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     path = str(tmp_path / "state")
     data = os.path.join(path, "data")
     sink = SnapshotSink(path, ["id"], n_buckets=4)
     sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)]), 0)
+    sink.compact(spark)  # no compaction in flight from here on
     want = _snapshot_ids(sink, spark)
     published = set(os.listdir(data))
 
@@ -486,15 +452,17 @@ def test_snapshot_sink_crash_after_publish_loses_nothing(
     """A driver crash right after the publish (before garbage
     collection) loses nothing: a fresh instance reads the new version.
     Superseded dirs stay while a reader may still hold them — for
-    RETENTION_S after the newer version's publish — and the first merge
-    after that deletes them with their manifests; the newest version is
-    never deleted."""
+    RETENTION_S after the newer version's publish — and the first
+    publish after that deletes them with their manifests; the newest
+    version is never deleted, and after a compaction the data dirs on
+    disk are exactly the ones its manifest maps."""
     from maxscale_cdc_connector_spark.streaming import ops
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     path = str(tmp_path / "state")
     sink = SnapshotSink(path, ["id"], n_buckets=4)
     sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)]), 0)
+    sink.compact(spark)  # no compaction in flight from here on
     monkeypatch.setattr(sink, "_gc", _crash)
     with pytest.raises(RuntimeError, match="driver died"):
         sink(_sink_events(spark, [make_event(100, id_=100)]), 1)
@@ -502,14 +470,17 @@ def test_snapshot_sink_crash_after_publish_loses_nothing(
     restarted = SnapshotSink(path, ["id"], n_buckets=4)
     assert _snapshot_ids(restarted, spark) == list(range(1, 65)) + [100]
     restarted(_sink_events(spark, [make_event(101, id_=101)]), 2)
-    assert restarted._versions() == [0, 1, 2]  # v0 superseded just now
+    restarted.compact(spark)
+    versions = restarted._versions()
+    assert versions == list(range(len(versions)))  # v0 superseded just now
 
     monkeypatch.setattr(ops, "RETENTION_S", 0.0)
     restarted(_sink_events(spark, [make_event(102, id_=102)]), 3)
+    restarted.compact(spark)
     head = restarted._head()
-    assert restarted._versions() == [3]
-    # An entry's data dir is its first two path parts: `data/<v>-<id>`
-    # for a merge dir and for the earlier layout's `_bucket=<b>` leaves.
+    assert restarted._versions() == [versions[-1] + 2] and head["deltas"] == []
+    # An entry's data dir is its first two path parts: `data/<name>`
+    # for a compaction dir and for the earlier layout's `_bucket=<b>` leaves.
     mapped = {"/".join(d.split("/")[:2]) for d in head["buckets"].values()}
     assert {f"data/{d}" for d in os.listdir(os.path.join(path, "data"))} == mapped
     assert _snapshot_ids(restarted, spark) == list(range(1, 65)) + [100, 101, 102]
@@ -547,8 +518,10 @@ def test_snapshot_sink_adopts_legacy_layout_once(spark, tmp_path) -> None:
     assert sink.current(spark) is None  # readers wait for the writer's adoption
     sink(_sink_events(spark, [make_event(100, id_=100)]), 0)
     sink(_sink_events(spark, [make_event(101, id_=101)]), 1)
-    assert sink._versions() == [0, 1, 2]
+    sink.compact(spark)
+    assert sink._versions()[0] == 0
     assert sorted(sink._read(0)["buckets"].values()) == parts
+    assert sink._read(0).get("deltas", []) == [] and sink._read(1)["buckets"] == sink._read(0)["buckets"]
     assert _snapshot_ids(sink, spark) == list(range(1, 65)) + [100, 101]
     assert not [d for d in os.listdir(path) if d.startswith(".old-") or d == ".sink-meta.json"]
 
@@ -563,8 +536,8 @@ def test_snapshot_sink_reads_mixed_layouts(spark, tmp_path, monkeypatch) -> None
     one-file-per-bucket layout, and a merge dir holding several buckets
     — here also superseded rows of buckets it no longer serves. A read
     on the same or a fresh instance is exactly the latest row per key.
-    A merge touching one bucket leaves the others readable, and garbage
-    collection keeps every dir the newest manifest maps."""
+    A compaction touching one bucket leaves the others readable, and
+    garbage collection keeps every dir the newest manifest maps."""
     from maxscale_cdc_connector_spark.streaming import ops
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
@@ -610,6 +583,7 @@ def test_snapshot_sink_reads_mixed_layouts(spark, tmp_path, monkeypatch) -> None
     key = new.filter("_bucket = 0").first()["id"]
     for seq in (500, 501):
         sink(_sink_events(spark, [make_event(seq, "update_after", 2, id_=key, name="again")]), seq)
+    sink.compact(spark)
     want = sorted(r if r[0] != key else (key, 501, "update_after", "again") for r in want)
     head = sink._head()
     assert {b: d for b, d in head["buckets"].items() if b != "0"} == {
@@ -624,19 +598,22 @@ def test_snapshot_sink_reads_mixed_layouts(spark, tmp_path, monkeypatch) -> None
 
 
 def test_snapshot_sink_sparse_merge_reads_only_mapped_buckets(spark, tmp_path) -> None:
-    """After a merge over every bucket and one over a single bucket, the
-    older dir still holds that bucket's superseded row, yet snapshot()
-    has one row per key, with the new value: a read keeps only the
-    buckets the manifest maps to each dir. The `_bucket IN (…)` filter
-    is pushed into the parquet scan that current(), snapshot() and the
-    merge's read-back share, and current() carries no `_bucket`."""
+    """After a compaction over every bucket and one over a single
+    bucket, the older dir still holds that bucket's superseded row, yet
+    snapshot() has one row per key, with the new value: a read keeps
+    only the buckets the manifest maps to each dir. The `_bucket IN (…)`
+    filter is pushed into the parquet scan that current(), snapshot()
+    and the compaction's read-back share, and current() carries no
+    `_bucket`."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     path = str(tmp_path / "state")
     sink = SnapshotSink(path, ["id"], n_buckets=4)
     sink(_sink_events(spark, [make_event(s, id_=s, name=f"n{s}") for s in range(1, 65)]), 0)
+    sink.compact(spark)
     (first,) = set(sink._head()["buckets"].values())
     sink(_sink_events(spark, [make_event(100, "update_after", 2, id_=7, name="seven")]), 1)
+    sink.compact(spark)
     head = sink._head()
     older = {b: d for b, d in head["buckets"].items() if d == first}
     assert len(older) == 3 and len(set(head["buckets"].values())) == 2
@@ -1131,7 +1108,9 @@ def test_snapshot_sink_rejects_changed_parameters(spark, tmp_path) -> None:
         SnapshotSink(path, ["name"], n_buckets=8)(_sink_events(spark, [make_event(4, id_=4)]), 3)
 
 
-def test_snapshot_sink_unreadable_manifest_keeps_parameter_guard(spark, tmp_path) -> None:
+def test_snapshot_sink_unreadable_manifest_keeps_parameter_guard(
+    spark, tmp_path, monkeypatch
+) -> None:
     """An unreadable newest manifest falls back to the newest complete
     one, and with none readable the sink refuses: the stored parameters
     are never replaced by the constructing instance's guess."""
@@ -1139,6 +1118,7 @@ def test_snapshot_sink_unreadable_manifest_keeps_parameter_guard(spark, tmp_path
 
     path = str(tmp_path / "state")
     sink = SnapshotSink(path, ["id"], n_buckets=8)
+    _hold_compaction(sink, monkeypatch)  # version 1 is the second batch
     sink(_sink_events(spark, [make_event(1, id_=1)]), 0)
     sink(_sink_events(spark, [make_event(2, id_=2)]), 1)
     with open(sink._manifest(1), "w") as fh:
@@ -1153,15 +1133,26 @@ def test_snapshot_sink_unreadable_manifest_keeps_parameter_guard(spark, tmp_path
         SnapshotSink(path, ["id"], n_buckets=4)(batch, 2)
 
 
-def test_snapshot_sink_merge_job_budget(spark, tmp_path) -> None:
-    """One merge of a multi-bucket batch into existing state launches at
-    most 4 Spark jobs: two for the touched-bucket list (the first is the
-    frozen read), the shuffle on `_bucket` and the write — no
-    replay-dedup shuffle and no footer-inference job. A fresh
-    instance's snapshot() launches none. The merge, which touches every
-    bucket, adds exactly one data dir, and AQE sizes its file count from
-    the data: at most `spark.sql.shuffle.partitions` files, however
-    many buckets (here twice that many) it holds."""
+def _drained_jobs(sc, group: str) -> list[int]:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _hold_compaction(sink, monkeypatch) -> None:
+    """No background compaction on ``sink``: its deltas stay until
+    ``compact()``."""
+    monkeypatch.setattr(sink, "_compact_in_background", lambda _spark: None)
+
+
+def test_snapshot_sink_merge_job_budget(spark, tmp_path, monkeypatch) -> None:
+    """A batch runs exactly one Spark job, the delta write — no frozen
+    read, no touched-bucket list — and adds one delta dir. One
+    compact() runs at most 4 jobs and adds exactly one data dir; AQE
+    sizes its file count from the data, so it holds at most
+    `spark.sql.shuffle.partitions` files however many buckets (here
+    twice that many) it holds. No footer-inference job anywhere: a
+    fresh instance's snapshot() launches none, with a delta listed or
+    after the compaction."""
     import glob
 
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
@@ -1171,39 +1162,210 @@ def test_snapshot_sink_merge_job_budget(spark, tmp_path) -> None:
     data = os.path.join(path, "data")
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_buckets = 2 * parts
-    SnapshotSink(path, ["id"], n_buckets=n_buckets)(
-        _sink_events(spark, [make_event(s, id_=s) for s in range(1, 129)]), 0
-    )
-    before = set(os.listdir(data))
     sink = SnapshotSink(path, ["id"], n_buckets=n_buckets)
+    _hold_compaction(sink, monkeypatch)
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 129)]), 0)
+    sink.compact(spark)
+    before = set(os.listdir(data))
     batch = _sink_events(spark, [make_event(1000 + s, "update_after", 2, id_=s) for s in range(1, 129)])
     try:
-        sc.setJobGroup("snapshot-sink-merge", "one merge")
+        sc.setJobGroup("snapshot-sink-batch", "one batch")
         sink(batch, 1)
-        sc.setJobGroup("snapshot-sink-read", "one snapshot() call")
-        snap = SnapshotSink(path, ["id"], n_buckets=n_buckets).snapshot(spark)
+        appended = set(os.listdir(data))
+        sc.setJobGroup("snapshot-sink-read", "two snapshot() calls")
+        snaps = [SnapshotSink(path, ["id"], n_buckets=n_buckets).snapshot(spark)]
+        sc.setJobGroup("snapshot-sink-compact", "one compaction")
+        sink.compact(spark)
+        sc.setJobGroup("snapshot-sink-read", "two snapshot() calls")
+        snaps.append(SnapshotSink(path, ["id"], n_buckets=n_buckets).snapshot(spark))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    head = sink._head()
-    assert len(head["buckets"]) == n_buckets
-    merge_jobs = sc.statusTracker().getJobIdsForGroup("snapshot-sink-merge")
-    assert 0 < len(merge_jobs) <= 4, f"{len(merge_jobs)} jobs for one merge"
-    assert sc.statusTracker().getJobIdsForGroup("snapshot-sink-read") == []
-    assert snap.count() == 128
+    batch_jobs, compact_jobs, read_jobs = (
+        len(_drained_jobs(sc, f"snapshot-sink-{step}")) for step in ("batch", "compact", "read")
+    )
+    assert batch_jobs == 1, f"{batch_jobs} jobs for one batch"
+    assert 0 < compact_jobs <= 4, f"{compact_jobs} jobs for one compaction"
+    assert read_jobs == 0
+    assert [s.count() for s in snaps] == [128, 128]
 
-    added = set(os.listdir(data)) - before
-    assert len(added) == 1, f"one merge added data dirs {sorted(added)}"
+    (delta,) = appended - before
+    assert delta.startswith("delta-")
+    head = sink._head()
+    assert len(head["buckets"]) == n_buckets and head["deltas"] == []
+    added = set(os.listdir(data)) - appended
+    assert len(added) == 1, f"one compaction added data dirs {sorted(added)}"
     files = glob.glob(os.path.join(data, *added, "**", "*.parquet"), recursive=True)
     assert 0 < len(files) <= parts, f"{len(files)} parquet files for {n_buckets} buckets"
     assert set(head["buckets"].values()) == {f"data/{d}" for d in added}
 
 
+def test_snapshot_sink_compaction_keeps_deltas_appended_while_it_ran(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """A batch appended between a compaction's write and its publish
+    stays listed: the compaction re-reads the head under the writer
+    lock and drops only the deltas it folded, so both batches are in
+    snapshot() right after its publish, and after the next compaction."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    sink = SnapshotSink(str(tmp_path / "state"), ["id"], n_buckets=4)
+    sink(_sink_events(spark, [make_event(s, id_=s, name=f"n{s}") for s in range(1, 33)]), 0)
+    sink.compact(spark)
+    first = [make_event(200, "update_after", 2, id_=1, name="first"), make_event(201, id_=99, name="new")]
+    mid = [make_event(300, "update_after", 2, id_=2, name="mid")]
+    seen: list = []
+    replace = sink._replace
+
+    def append_then_publish(head, touched, name) -> None:
+        if seen:
+            return replace(head, touched, name)
+        sink(_sink_events(spark, mid), 2)
+        replace(head, touched, name)
+        seen.append(sink._head())
+        seen.append({r["id"]: r["name"] for r in sink.snapshot(spark).collect()})
+
+    monkeypatch.setattr(sink, "_replace", append_then_publish)
+    sink(_sink_events(spark, first), 1)  # its background compaction runs the hook
+    sink.compact(spark)
+    assert len(seen) == 2, "the background compaction never published"
+    kept, names = seen
+    (delta,) = kept["deltas"]
+    assert delta["dir"].startswith("data/delta-")
+    want = {**{s: f"n{s}" for s in range(1, 33)}, 1: "first", 2: "mid", 99: "new"}
+    assert names == want
+    assert sink._head()["deltas"] == []
+    assert {r["id"]: r["name"] for r in sink.snapshot(spark).collect()} == want
+
+
+def test_snapshot_sink_delete_in_delta_hides_base_row(spark, tmp_path, monkeypatch) -> None:
+    """A delete appended as a delta hides the key's base row on read:
+    snapshot() drops the key and current() returns the tombstone,
+    before and after the delta is compacted."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    sink = SnapshotSink(str(tmp_path / "state"), ["id"], n_buckets=4)
+    _hold_compaction(sink, monkeypatch)
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 17)]), 0)
+    sink.compact(spark)
+    sink(_sink_events(spark, [make_event(100, "delete", 1, id_=5)]), 1)
+    for folded in (False, True):
+        assert bool(sink._head()["deltas"]) is not folded
+        assert _snapshot_ids(sink, spark) == [s for s in range(1, 17) if s != 5]
+        tomb = sink.current(spark).filter("id = 5").collect()
+        assert [(r["event_type"], r["sequence"]) for r in tomb] == [("delete", 100)]
+        sink.compact(spark)
+
+
+def test_snapshot_sink_replayed_batch_appended_twice(spark, tmp_path, monkeypatch) -> None:
+    """A replayed batch is appended again, not skipped by its batch id
+    (a replay may be a superset of the original): the state read with
+    it listed twice equals the state with it listed once, and the
+    compaction of both gives the same rows."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    sink = SnapshotSink(str(tmp_path / "state"), ["id"], n_buckets=4)
+    _hold_compaction(sink, monkeypatch)
+    sink(_sink_events(spark, [make_event(s, id_=s, name=f"n{s}") for s in range(1, 33)]), 0)
+    sink.compact(spark)
+    events = [make_event(100 + s, "update_after", 2, id_=s, name=f"u{s}") for s in range(1, 33, 3)]
+    events += [make_event(200 + s, "delete", 1, id_=s) for s in range(2, 33, 5)]
+    batch = _sink_events(spark, events)
+    sink(batch, 1)
+    once = (_rows(sink.current(spark)), _rows(sink.snapshot(spark)))
+    sink(batch, 1)
+    assert len(sink._head()["deltas"]) == 2
+    assert (_rows(sink.current(spark)), _rows(sink.snapshot(spark))) == once
+    sink.compact(spark)
+    assert sink._head()["deltas"] == []
+    assert (_rows(sink.current(spark)), _rows(sink.snapshot(spark))) == once
+
+
+def test_snapshot_sink_failed_compaction_fails_next_batch(spark, tmp_path, monkeypatch) -> None:
+    """A background compaction that fails publishes nothing: the state
+    read afterwards is unchanged, and the next batch raises its error
+    before writing anything, so the query fails visibly. A synchronous
+    compact() raises its own error. Once raised, the error is cleared:
+    the replayed batch appends and compacts normally."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    sink = SnapshotSink(str(tmp_path / "state"), ["id"], n_buckets=4)
+    sink(_sink_events(spark, [make_event(s, id_=s) for s in range(1, 17)]), 0)
+    sink.compact(spark)
+    monkeypatch.setattr(sink, "_replace", _crash)
+    sink(_sink_events(spark, [make_event(100, id_=100)]), 1)  # its compaction fails
+    with pytest.raises(RuntimeError, match="driver died"):
+        sink.compact(spark)
+    want = _rows(sink.current(spark))
+    assert [r[0] for r in want] == list(range(1, 17)) + [100]
+    monkeypatch.undo()
+    head = sink._head()
+    later = _sink_events(spark, [make_event(101, id_=101)])
+    with pytest.raises(RuntimeError, match="compaction .* failed") as failed:
+        sink(later, 2)
+    assert "driver died" in str(failed.value.__cause__)
+    assert sink._head() == head and _rows(sink.current(spark)) == want
+    sink(later, 2)
+    sink.compact(spark)
+    assert sink._head()["deltas"] == []
+    assert _snapshot_ids(sink, spark) == list(range(1, 17)) + [100, 101]
+
+
+def test_snapshot_sink_concurrent_appends_lose_nothing(spark, tmp_path) -> None:
+    """Appends from more threads than cores, each on its own instance of
+    one sink path, beside the background compactions they start, lose
+    no batch: every publish takes the next version under the path's
+    one writer lock, so each batch's delta is listed by some manifest
+    and every thread's keys end at its last batch."""
+    import sys
+    import threading
+
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    path = str(tmp_path / "state")
+    n_threads, n_batches, n_keys = spark.sparkContext.defaultParallelism + 2, 3, 4
+    errors: list[BaseException] = []
+
+    def append(t: int) -> None:
+        sink = SnapshotSink(path, ["id"], n_buckets=4)
+        try:
+            for j in range(n_batches):
+                events = [
+                    make_event(1000 * j + 10 * t + i, id_=100 * t + i, name=f"t{t}b{j}")
+                    for i in range(n_keys)
+                ]
+                sink(_sink_events(spark, events), j)
+        except BaseException as exc:  # noqa: BLE001 — every failure is the finding
+            errors.append(exc)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=append, args=(t,), daemon=True) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads) and not errors, errors[:1]
+
+    sink = SnapshotSink(path, ["id"], n_buckets=4)
+    sink.compact(spark)
+    versions = sink._versions()
+    assert versions == list(range(len(versions)))  # none superseded long enough to go
+    listed = {d["dir"] for v in versions for d in sink._read(v)["deltas"]}
+    assert len(listed) == n_threads * n_batches
+    want = {100 * t + i: f"t{t}b{n_batches - 1}" for t in range(n_threads) for i in range(n_keys)}
+    assert {r["id"]: r["name"] for r in sink.snapshot(spark).collect()} == want
+
+
 def test_snapshot_sink_reads_isolated_from_merges(spark, tmp_path) -> None:
     """A reader looping snapshot() plus an aggregate beside 200 small
-    merges sees no error. Each read opens the dirs one published
-    manifest maps, which no merge modifies and garbage collection keeps
-    for RETENTION_S — there is no bucket swap to race (the in-place
-    layout failed here: file not found on a swapped bucket's file)."""
+    appends and the background compactions they start sees no error.
+    Each read opens the dirs one published manifest lists, which no
+    writer modifies and garbage collection keeps for RETENTION_S —
+    there is no bucket swap to race (the in-place layout failed here:
+    file not found on a swapped bucket's file)."""
     import threading
 
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
@@ -1249,6 +1411,9 @@ def test_snapshot_sink_reads_isolated_from_merges(spark, tmp_path) -> None:
         thread.join(60)
     assert not errors, f"{len(errors)} of {reads + len(errors)} reads failed: {errors[0]!r}"
     assert reads > 0
+    # The first batch published no base: one exists only if background
+    # compactions ran beside the reads.
+    assert writer._head()["buckets"]
     final = reader.snapshot(spark).collect()
     assert {(r["id"], r["version"]) for r in final} == {(i, n_merges) for i in range(n_keys)}
 
