@@ -15,10 +15,11 @@ and merges post-shuffle partitions at runtime).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
 TABLES = (
     "region",
@@ -125,8 +126,53 @@ def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+# Confs under which Spark infers a different schema from the same parquet
+# footers; their values are part of a stored schema's signature.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (signature, Spark's inferred schema): one entry per loaded
+# path, replaced when the signature changes. Process-wide on purpose:
+# the schema depends only on the files and the confs in the signature,
+# not on which session inferred it.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """(size, mtime_ns, inode) of the file at ``path``, or of every file
+    under the dir at ``path``, so adding, removing or rewriting a data
+    file changes it. None when ``path`` cannot be stat'ed locally (a
+    remote URI, a missing path)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((st.st_size, st.st_mtime_ns, st.st_ino),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for name in names:
+                f = os.path.join(root, name)
+                fst = os.stat(f)
+                files.append((f, fst.st_size, fst.st_mtime_ns, fst.st_ino))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Read one of the test tables as a DataFrame (columnar parquet scan).
+
+    The schema is inferred once per file version. Spark's footer-reading
+    inference job runs on the first load of a path and its schema is
+    kept; a later load of the same version passes that schema and runs
+    no job. A new version starts when a data file under the path is
+    added, removed or rewritten (its size, mtime or inode changes), or
+    when one of ``_SCHEMA_CONFS`` changes value. A path that cannot be
+    stat'ed locally is inferred on every load.
 
     ``nanosAsLong`` is set (runtime-settable, harmless otherwise) so an
     ``events.ts`` stored as parquet TIMESTAMP(NANOS) still loads under any
@@ -136,7 +182,17 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     to normalize.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    version = _file_version(path)
+    if version is None:
+        return spark.read.parquet(path)
+    signature = (version, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    held = _SCHEMAS.get(path)
+    if held is not None and held[0] == signature:
+        return spark.read.schema(held[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (signature, df.schema)
+    return df
 
 
 def events_ts_micros_col(df: DataFrame, col: str = "ts") -> Column:
