@@ -9,13 +9,17 @@ replay windows.
 
 Scale design (100 TB change logs):
 
-* ``latest_snapshot`` is ``groupBy(pk).agg(max_by(...))`` — a hash
-  aggregate with map-side partial aggregation, NOT a window sort. Partial
-  aggregation collapses each map partition to one candidate row per key
-  before the shuffle, so shuffle volume ≈ |distinct keys|, not |events|.
-  A window (`row_number() OVER ...`) would shuffle every event and sort
-  per partition. The DuckDB oracle uses the window form — same result,
-  different physical plan.
+* ``latest_by`` is the one newest-row-per-key rule: ``groupBy(key)
+  .agg(max(struct(order, rest)))`` — a partial+final ``SortAggregate``
+  (the buffer holds strings) with map-side partial aggregation, NOT a
+  window sort. Partial aggregation collapses each map partition to one
+  candidate row per key before the shuffle, so shuffle volume ≈
+  |distinct keys|, not |events|. A window (`row_number() OVER ...`)
+  would shuffle every event and sort per partition. The DuckDB oracles
+  use the window form — same result, different physical plan. The
+  struct carries every input column through the exchange (Catalyst
+  does not prune its fields), so a caller that keeps a few columns
+  selects them before the call.
 * ``resume_offset`` is a two-column groupBy-max — trivially partial-agg.
 * ``update_pairs`` self-joins on (key, sequence): both sides shuffle on
   the same key so AQE can plan a shuffled-hash join; the before-side is
@@ -29,7 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from maxscale_cdc_connector_spark.envelope import ENVELOPE_COLUMNS, gtid_column
+from maxscale_cdc_connector_spark.envelope import gtid_column
 from maxscale_cdc_connector_spark.session import load_table
 
 
@@ -75,23 +79,39 @@ def with_gtid(events: DataFrame, col_name: str = "gtid") -> DataFrame:
     return events.withColumn(col_name, gtid_column())
 
 
+# GTID order, the stream's one total order (cdc_connector.h:65).
+GTID_ORDER = ("sequence", "event_number")
+
+
+def latest_by(df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]) -> DataFrame:
+    """The whole newest row per key: the greatest ``order_cols``.
+
+    One ``max(struct(*order_cols, *rest))`` per key, so a tie in
+    ``order_cols`` keeps the greatest row by the rest of its columns
+    (input order). A tie never splits a row and the result never
+    depends on partitioning or arrival order (Spark's ``MaxBy`` per
+    column keeps the first tied row each column meets). The max is
+    commutative and idempotent, so a replayed or duplicated row is
+    harmless.
+    Returns ``key_cols``, then the other columns in input order.
+    """
+    keys = list(key_cols)
+    cols = [c for c in df.columns if c not in keys]
+    rest = [c for c in cols if c not in order_cols]
+    latest = F.max(F.struct(*order_cols, *rest)).alias("_latest")
+    return df.groupBy(*keys).agg(latest).select(
+        *keys, *[F.col("_latest")[c].alias(c) for c in cols]
+    )
+
+
 def latest_snapshot(events: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Current row per primary key from insert/update/delete events.
 
-    The event with the greatest ``(sequence, event_number)`` per key wins
-    (GTID order is the stream's total order, cdc_connector.h:65); keys
-    whose last event is a ``delete`` disappear; ``update_before`` can
-    never win because its paired ``update_after`` shares the sequence
-    with a higher event_number.
-
-    Implemented as a hash aggregate (``max_by`` over a struct ordering
-    key) for map-side partial aggregation — see module docstring.
+    ``latest_by`` in GTID order; keys whose last event is a ``delete``
+    disappear; ``update_before`` can never win because its paired
+    ``update_after`` shares the sequence with a higher event_number.
     """
-    payload_cols = [c for c in events.columns if c not in key_cols]
-    ord_key = F.struct(F.col("sequence"), F.col("event_number"))
-    agg = [F.max_by(F.col(c), ord_key).alias(c) for c in payload_cols]
-    snap = events.groupBy(*key_cols).agg(*agg)
-    return snap.filter(F.col("event_type") != "delete")
+    return latest_by(events, key_cols, GTID_ORDER).filter(F.col("event_type") != "delete")
 
 
 def resume_offset(events: DataFrame) -> DataFrame:
@@ -151,7 +171,7 @@ def scd2_history(
     boundary = events.filter(
         F.col("event_type").isin("insert", "update_after", "delete")
     )
-    w = W.partitionBy(*key_cols).orderBy("sequence", "event_number")
+    w = W.partitionBy(*key_cols).orderBy(*GTID_ORDER)
     hist = boundary.withColumn("valid_to_seq", F.lead("sequence").over(w))
     return hist.filter(F.col("event_type") != "delete").select(
         *key_cols,
@@ -270,17 +290,16 @@ def merge_upsert(
     * key in both, non-delete   → ``updated`` (delta payload wins)
     * key only in delta         → ``inserted``
 
-    Scale: the collapse is a hash aggregate with map-side partials
-    (shuffle ≈ |delta keys|, not |delta events|), and the join keys both
-    sides on the primary key — the exact shuffle MERGE INTO performs on
-    a cluster. No windows, no driver state.
+    Scale: the collapse is ``latest_by`` over the columns the merge
+    needs (map-side partials, shuffle ≈ |delta keys|, not |delta
+    events|), and the join keys both sides on the primary key — the
+    exact shuffle MERGE INTO performs on a cluster. No windows, no
+    driver state.
     """
     val_cols = [c for c in payload_cols if c not in key_cols]
-    ord_key = F.struct(F.col("sequence"), F.col("event_number"))
-    net = delta.groupBy(*key_cols).agg(
-        *[F.max_by(F.col(c), ord_key).alias(f"d_{c}") for c in val_cols],
-        F.max_by(F.col("event_type"), ord_key).alias("d_event_type"),
-    )
+    net = latest_by(
+        delta.select(*key_cols, *GTID_ORDER, "event_type", *val_cols), key_cols, GTID_ORDER
+    ).select(*key_cols, *[F.col(c).alias(f"d_{c}") for c in ["event_type", *val_cols]])
     b = base.withColumn("_in_base", F.lit(1))
     joined = b.join(net, on=list(key_cols), how="full_outer")
     action = (

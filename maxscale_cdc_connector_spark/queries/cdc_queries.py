@@ -15,9 +15,11 @@ from pyspark.sql import functions as F
 from maxscale_cdc_connector_spark.envelope import gtid_column
 from maxscale_cdc_connector_spark.operators.cdc import (
     CDC_EVENTS_SQL,
+    GTID_ORDER,
     PAYLOAD_COLS,
     changes_between,
     decode_events,
+    latest_by,
     latest_snapshot,
     resume_offset,
     scd2_history,
@@ -110,9 +112,10 @@ ranked AS (
 SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
 FROM ranked WHERE rn = 1 AND event_type <> 'delete'
 """,
-    doc="Current row per primary key from the change log. Spark plan is a "
-    "hash aggregate (max_by over (sequence, event_number)) with map-side "
-    "partial aggregation — shuffle volume ~ |keys|, not |events|.",
+    doc="Current row per primary key from the change log. Spark plan is "
+    "latest_by: one max(struct((sequence, event_number), rest)) per key, a "
+    "partial+final SortAggregate with map-side partial aggregation — "
+    "shuffle volume ~ |keys|, not |events|.",
 )
 def cdc_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = synthetic_customer_events(spark, sf_dir)
@@ -205,8 +208,10 @@ GROUP BY n.n_name
     "only the half-up (+50) div form needs non-negative sums).",
 )
 def cdc_snapshot_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = synthetic_customer_events(spark, sf_dir)
-    snap = latest_snapshot(events, ["c_custkey"]).select("c_custkey", "c_nationkey", "c_acctbal")
+    events = synthetic_customer_events(spark, sf_dir).select(
+        "c_custkey", *GTID_ORDER, "event_type", "c_nationkey", "c_acctbal"
+    )
+    snap = latest_snapshot(events, ["c_custkey"])
     nation = load_table(spark, "nation", sf_dir)
     return (
         snap.join(F.broadcast(nation), snap.c_nationkey == nation.n_nationkey)
@@ -474,7 +479,7 @@ FROM ranked WHERE rn = 1 AND event_type <> 'delete'
     doc="Point-in-time snapshot (time travel): the table as of GTID "
     "sequence 15,000,000 — after the update wave, before any delete — "
     "by filtering the replay window FIRST (a pushed-down range "
-    "predicate) and snapshotting with the same max_by hash aggregate as "
+    "predicate) and snapshotting with the same latest_by aggregate as "
     "cdc_latest_snapshot. The change log is the history; any historical "
     "state is one filtered aggregate away, no stored snapshots needed.",
 )
@@ -621,7 +626,7 @@ WHERE a.c_custkey IS NULL OR b.c_custkey IS NULL
     doc="Snapshot diff between two points in time: what changed in the "
     "table between T1 and T2 — the audit/reconciliation query a CDC "
     "consumer runs to answer 'what did last night's replication do'. "
-    "Each snapshot is the hash-agg max_by state (no window sort) at its "
+    "Each snapshot is the latest_by aggregate (no window sort) at its "
     "cutoff; the diff is a full outer join on the primary key with "
     "added/removed/changed classification. Both sides shuffle once on "
     "the key and balances are exact integer cents.",
@@ -1039,7 +1044,7 @@ WHERE n.event_type IS NULL OR n.event_type <> 'delete'
 """,
     doc="MERGE INTO (lakehouse upsert): the update/delete tranche of the "
     "change log applied onto the base snapshot in one pass — delta "
-    "collapsed to one net action per key by GTID order (hash aggregate, "
+    "collapsed to one net action per key by GTID order (latest_by, "
     "map-side partials: shuffle ~ |keys| not |events|), then a single "
     "key-partitioned full-outer join resolves kept/updated/inserted and "
     "drops deletes. Provenance rides along as merge_action. The result "
@@ -1214,8 +1219,8 @@ FROM ranked WHERE rn = 1 AND event_type <> 'delete'
     "unioned and resolved per key by LAST-WRITER-WINS on (event_ts, "
     "domain, sequence, event_number) — the conflict rule active-active "
     "replication and dual-pipeline migrations need, where neither "
-    "source's GTID sequence totally orders the other's. One hash "
-    "aggregate (max_by over the 4-part ordering struct) with map-side "
+    "source's GTID sequence totally orders the other's. One latest_by "
+    "over the 4-part order (a partial+final SortAggregate) with map-side "
     "partials — shuffle ~ |keys| across BOTH feeds, and src_domain "
     "rides along so the output shows which source won each key.",
 )
@@ -1235,18 +1240,16 @@ def cdc_multi_source_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_acctbal") + 500.0).alias("c_acctbal"),
         F.lit("FURNITURE").alias("c_mktsegment"),
     )
-    unioned = events.unionByName(replica)
-    ord_key = F.struct("event_ts", "domain", "sequence", "event_number")
-    resolved = unioned.groupBy("c_custkey").agg(
-        F.max_by(
-            F.struct("domain", "event_type", "c_acctbal", "c_mktsegment"), ord_key
-        ).alias("w")
+    order = ["event_ts", "domain", "sequence", "event_number"]
+    unioned = events.unionByName(replica).select(
+        "c_custkey", *order, "event_type", "c_acctbal", "c_mktsegment"
     )
-    return resolved.where(F.col("w.event_type") != "delete").select(
+    resolved = latest_by(unioned, ["c_custkey"], order)
+    return resolved.where(F.col("event_type") != "delete").select(
         "c_custkey",
-        F.col("w.domain").cast("bigint").alias("src_domain"),
-        F.col("w.c_acctbal").alias("c_acctbal"),
-        F.col("w.c_mktsegment").alias("c_mktsegment"),
+        F.col("domain").cast("bigint").alias("src_domain"),
+        "c_acctbal",
+        "c_mktsegment",
     )
 
 
@@ -1254,20 +1257,19 @@ def cdc_multi_source_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cdc_tombstone_gc",
     oracle=f"""
 WITH {CDC_EVENTS_SQL},
-last_per_key AS (
-    SELECT c_custkey,
-           max(sequence) AS last_seq,
-           max_by(event_type, sequence * 10 + event_number) AS last_type,
-           max(event_ts) AS last_ts
-    FROM cdc_events GROUP BY c_custkey
+ranked AS (
+    SELECT *, row_number() OVER (
+        PARTITION BY c_custkey ORDER BY sequence DESC, event_number DESC
+    ) AS rn
+    FROM cdc_events
 ),
 horizon AS (SELECT max(event_ts) - 50000000 AS cutoff FROM cdc_events)
 SELECT l.c_custkey,
-       CAST(l.last_seq AS BIGINT) AS tombstone_seq,
-       CAST(l.last_ts AS BIGINT) AS deleted_at_ts,
-       (l.last_ts <= hz.cutoff) AS gc_eligible
-FROM last_per_key l, horizon hz
-WHERE l.last_type = 'delete'
+       CAST(l.sequence AS BIGINT) AS tombstone_seq,
+       CAST(l.event_ts AS BIGINT) AS deleted_at_ts,
+       (l.event_ts <= hz.cutoff) AS gc_eligible
+FROM ranked l, horizon hz
+WHERE l.rn = 1 AND l.event_type = 'delete'
 """,
     doc="Tombstone garbage collection planning — the log-compaction "
     "question every CDC retention job answers: which deleted keys' "
@@ -1277,25 +1279,21 @@ WHERE l.last_type = 'delete'
     "Purging a tombstone too early resurrects the row on replay from "
     "an older snapshot, so the eligibility flag rides with the "
     "evidence (sequence, timestamp) rather than silently filtering. "
-    "One key-partitioned max_by aggregate + a broadcast scalar.",
+    "One key-partitioned latest_by in GTID order + a broadcast scalar.",
 )
 def cdc_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = synthetic_customer_events(spark, sf_dir)
-    last = events.groupBy("c_custkey").agg(
-        F.max("sequence").alias("tombstone_seq"),
-        F.max_by(
-            "event_type", F.col("sequence") * 10 + F.col("event_number")
-        ).alias("last_type"),
-        F.max("event_ts").alias("last_ts"),
+    last = latest_by(
+        events.select("c_custkey", *GTID_ORDER, "event_type", "event_ts"), ["c_custkey"], GTID_ORDER
     )
     horizon = events.agg((F.max("event_ts") - 50_000_000).alias("cutoff"))
     return (
-        last.where(F.col("last_type") == "delete")
+        last.where(F.col("event_type") == "delete")
         .crossJoin(F.broadcast(horizon))
         .select(
             "c_custkey",
-            F.col("tombstone_seq").cast("bigint").alias("tombstone_seq"),
-            F.col("last_ts").cast("bigint").alias("deleted_at_ts"),
-            (F.col("last_ts") <= F.col("cutoff")).alias("gc_eligible"),
+            F.col("sequence").cast("bigint").alias("tombstone_seq"),
+            F.col("event_ts").cast("bigint").alias("deleted_at_ts"),
+            (F.col("event_ts") <= F.col("cutoff")).alias("gc_eligible"),
         )
     )

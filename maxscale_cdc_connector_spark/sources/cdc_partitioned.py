@@ -130,7 +130,7 @@ from maxscale_cdc_connector_spark.sources.protocol import (
     CDCProtocolError,
     SchemaChangedError,
 )
-from maxscale_cdc_connector_spark.streaming.ops import SOURCE_ID_COL
+from maxscale_cdc_connector_spark.streaming.ops import EVENT_IDENTITY, SOURCE_ID_COL
 from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
 
 DEFAULT_MAX_RECORDS_PER_BATCH = 100_000
@@ -716,7 +716,7 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
             explicit_schema=wire_schema, unexpected_field_behavior="ignore"
         )
         field_names = [f.name for f in schema_fields]
-        envelope = ("domain", "server_id", "sequence", "event_number")
+        envelope = EVENT_IDENTITY
         # The columnar path needs the envelope for cursor/frontier math;
         # a schema without it (not a real avrorouter stream) decodes
         # every block per record, reading the envelope off the wire.
@@ -912,7 +912,7 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
             table=cfg["table"],
             gtid=partition.gtid or None,
             timeout=partition.poll_seconds,
-            handshake_timeout=getattr(partition, "handshake_seconds", None),
+            handshake_timeout=partition.handshake_seconds,
         )
         client.connect()
         _t_hs = time.perf_counter() - _t_read0  # dial+auth+REGISTER+schema

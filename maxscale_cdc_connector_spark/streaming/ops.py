@@ -46,6 +46,8 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from maxscale_cdc_connector_spark.operators.cdc import GTID_ORDER, latest_by
+
 # Envelope identity of one event: GTID triple + event_number
 # (cdc_connector.h:199-208 + event_number disambiguates the two halves
 # of an update sharing one GTID).
@@ -350,8 +352,7 @@ class SnapshotSink:
 
     BUCKET_COL = "_bucket"
     # The single-GTID-space default (cdc_connector.h:199-208 envelope).
-    DEFAULT_ORDER = ("sequence", "event_number")
-    _LATEST = "_latest"
+    DEFAULT_ORDER = GTID_ORDER
 
     def __init__(
         self,
@@ -554,14 +555,12 @@ class SnapshotSink:
     def _reduce(self, spark, head: dict, touched: set[str]) -> DataFrame:
         """The latest row per key of the ``touched`` buckets, with
         ``_bucket``: their base rows and every delta row under one
-        aggregate, the per-key max of (order_cols, rest), which is the
-        whole latest row. The max is commutative and idempotent, so the
-        order of the deltas, a replayed batch and a delta folded twice
-        are all harmless. The one shuffle, on ``_bucket`` with no count,
-        lets AQE size a compaction's file count from the data, and the
-        sort aggregate leaves each file sorted by ``_bucket``, so a
-        reader's ``_bucket`` filter skips row groups by their
-        statistics."""
+        ``latest_by`` on ``order_cols``, so the order of the deltas, a
+        replayed batch and a delta folded twice are all harmless. The
+        one shuffle, on ``_bucket`` with no count, lets AQE size a
+        compaction's file count from the data, and the sort aggregate
+        leaves each file sorted by ``_bucket``, so a reader's
+        ``_bucket`` filter skips row groups by their statistics."""
         rows = spark.read.schema(self._schema(head)).parquet(
             *[os.path.join(self.path, d["dir"]) for d in head["deltas"]]
         )
@@ -569,17 +568,10 @@ class SnapshotSink:
         if base:
             rows = rows.unionByName(self._scan(spark, head, base))
         rest = [c for c in rows.columns if c not in self.key_cols and c != self.BUCKET_COL]
-        latest = F.max(F.struct(*self.order_cols, *[c for c in rest if c not in self.order_cols]))
-        return (
-            rows.repartition(self.BUCKET_COL)
-            .groupBy(self.BUCKET_COL, *self.key_cols)
-            .agg(latest.alias(self._LATEST))
-            .select(
-                *self.key_cols,
-                self.BUCKET_COL,
-                *[F.col(self._LATEST)[c].alias(c) for c in rest],
-            )
+        latest = latest_by(
+            rows.repartition(self.BUCKET_COL), [self.BUCKET_COL, *self.key_cols], self.order_cols
         )
+        return latest.select(*self.key_cols, self.BUCKET_COL, *rest)
 
     def current(self, spark) -> DataFrame | None:
         """The newest version, tombstones included; None before the

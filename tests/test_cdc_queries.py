@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from tests.oracle import compare_query
@@ -285,3 +286,42 @@ def test_incremental_var_equals_snapshot_recompute(spark, sf_dir) -> None:
         .collect()
     }
     assert inc == full
+
+
+def test_tombstone_gc_orders_by_gtid_past_event_number_ten(spark, monkeypatch) -> None:
+    """A transaction of 10+ row events puts event_number >= 10: the last
+    event per key is the greatest (sequence, event_number), not the
+    greatest ``sequence * 10 + event_number`` (seq 5 evn 15 → 65 would
+    beat seq 6 evn 1 → 61). Spark and the oracle read the same crafted
+    log."""
+    import pandas as pd
+
+    from maxscale_cdc_connector_spark.operators.cdc import CDC_EVENTS_SQL
+    from maxscale_cdc_connector_spark.queries import REGISTRY, cdc_queries, load_all
+
+    load_all()
+    log = pd.DataFrame(
+        [
+            (1, 5, 15, 100, "delete"),  # re-inserted at seq 6: live
+            (1, 6, 1, 200, "insert"),
+            (2, 5, 15, 300, "insert"),  # deleted at seq 6
+            (2, 6, 1, 1_000, "delete"),
+            (3, 7, 1, 2_000, "insert"),  # deleted at evn 12 of seq 7
+            (3, 7, 12, 100_000_000, "delete"),
+        ],
+        columns=["c_custkey", "sequence", "event_number", "event_ts", "event_type"],
+    )
+    events = spark.createDataFrame(log).repartition(3)
+    monkeypatch.setattr(cdc_queries, "synthetic_customer_events", lambda spark, sf_dir: events)
+    entry = REGISTRY["cdc_tombstone_gc"]
+    # horizon = 100_000_000 - 50_000_000: key 2's tombstone is old enough.
+    want = {(2, 6, 1_000, True), (3, 7, 100_000_000, False)}
+    cols = ["c_custkey", "tombstone_seq", "deleted_at_ts", "gc_eligible"]
+    got = {tuple(r) for r in entry.fn(spark, "").select(*cols).collect()}
+    assert got == want
+    con = duckdb.connect()
+    con.register("crafted", log)
+    sql = entry.oracle.replace(CDC_EVENTS_SQL, "cdc_events AS (SELECT * FROM crafted)")
+    res = con.execute(sql)
+    names = [d[0] for d in res.description]
+    assert {tuple(dict(zip(names, r))[c] for c in cols) for r in res.fetchall()} == want

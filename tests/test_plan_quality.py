@@ -409,17 +409,35 @@ def test_q2_q11_broadcast_dims_no_cartesian(spark, sf_dir) -> None:
 
 
 def test_merge_upsert_preaggregates_delta(spark, sf_dir) -> None:
-    """MERGE INTO must collapse the delta log with a partial+final hash
+    """MERGE INTO must collapse the delta log with a partial+final
     aggregate BEFORE the key join (shuffle ~ |keys|, not |events|), and
     the base-delta resolution must be a keyed join, never cartesian."""
     s = _summary(spark, sf_dir, "cdc_merge_into_upsert")
-    # max_by over a string-bearing struct compiles to SortAggregate, not
+    # max over a string-bearing struct compiles to SortAggregate, not
     # HashAggregate — what matters is partial+final around the exchange.
     assert s.count("SortAggregate") + s.count("HashAggregate") >= 2, s.nodes
     assert s.has("SortMergeJoin") or s.has("ShuffledHashJoin") or s.has(
         "BroadcastHashJoin"
     ), s.nodes
     assert not s.has("CartesianProduct")
+
+
+@pytest.mark.parametrize(
+    "name", ["cdc_latest_snapshot", "cdc_merge_into_upsert", "cdc_multi_source_reconcile"]
+)
+def test_latest_row_per_key_is_one_max_struct(spark, sf_dir, name) -> None:
+    """Each newest-row-per-key query plans one latest_by: ONE
+    ``max(struct(...))`` aggregate function with a map-side partial and a
+    final part, never a per-column ``max_by``."""
+    import re
+
+    s = _summary(spark, sf_dir, name)
+    functions = " ".join(
+        line for line in s.text.splitlines() if line.startswith("Functions [")
+    )
+    assert len(re.findall(r"\bpartial_max\(struct\(", functions)) == 1, functions
+    assert len(re.findall(r"\bmax\(struct\(", functions)) == 1, functions
+    assert "max_by" not in s.text, functions
 
 
 def test_linear_attribution_single_user_exchange(spark, sf_dir) -> None:

@@ -5,6 +5,7 @@ event-order permutation, typemap totality/round-trips, GTID round-trip.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
 import types
 from unittest import mock
@@ -14,7 +15,7 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from maxscale_cdc_connector_spark.envelope import gtid_column, parse_gtid
-from maxscale_cdc_connector_spark.operators.cdc import latest_snapshot
+from maxscale_cdc_connector_spark.operators.cdc import latest_by, latest_snapshot
 from maxscale_cdc_connector_spark.typemap import (
     field_sql_type,
     schema_record_to_struct,
@@ -124,6 +125,32 @@ def test_snapshot_invariant_under_permutation(spark, events) -> None:
         k: (e[2], e[6], e[4]) for k, e in _expected_snapshot(list(events)).items()
     }
     assert got == want
+
+
+def test_latest_by_invariant_under_permutation(spark) -> None:
+    """latest_by over a multi-column order with ties: every permutation
+    of one log yields the Python max over (order, rest) per key — a tie
+    never splits a row and arrival order never matters. All 120
+    permutations run as one job, each under its own ``perm`` key, spread
+    over several input partitions."""
+    log = [
+        (0, 1, 2, "x", 5),
+        (0, 1, 2, "y", 3),  # ties (1, 2): the greater rest wins
+        (0, 1, 1, "z", 9),
+        (1, 2, 0, "p", 1),
+        (1, 2, 0, "p", 2),  # ties (2, 0) and v: w decides
+    ]
+    rows = [
+        (perm, *e) for perm, order in enumerate(itertools.permutations(log)) for e in order
+    ]
+    df = spark.sparkContext.parallelize(rows, 7).toDF(["perm", "k", "a", "b", "v", "w"])
+    out = latest_by(df, ["perm", "k"], ["a", "b"])
+    assert out.columns == ["perm", "k", "a", "b", "v", "w"]
+    want = {
+        k: max(((a, b), (v, w)) for kk, a, b, v, w in log if kk == k) for k in (0, 1)
+    }
+    got = {(r["perm"], r["k"]): ((r["a"], r["b"]), (r["v"], r["w"])) for r in out.collect()}
+    assert got == {(p, k): want[k] for p in range(120) for k in want}
 
 
 @settings(
