@@ -46,14 +46,6 @@ SIMHASH_BITS = 63  # stay within a signed 64-bit long
 SIMHASH_CHUNKS = 4  # pigeonhole: hamming ≤ 3 ⇒ some 16-bit chunk equal
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to core count — only when underparallel.
-    r17: the guard was promoted to ``session.ensure_scan_parallelism``
-    so the text/JSON/simsearch builders can share it; this alias keeps
-    the operator-local name every dedup call site and test uses."""
-    return ensure_scan_parallelism(df)
-
-
 def duplicated_corpus(docs: DataFrame, id_col: str = "doc_id", shift: int = 1_000_000) -> DataFrame:
     """The corpus plus an id-shifted copy of itself.
 
@@ -198,7 +190,7 @@ def jaccard_pairs_prefix(
     # whole-stage codegen.
     with barriers() as hold:
         arrs = hold(eager_barrier(
-            shingle_arrays(_ensure_parallelism(docs), text_col, id_col, k)
+            shingle_arrays(ensure_scan_parallelism(docs), text_col, id_col, k)
             .withColumn("shingles", F.sort_array("shingles")),
             input_bytes(docs),
         ))
@@ -374,7 +366,7 @@ def minhash_dedup_pairs(
         # approxSimilarityJoin). Size is O(corpus tokens) — spillable
         # MEMORY_AND_DISK by default.
         sh = hold(
-            shingle_arrays(_ensure_parallelism(docs), text_col, id_col, k).persist()
+            shingle_arrays(ensure_scan_parallelism(docs), text_col, id_col, k).persist()
         )
         # Persisting the signatures inserts a materialization barrier between
         # the signature expression and the banding projection — without it,

@@ -131,7 +131,7 @@ from maxscale_cdc_connector_spark.sources.protocol import (
     SchemaChangedError,
 )
 from maxscale_cdc_connector_spark.streaming.ops import EVENT_IDENTITY, SOURCE_ID_COL
-from maxscale_cdc_connector_spark.typemap import schema_record_to_struct
+from maxscale_cdc_connector_spark.typemap import is_schema_record, schema_record_to_struct
 
 DEFAULT_MAX_RECORDS_PER_BATCH = 100_000
 DEFAULT_POLL_SECONDS = 1.0
@@ -334,21 +334,6 @@ def _cursor_key(gtid: str, evn: int) -> tuple[int, int, int, int]:
     return (*_gtid_key(gtid), evn)
 
 
-def _plan_timing(tag: str, n_streams: int, t0: float) -> None:
-    """Env-gated driver-side planning timing (VERDICT r15 item 7).
-
-    The streaming reader's offset/planning methods run in the
-    dedicated Python planner process the JVM spawns — out of reach of
-    probe-process monkeypatching — so decomposing the idle-trigger
-    floor needs an in-code hook, same pattern as
-    ``MAXSCALE_CDC_READ_TIMING``. Appends one line per call; costs one
-    getenv when disabled."""
-    path = os.environ.get("MAXSCALE_CDC_PLAN_TIMING")
-    if path:
-        with open(path, "a") as fh:
-            fh.write(f"{tag} n={n_streams} dt={time.perf_counter() - t0:.6f}\n")
-
-
 _DEFAULT_FRONTIER_PREFIX = "maxscale-cdc-frontier-"
 
 
@@ -410,32 +395,18 @@ def _read_frontier(path: str, run_id: str | None = None) -> tuple[str, int] | No
 
 class CDCStreamPartition(InputPartition):
     """One stream's read assignment for one micro-batch (pickled to the
-    executor). Carries everything ``read`` needs: connection config, the
-    resume cursor, caps, and where to report the attained frontier."""
+    executor): its connection config, the resume cursor, where to report
+    the attained frontier, and the id of the reader incarnation that
+    planned it (the executor-side reader mints its own). Reader-wide
+    settings come from the reader ``read`` runs on, which Spark builds
+    from the same options."""
 
-    def __init__(
-        self,
-        config: dict[str, Any],
-        gtid: str,
-        evn: int,
-        frontier_path: str,
-        max_records: int,
-        poll_seconds: float,
-        null_missing: bool,
-        max_batch_seconds: float = 10.0,
-        run_id: str = "",
-        handshake_seconds: float | None = None,
-    ) -> None:
+    def __init__(self, config: dict[str, Any], gtid: str, evn: int, frontier_path: str, run_id: str) -> None:
         self.config = config
         self.gtid = gtid
         self.evn = evn
         self.frontier_path = frontier_path
-        self.max_records = max_records
-        self.poll_seconds = poll_seconds
-        self.null_missing = null_missing
-        self.max_batch_seconds = max_batch_seconds
         self.run_id = run_id
-        self.handshake_seconds = handshake_seconds
 
 
 class CDCPartitionedStreamReader(DataSourceStreamReader):
@@ -579,7 +550,6 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
         # asked "how much is there", only streamed from a GTID, so the
         # executors discover the data volume and report it back through
         # the frontier files folded in here.
-        t0 = time.perf_counter()
         self._epoch = max(self._epoch + 1, int(time.time() * 1000))
         streams = {}
         for sid, cfg in self._streams.items():
@@ -588,7 +558,6 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
             if front is not None and _cursor_key(*front) > _cursor_key(*cur):
                 cur = front
             streams[sid] = {"gtid": cur[0], "evn": cur[1]}
-        _plan_timing("latestOffset", len(self._streams), t0)
         return {"epoch": self._epoch, "streams": streams}
 
     def commit(self, end: dict) -> None:
@@ -603,7 +572,6 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         if start.get("epoch") == end.get("epoch"):
             return []
-        t0 = time.perf_counter()
         parts: list[InputPartition] = []
         for sid, cfg in self._streams.items():
             # Resume from the NEWER of the two offsets: `end` normally
@@ -621,15 +589,9 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
                     gtid=gtid,
                     evn=evn,
                     frontier_path=self._frontier(sid),
-                    max_records=self._max_records,
-                    poll_seconds=self._poll_seconds,
-                    null_missing=self._null_missing,
-                    max_batch_seconds=self._max_batch_seconds,
                     run_id=self._run_id,
-                    handshake_seconds=self._handshake_seconds,
                 )
             )
-        _plan_timing("partitions", len(self._streams), t0)
         return parts
 
     def read(self, partition: InputPartition):  # executor-side
@@ -648,7 +610,6 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
         import pyarrow.compute as pc
         import pyarrow.json as pj
 
-        _t_read0 = time.perf_counter()
         assert isinstance(partition, CDCStreamPartition)
         # PySpark workers export OMP_NUM_THREADS=1 (task cpus), which
         # Arrow reads at init — pa.cpu_count() == 1 serializes the
@@ -723,7 +684,7 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
         fast_ok = all(name in field_names for name in envelope)
         cfg = partition.config
         cursor = _cursor_key(partition.gtid, partition.evn)
-        null_missing = partition.null_missing
+        null_missing = self._null_missing
 
         def to_batch(buf: list[dict]) -> "pa.RecordBatch":
             arrays = []
@@ -754,8 +715,6 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
             # per-line Python loop this replaces was ~8% of ingest CPU);
             # only a block containing the marker pays the line split,
             # and only candidate lines pay a parse.
-            from maxscale_cdc_connector_spark.sources.protocol import is_schema_record
-
             if b'"fields"' not in block:
                 return
             for ln in block.split(b"\n"):
@@ -911,11 +870,10 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
             password=cfg["password"],
             table=cfg["table"],
             gtid=partition.gtid or None,
-            timeout=partition.poll_seconds,
-            handshake_timeout=partition.handshake_seconds,
+            timeout=self._poll_seconds,
+            handshake_timeout=self._handshake_seconds,
         )
         client.connect()
-        _t_hs = time.perf_counter() - _t_read0  # dial+auth+REGISTER+schema
         try:
             # Every micro-batch reconnects, so an ALTER made since the
             # last batch arrives as the LEADING schema record
@@ -958,7 +916,7 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
                         # lines in ms and never hits it).
                         b = client.read_raw_block(
                             ARROW_BATCH_RECORDS,
-                            max_seconds=partition.poll_seconds,
+                            max_seconds=self._poll_seconds,
                         )
                         fetched.put(b)  # None = idle → consumer ends
                         if b is None:
@@ -969,8 +927,8 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
             fetcher = threading.Thread(target=_prefetch, daemon=True)
             fetcher.start()
             try:
-                deadline = time.monotonic() + partition.max_batch_seconds
-                while delivered < partition.max_records:
+                deadline = time.monotonic() + self._max_batch_seconds
+                while delivered < self._max_records:
                     if time.monotonic() > deadline:
                         # Steady-trickle guard (DEFAULT_MAX_BATCH_SECONDS):
                         # arrivals faster than pollSeconds never hit idle,
@@ -985,7 +943,7 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
                         break
                     block, _ = blk
                     check_schema_block(block)
-                    cap = partition.max_records - delivered
+                    cap = self._max_records - delivered
                     decoded = None
                     if fast_ok:
                         try:
@@ -1015,13 +973,6 @@ class CDCPartitionedStreamReader(DataSourceStreamReader):
                 # to the task; a killed task writes nothing and the
                 # range simply replays.
                 _write_frontier(partition.frontier_path, *last, run_id=partition.run_id)
-            if os.environ.get("MAXSCALE_CDC_READ_TIMING"):
-                with open(os.environ["MAXSCALE_CDC_READ_TIMING"], "a") as _fh:
-                    _fh.write(
-                        f"{cfg['table']} rows={delivered} "
-                        f"dt={time.perf_counter() - _t_read0:.3f} "
-                        f"hs={_t_hs:.3f}\n"
-                    )
         finally:
             client.close()
 

@@ -39,6 +39,8 @@ import socket
 import time
 from typing import Any
 
+from maxscale_cdc_connector_spark.typemap import is_schema_record
+
 REGISTER_MESSAGE = "REGISTER UUID=CDC_CONNECTOR-1.0.0, TYPE=JSON"
 DEFAULT_TIMEOUT = 10.0  # seconds (reference default, cdc_connector.h:58)
 MAX_LINE_BYTES = 16 * 1024 * 1024  # sanity bound on one JSON event line
@@ -66,17 +68,6 @@ def auth_string(user: str, password: str) -> bytes:
     user_hex = (user + ":").encode("utf-8").hex()
     pw_hex = hashlib.sha1(password.encode("utf-8")).hexdigest()
     return (user_hex + pw_hex).encode("ascii")
-
-
-def is_schema_record(obj: dict[str, Any]) -> bool:
-    """Schema-record detection per is_schema (cdc_connector.cpp:237-248)."""
-    fields = obj.get("fields")
-    return (
-        isinstance(fields, list)
-        and len(fields) > 0
-        and isinstance(fields[0], dict)
-        and "name" in fields[0]
-    )
 
 
 class CDCClient:

@@ -35,6 +35,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import shutil
 import threading
 import time
@@ -310,11 +311,13 @@ class SnapshotSink:
     one's dirs with that schema — no listing of the table, no footer
     inference — NULL-filling the columns a dir predates, and keeps from
     each base dir only the buckets mapped to it: an older dir still
-    holds the rows of buckets a later compaction superseded. Base
-    entries of the earlier layouts, ``data/<version>-<id>`` merge dirs,
-    ``data/<version>-<id>/_bucket=<b>`` leaves and adopted root
-    ``_bucket=<b>`` dirs, read through the same scan, and a manifest
-    without a delta list has no deltas. Deleted keys stay in-state as
+    holds the rows of buckets a later compaction superseded. Every base
+    entry is a ``data/<name>`` dir that stores ``_bucket``. A state dir
+    of an earlier layout — a manifest without a delta list or mapping a
+    bucket to anything else, or root ``_bucket=<b>`` dirs, parked
+    ``.old-_bucket=<b>`` dirs or a ``.sink-meta.json`` marker with no
+    manifest — is refused with ``ValueError``, never read as empty:
+    rebuild its state from the change log. Deleted keys stay in-state as
     TOMBSTONES (a late replay of an older event can never resurrect a
     deleted key); ``snapshot()`` filters them, ``current()`` returns
     them raw.
@@ -384,13 +387,18 @@ class SnapshotSink:
         return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
 
     def _read(self, version: int) -> dict | None:
-        """The manifest, or None when it is unreadable or incomplete."""
+        """The manifest, or None when it is unreadable, incomplete or of
+        an earlier layout: one without a delta list, or one mapping a
+        bucket to anything but a ``data/<name>`` dir."""
         try:
             with open(self._manifest(version)) as fh:
                 m = json.load(fh)
-            if {"n_buckets", "key_cols", "order_cols", "schema", "buckets"} <= m.keys():
+            keys = {"n_buckets", "key_cols", "order_cols", "schema", "buckets", "deltas"}
+            if keys <= m.keys() and all(
+                re.fullmatch(r"data/[^/]+", d) for d in m["buckets"].values()
+            ):
                 return m
-        except (OSError, ValueError, AttributeError):
+        except (OSError, ValueError, AttributeError, TypeError):
             pass
         return None
 
@@ -401,7 +409,9 @@ class SnapshotSink:
         With none readable, refuse: guessed parameters would switch off
         the guard they exist for (r9 review: a different n_buckets
         strands rows in stale buckets, a different key_cols or
-        order_cols silently changes merge identity)."""
+        order_cols silently changes merge identity). A dir holding the
+        state of the earlier in-place layout is refused too: read as
+        empty, its first batch would publish over its rows."""
         versions = self._versions()
         for v in reversed(versions):
             m = self._read(v)
@@ -411,6 +421,19 @@ class SnapshotSink:
             raise ValueError(
                 f"no readable manifest among {len(versions)} under "
                 f"{self._manifest()}: the state table's parameters are unknown"
+            )
+        live = f"{self.BUCKET_COL}="
+        try:
+            earlier = [
+                e for e in os.listdir(self.path) if e.startswith((live, ".old-" + live, ".sink-meta.json"))
+            ]
+        except FileNotFoundError:
+            return None
+        if earlier:
+            raise ValueError(
+                f"{self.path} holds a state table of an earlier SnapshotSink "
+                f"layout ({sorted(earlier)[0]}), which is no longer read: "
+                "rebuild the state from the change log"
             )
         return None
 
@@ -438,53 +461,6 @@ class SnapshotSink:
             os.fsync(fh.fileno())
         os.replace(tmp, self._manifest(version))
 
-    def _adopt(self, spark) -> dict | None:
-        """Adopt a state dir of the earlier in-place layout — ``_bucket=<b>``
-        dirs swapped by rename beside a ``.sink-meta.json`` parameter
-        marker — once, as version 0. A bucket a crashed swap left parked
-        as ``.old-_bucket=<b>`` is restored when its live dir is missing
-        and dropped otherwise. A missing or unreadable marker is refused
-        like an unreadable manifest."""
-        live = f"{self.BUCKET_COL}="
-        try:
-            entries = os.listdir(self.path)
-        except FileNotFoundError:
-            return None
-        if not any(e.startswith((live, ".old-" + live)) for e in entries):
-            return None
-        marker = os.path.join(self.path, ".sink-meta.json")
-        try:
-            with open(marker) as fh:
-                params = json.load(fh)
-            params.setdefault("order_cols", list(self.DEFAULT_ORDER))  # pre-r10 marker
-            head = {k: params[k] for k in ("n_buckets", "key_cols", "order_cols")}
-        except (OSError, ValueError, AttributeError, KeyError) as exc:
-            raise ValueError(
-                f"cannot adopt the state table at {self.path}: its parameter "
-                f"marker {marker} is missing or unreadable"
-            ) from exc
-        for e in entries:
-            if e.startswith(".old-" + live):
-                old, dst = os.path.join(self.path, e), os.path.join(self.path, e[5:])
-                if os.path.isdir(dst):
-                    shutil.rmtree(old, ignore_errors=True)
-                else:
-                    os.rename(old, dst)
-            elif e.startswith(".tmp-"):
-                shutil.rmtree(os.path.join(self.path, e), ignore_errors=True)
-        parts = sorted(e for e in os.listdir(self.path) if e.startswith(live))
-        # One footer pass, once: the buckets may hold pre- and post-ALTER files.
-        schema = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(self.path, p) for p in parts])
-            .schema
-        )
-        head["schema"] = schema.jsonValue()
-        head["buckets"] = {p[len(live):]: p for p in parts}
-        self._publish(0, head)
-        os.remove(marker)
-        return head
-
     def _gc(self) -> None:
         """Delete what no reader can still hold. The newest manifest and
         every one superseded less than ``RETENTION_S`` ago stay, with
@@ -501,22 +477,13 @@ class SnapshotSink:
                 continue
             m = self._read(v)
             if m is not None:
-                keep.update(self._top(d) for d in m["buckets"].values())
-                keep.update(d["dir"] for d in m.get("deltas", ()))
+                keep.update(m["buckets"].values())
+                keep.update(d["dir"] for d in m["deltas"])
         data = os.path.join(self.path, "data")
         dirs = [f"data/{e}" for e in os.listdir(data)] if os.path.isdir(data) else []
-        dirs += [e for e in os.listdir(self.path) if e.startswith(self.BUCKET_COL + "=")]
         for d in dirs:
             if d not in keep:
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    @staticmethod
-    def _top(entry: str) -> str:
-        """The data dir a base entry lives in: ``data/<name>`` for a
-        compaction or merge dir and for a ``data/<v>-<id>/_bucket=<b>``
-        leaf of the earlier per-bucket layout, the entry itself for an
-        adopted root ``_bucket=<b>`` dir."""
-        return "/".join(entry.split("/")[:2]) if entry.startswith("data/") else entry
 
     def _schema(self, head: dict) -> T.StructType:
         return T.StructType.fromJson(head["schema"]).add(self.BUCKET_COL, T.LongType())
@@ -527,30 +494,24 @@ class SnapshotSink:
         and keeps only the buckets mapped to it, by a ``_bucket IN (…)``
         filter Spark pushes into the parquet scan: a compaction dir holds
         every bucket it wrote, including ones a later compaction
-        superseded. Leaves of the earlier layouts (``_bucket=<b>`` dirs)
-        open by parent, as ``basePath``, so ``_bucket`` comes from the
-        dir name."""
+        superseded."""
         schema = self._schema(head)
-        groups: dict[str, tuple[set[str], list[int]]] = {}
+        groups: dict[str, list[int]] = {}
         for b, d in buckets.items():
-            leaf = os.path.basename(d).startswith(self.BUCKET_COL + "=")
-            dirs, ids = groups.setdefault(os.path.dirname(d) if leaf else d, (set(), []))
-            dirs.add(d)
-            ids.append(int(b))
+            groups.setdefault(d, []).append(int(b))
         frames = [
             spark.read.schema(schema)
-            .option("basePath", os.path.join(self.path, base))
-            .parquet(*[os.path.join(self.path, d) for d in sorted(dirs)])
+            .parquet(os.path.join(self.path, d))
             # A SQL string: one py4j call, not one per literal.
             .filter(f"{self.BUCKET_COL} IN ({', '.join(map(str, sorted(ids)))})")
-            for base, (dirs, ids) in groups.items()
+            for d, ids in groups.items()
         ]
         return functools.reduce(DataFrame.unionByName, frames)
 
     @staticmethod
     def _touched(head: dict) -> set[str]:
         """The buckets the head's deltas hold rows of."""
-        return {str(b) for d in head.get("deltas", ()) for b in d["buckets"]}
+        return {str(b) for d in head["deltas"] for b in d["buckets"]}
 
     def _reduce(self, spark, head: dict, touched: set[str]) -> DataFrame:
         """The latest row per key of the ``touched`` buckets, with
@@ -576,8 +537,7 @@ class SnapshotSink:
     def current(self, spark) -> DataFrame | None:
         """The newest version, tombstones included; None before the
         first publish. The buckets a delta touches are reduced on read.
-        A state dir of the earlier layout reads as None until the
-        writer's first batch adopts it."""
+        A state dir of an earlier layout raises ``ValueError``."""
         head = self._head()
         if head is None:
             return None
@@ -647,7 +607,7 @@ class SnapshotSink:
             raise RuntimeError(f"SnapshotSink compaction at {self.path} failed") from failed
         spark = batch.sparkSession
         with w.cond:
-            head = self._head() or self._adopt(spark)
+            head = self._head()
             if head is not None:
                 self._check(head)
             name = self._reserve("delta")
@@ -669,7 +629,7 @@ class SnapshotSink:
                 if head is None:
                     self._commit(schema, {}, [entry])
                 else:
-                    self._commit(schema, head["buckets"], [*head.get("deltas", ()), entry])
+                    self._commit(schema, head["buckets"], [*head["deltas"], entry])
         finally:
             with w.cond:
                 w.pending.discard(name)
@@ -716,7 +676,8 @@ class SnapshotSink:
         try:
             while True:
                 with w.cond:
-                    if not (self._head() or {}).get("deltas"):
+                    head = self._head()
+                    if head is None or not head["deltas"]:
                         w.compacting = False
                         w.cond.notify_all()
                         return
@@ -735,7 +696,7 @@ class SnapshotSink:
         w = self._w
         with w.cond:
             head = self._head()
-            if head is None or not head.get("deltas"):
+            if head is None or not head["deltas"]:
                 return
             self._check(head)
             name = self._reserve("compact")

@@ -1210,63 +1210,3 @@ def test_recommend_trigger_encodes_readme_rule():
         recommend_trigger(16, 32, max_idle_overhead=0.0)
     with pytest.raises(ValueError):
         recommend_trigger(16, 32, events_per_stream_per_s=-1.0)
-
-
-def test_plan_timing_hook_env_gated(tmp_path, monkeypatch) -> None:
-    """VERDICT r15 item 7: the planner-process timing hook writes one
-    parseable line per call when MAXSCALE_CDC_PLAN_TIMING is set and
-    nothing (no file touch) when unset."""
-    from maxscale_cdc_connector_spark.sources.cdc_partitioned import _plan_timing
-
-    log = tmp_path / "plan.log"
-    monkeypatch.delenv("MAXSCALE_CDC_PLAN_TIMING", raising=False)
-    _plan_timing("latestOffset", 64, time.perf_counter())
-    assert not log.exists()
-    monkeypatch.setenv("MAXSCALE_CDC_PLAN_TIMING", str(log))
-    t0 = time.perf_counter()
-    _plan_timing("latestOffset", 64, t0)
-    _plan_timing("partitions", 64, t0)
-    lines = log.read_text().splitlines()
-    assert len(lines) == 2
-    tag, n, dt = lines[0].split()
-    assert tag == "latestOffset" and n == "n=64" and dt.startswith("dt=")
-    assert float(dt[3:]) >= 0.0
-
-
-def test_probe_decompose_parses_timing_files(tmp_path) -> None:
-    """The probe's aggregation of the two timing files: planner means by
-    tag, read dt/handshake stats, malformed lines ignored."""
-    import importlib.util
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        "probe_idle_trigger.py",
-    )
-    spec = importlib.util.spec_from_file_location("probe_idle_trigger", path)
-    probe = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(probe)
-
-    plan = tmp_path / "plan.log"
-    plan.write_text(
-        "latestOffset n=64 dt=0.002000\n"
-        "latestOffset n=64 dt=0.004000\n"
-        "partitions n=64 dt=0.001000\n"
-        "garbage line\n"
-    )
-    read = tmp_path / "read.log"
-    read.write_text(
-        "bench.t0 rows=0 dt=0.110 hs=0.008\n"
-        "bench.t1 rows=0 dt=0.130 hs=0.012\n"
-    )
-    dec = probe._parse_timing(str(plan), str(read))
-    assert dec["plan_latest_offset_ms"] == 3.0
-    assert dec["plan_partitions_ms"] == 1.0
-    assert dec["n_plan_calls"] == 2
-    assert dec["read_dt_mean_ms"] == 120.0
-    assert dec["read_dt_max_ms"] == 130.0
-    assert dec["read_hs_mean_ms"] == 10.0
-    assert dec["n_reads"] == 2
-    # Absent files degrade to None/empty, not a crash.
-    empty = probe._parse_timing(str(tmp_path / "nope"), str(tmp_path / "nope2"))
-    assert empty["read_dt_mean_ms"] is None and empty["n_plan_calls"] == 0

@@ -479,122 +479,88 @@ def test_snapshot_sink_crash_after_publish_loses_nothing(
     restarted.compact(spark)
     head = restarted._head()
     assert restarted._versions() == [versions[-1] + 2] and head["deltas"] == []
-    # An entry's data dir is its first two path parts: `data/<name>`
-    # for a compaction dir and for the earlier layout's `_bucket=<b>` leaves.
-    mapped = {"/".join(d.split("/")[:2]) for d in head["buckets"].values()}
+    # Every base entry is a `data/<name>` dir; the first compaction's
+    # dir still maps some buckets and holds superseded rows of the rest.
+    mapped = set(head["buckets"].values())
+    assert len(mapped) > 1
     assert {f"data/{d}" for d in os.listdir(os.path.join(path, "data"))} == mapped
-    assert _snapshot_ids(restarted, spark) == list(range(1, 65)) + [100, 101, 102]
+    fresh = SnapshotSink(path, ["id"], n_buckets=4)
+    batch_columns = _sink_events(spark, [make_event(1, id_=1)]).columns
+    assert fresh.current(spark).columns == ["id"] + [c for c in batch_columns if c != "id"]
+    for reader in (restarted, fresh):
+        assert _snapshot_ids(reader, spark) == list(range(1, 65)) + [100, 101, 102]
 
 
-def test_snapshot_sink_adopts_legacy_layout_once(spark, tmp_path) -> None:
-    """A state dir of the earlier in-place layout — ``_bucket=<b>`` dirs
-    beside a ``.sink-meta.json`` marker, one bucket left parked as
-    ``.old-_bucket=<b>`` by a swap that crashed between its renames and
-    another with a stale parked copy beside it — is adopted once, as
-    version 0, by the first merge. An unreadable marker is refused: it
-    is never replaced by the constructing instance's parameters."""
-    import shutil
+def _tree(path: str) -> list[str]:
+    """Every dir and file under ``path``, relative to it."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, dirs, files in os.walk(path)
+        for n in dirs + files
+    )
 
+
+def _earlier_layout(spark, path: str, layout: str) -> None:
+    """Write a 64-key state dir of one of the earlier SnapshotSink
+    layouts: ``root`` is the in-place one (``_bucket=<b>`` dirs beside a
+    ``.sink-meta.json`` marker, one bucket parked as ``.old-_bucket=<b>``
+    by a swap that crashed between its renames); ``leaf`` is a manifest
+    mapping ``data/<v>-<id>/_bucket=<b>`` leaves; ``no-deltas`` is a
+    manifest of merge dirs without a delta list."""
+    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
+
+    sink = SnapshotSink(path, ["id"], n_buckets=4)
+    rows = _sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)])
+    rows = rows.withColumn("_bucket", sink._bucket())
+    if layout == "root":
+        rows.write.partitionBy("_bucket").parquet(path)
+        parts = sorted(d for d in os.listdir(path) if d.startswith("_bucket="))
+        os.rename(os.path.join(path, parts[0]), os.path.join(path, ".old-" + parts[0]))
+        with open(os.path.join(path, ".sink-meta.json"), "w") as fh:
+            json.dump({"n_buckets": 4, "key_cols": ["id"]}, fh)
+        return
+    if layout == "leaf":
+        rows.write.partitionBy("_bucket").parquet(os.path.join(path, "data", "0-leaf"))
+        entries = {"buckets": {str(b): f"data/0-leaf/_bucket={b}" for b in range(4)}, "deltas": []}
+    else:
+        rows.write.parquet(os.path.join(path, "data", "0-merge"))
+        entries = {"buckets": dict.fromkeys(map(str, range(4)), "data/0-merge")}
+    os.makedirs(sink._manifest())
+    with open(sink._manifest(0), "w") as fh:
+        json.dump({**sink._params(), "schema": rows.drop("_bucket").schema.jsonValue(), **entries}, fh)
+
+
+@pytest.mark.parametrize(
+    "layout, error",
+    [
+        ("root", "rebuild the state from the change log"),
+        ("leaf", "no readable manifest"),
+        ("no-deltas", "no readable manifest"),
+    ],
+    ids=["root", "leaf", "no-deltas"],
+)
+def test_snapshot_sink_refuses_earlier_layouts(spark, tmp_path, layout, error) -> None:
+    """A state dir of an earlier layout is refused, never read as
+    empty: a batch, current() and snapshot() raise, and nothing is
+    written under the path — a first batch publishing version 0 over
+    it would hide the old rows from every read."""
     from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
 
     path = str(tmp_path / "state")
-    legacy = SnapshotSink(path, ["id"], n_buckets=4)
-    rows = _sink_events(spark, [make_event(s, id_=s) for s in range(1, 65)])
-    rows.withColumn("_bucket", legacy._bucket()).write.partitionBy("_bucket").parquet(path)
-    parts = sorted(d for d in os.listdir(path) if d.startswith("_bucket="))
-    assert len(parts) == 4
-    os.rename(os.path.join(path, parts[0]), os.path.join(path, ".old-" + parts[0]))
-    shutil.copytree(os.path.join(path, parts[1]), os.path.join(path, ".old-" + parts[1]))
-    marker = os.path.join(path, ".sink-meta.json")
-
-    with open(marker, "w") as fh:
-        fh.write("{torn")
-    with pytest.raises(ValueError, match="sink-meta"):
-        SnapshotSink(path, ["id"], n_buckets=8)(_sink_events(spark, [make_event(99, id_=99)]), 0)
-
-    with open(marker, "w") as fh:
-        json.dump({"n_buckets": 4, "key_cols": ["id"]}, fh)  # pre-r10: no order_cols
+    _earlier_layout(spark, path, layout)
+    before = _tree(path)
     sink = SnapshotSink(path, ["id"], n_buckets=4)
-    assert sink.current(spark) is None  # readers wait for the writer's adoption
-    sink(_sink_events(spark, [make_event(100, id_=100)]), 0)
-    sink(_sink_events(spark, [make_event(101, id_=101)]), 1)
-    sink.compact(spark)
-    assert sink._versions()[0] == 0
-    assert sorted(sink._read(0)["buckets"].values()) == parts
-    assert sink._read(0).get("deltas", []) == [] and sink._read(1)["buckets"] == sink._read(0)["buckets"]
-    assert _snapshot_ids(sink, spark) == list(range(1, 65)) + [100, 101]
-    assert not [d for d in os.listdir(path) if d.startswith(".old-") or d == ".sink-meta.json"]
+    with pytest.raises(ValueError, match=error):
+        sink(_sink_events(spark, [make_event(100, id_=100)]), 0)
+    with pytest.raises(ValueError, match=error):
+        sink.current(spark)
+    with pytest.raises(ValueError, match=error):
+        sink.snapshot(spark)
+    assert _tree(path) == before
 
 
 def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.select("id", "sequence", "event_type", "name").collect())
-
-
-def test_snapshot_sink_reads_mixed_layouts(spark, tmp_path, monkeypatch) -> None:
-    """A manifest may map buckets to three kinds of dir: an adopted root
-    ``_bucket=<b>`` dir, a ``data/<v>-<id>/_bucket=<b>`` leaf of the
-    one-file-per-bucket layout, and a merge dir holding several buckets
-    — here also superseded rows of buckets it no longer serves. A read
-    on the same or a fresh instance is exactly the latest row per key.
-    A compaction touching one bucket leaves the others readable, and
-    garbage collection keeps every dir the newest manifest maps."""
-    from maxscale_cdc_connector_spark.streaming import ops
-    from maxscale_cdc_connector_spark.streaming.ops import SnapshotSink
-
-    path = str(tmp_path / "state")
-    data = os.path.join(path, "data")
-    sink = SnapshotSink(path, ["id"], n_buckets=4)
-    inserts = [make_event(s, id_=s, name=f"n{s}") for s in range(1, 65)]
-    updates = [make_event(100 + s, "update_after", 2, id_=s, name=f"u{s}") for s in range(1, 65)]
-    old = _sink_events(spark, inserts).withColumn("_bucket", sink._bucket())
-    new = _sink_events(spark, updates).withColumn("_bucket", sink._bucket())
-    staging = str(tmp_path / "staging")
-    new.filter("_bucket = 0").write.partitionBy("_bucket").parquet(staging)
-    os.makedirs(path)
-    os.rename(os.path.join(staging, "_bucket=0"), os.path.join(path, "_bucket=0"))
-    new.filter("_bucket = 1").write.partitionBy("_bucket").parquet(os.path.join(data, "0-leaf"))
-    new.filter("_bucket >= 2").unionByName(old.filter("_bucket < 2")).write.parquet(
-        os.path.join(data, "1-merge")
-    )
-    os.makedirs(sink._manifest())
-    with open(sink._manifest(1), "w") as fh:
-        json.dump(
-            {
-                "n_buckets": 4,
-                "key_cols": ["id"],
-                "order_cols": ["sequence", "event_number"],
-                "schema": new.drop("_bucket").schema.jsonValue(),
-                "buckets": {
-                    "0": "_bucket=0",
-                    "1": "data/0-leaf/_bucket=1",
-                    "2": "data/1-merge",
-                    "3": "data/1-merge",
-                },
-            },
-            fh,
-        )
-
-    want = _rows(latest_snapshot(_sink_events(spark, inserts + updates), ["id"]))
-    for reader in (sink, SnapshotSink(path, ["id"], n_buckets=4)):
-        assert reader.current(spark).columns == new.drop("_bucket").columns
-        assert _rows(reader.snapshot(spark)) == want
-
-    monkeypatch.setattr(ops, "RETENTION_S", 0.0)
-    key = new.filter("_bucket = 0").first()["id"]
-    for seq in (500, 501):
-        sink(_sink_events(spark, [make_event(seq, "update_after", 2, id_=key, name="again")]), seq)
-    sink.compact(spark)
-    want = sorted(r if r[0] != key else (key, 501, "update_after", "again") for r in want)
-    head = sink._head()
-    assert {b: d for b, d in head["buckets"].items() if b != "0"} == {
-        "1": "data/0-leaf/_bucket=1",
-        "2": "data/1-merge",
-        "3": "data/1-merge",
-    }
-    assert sorted(os.listdir(data)) == sorted(["0-leaf", "1-merge", head["buckets"]["0"][5:]])
-    assert not os.path.exists(os.path.join(path, "_bucket=0"))  # no manifest maps it now
-    for reader in (sink, SnapshotSink(path, ["id"], n_buckets=4)):
-        assert _rows(reader.snapshot(spark)) == want
 
 
 def test_snapshot_sink_sparse_merge_reads_only_mapped_buckets(spark, tmp_path) -> None:
